@@ -48,59 +48,20 @@ object BitmapAgg extends Aggregator[java.lang.Long, RoaringBitmap, Array[Byte]] 
     bm.serialize(buf)
     buf.array()
   }
-}
 
-/** OR-merge of pre-serialized 32-bit RoaringBitmap blobs — the `rbm32`
-  * field aggregator (reference: FieldRoaringBitmap32Agg.java): rows carry
-  * bitmap-typed metrics (e.g. visitor-id sets) as binary columns and the
-  * merge engine unions them per key. Null inputs are identity.
-  */
-object BitmapOrAgg extends Aggregator[Array[Byte], RoaringBitmap, Array[Byte]] {
-  override def zero: RoaringBitmap = new RoaringBitmap()
-  override def reduce(b: RoaringBitmap, bytes: Array[Byte]): RoaringBitmap = {
-    if (bytes != null) b.or(BitmapAgg.deserialize(bytes))
-    b
-  }
-  override def merge(a: RoaringBitmap, b: RoaringBitmap): RoaringBitmap = { a.or(b); a }
-  override def finish(b: RoaringBitmap): Array[Byte] = BitmapAgg.serialize(b)
-  override def bufferEncoder: Encoder[RoaringBitmap] = Encoders.kryo[RoaringBitmap]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-
-  def or(bitmaps: Column): Column = udaf(BitmapOrAgg, Encoders.BINARY).apply(bitmaps)
-}
-
-/** OR-merge of serialized 64-bit Roaring64NavigableMap blobs — the `rbm64`
-  * field aggregator (reference: FieldRoaringBitmap64Agg.java).
-  */
-object Bitmap64OrAgg extends Aggregator[Array[Byte],
-    org.roaringbitmap.longlong.Roaring64NavigableMap, Array[Byte]] {
-  import org.roaringbitmap.longlong.Roaring64NavigableMap
-
-  def deserialize64(bytes: Array[Byte]): Roaring64NavigableMap = {
-    val bm = new Roaring64NavigableMap()
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    bm.deserialize(in)
+  /** 64-bit (Roaring64NavigableMap) blob codec — the `rbm64` field
+    * aggregator's value format (reference: FieldRoaringBitmap64Agg.java).
+    */
+  def deserialize64(bytes: Array[Byte]): org.roaringbitmap.longlong.Roaring64NavigableMap = {
+    val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+    bm.deserialize(new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)))
     bm
   }
 
-  def serialize64(bm: Roaring64NavigableMap): Array[Byte] = {
+  def serialize64(bm: org.roaringbitmap.longlong.Roaring64NavigableMap): Array[Byte] = {
     bm.runOptimize()
     val bos = new java.io.ByteArrayOutputStream()
     bm.serialize(new java.io.DataOutputStream(bos))
     bos.toByteArray
   }
-
-  override def zero: Roaring64NavigableMap = new Roaring64NavigableMap()
-  override def reduce(b: Roaring64NavigableMap, bytes: Array[Byte]): Roaring64NavigableMap = {
-    if (bytes != null) b.or(deserialize64(bytes))
-    b
-  }
-  override def merge(a: Roaring64NavigableMap,
-      b: Roaring64NavigableMap): Roaring64NavigableMap = { a.or(b); a }
-  override def finish(b: Roaring64NavigableMap): Array[Byte] = serialize64(b)
-  override def bufferEncoder: Encoder[Roaring64NavigableMap] =
-    Encoders.kryo[Roaring64NavigableMap]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-
-  def or(bitmaps: Column): Column = udaf(Bitmap64OrAgg, Encoders.BINARY).apply(bitmaps)
 }

@@ -150,21 +150,6 @@ object HllFromLongsAgg extends Aggregator[java.lang.Long, Array[Byte], Array[Byt
   def fromLongs(c: Column): Column = udaf(HllFromLongsAgg, Encoders.LONG).apply(c)
 }
 
-/** Union serialized HLL sketches — the `hll_sketch` field aggregator's
-  * DataFrame path (row path: RowMergeEngines.foldField).
-  */
-object HllUnionAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-  override def zero: Array[Byte] = Sketches.hllEmpty()
-  override def reduce(b: Array[Byte], v: Array[Byte]): Array[Byte] =
-    if (v == null) b else Sketches.hllMerge(b, v)
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = Sketches.hllMerge(a, b)
-  override def finish(b: Array[Byte]): Array[Byte] = b
-  override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-
-  def union(c: Column): Column = udaf(HllUnionAgg, Encoders.BINARY).apply(c)
-}
-
 /** Build a theta (KMV) sketch from raw LONG values. */
 object ThetaFromLongsAgg extends Aggregator[java.lang.Long, Array[Long], Array[Byte]] {
   override def zero: Array[Long] = Array.emptyLongArray
@@ -180,23 +165,7 @@ object ThetaFromLongsAgg extends Aggregator[java.lang.Long, Array[Long], Array[B
   def fromLongs(c: Column): Column = udaf(ThetaFromLongsAgg, Encoders.LONG).apply(c)
 }
 
-/** Union serialized theta sketches — the `theta_sketch` field aggregator's
-  * DataFrame path.
-  */
-object ThetaUnionAgg extends Aggregator[Array[Byte], Array[Long], Array[Byte]] {
-  override def zero: Array[Long] = Array.emptyLongArray
-  override def reduce(b: Array[Long], v: Array[Byte]): Array[Long] =
-    if (v == null) b else Sketches.thetaMergeHashes(b, Sketches.thetaDeserialize(v))
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-    Sketches.thetaMergeHashes(a, b)
-  override def finish(b: Array[Long]): Array[Byte] = Sketches.thetaSerialize(b)
-  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoders.longArray
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-
-  def union(c: Column): Column = udaf(ThetaUnionAgg, Encoders.BINARY).apply(c)
-}
-
-private object ExpressionEncoders {
+private[graft] object ExpressionEncoders {
   val longArray: Encoder[Array[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
 }

@@ -9,18 +9,25 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
-/** Executor-side merge engines over `InternalRow`s — the bucket-local
-  * counterpart of the DataFrame-level [[MergeEngines]] with identical
-  * semantics (reference: MergeFunction.java:24-46 implementations). Used by
-  * the DSv2 scan: bucket files are pk-sorted, so a k-way merge + per-key
-  * fold replaces the table-wide shuffle of the DataFrame path.
+/** Executor-side merge engines over `InternalRow`s (reference:
+  * MergeFunction.java:24-46 implementations) — the one merge
+  * implementation behind both the DSv2 merge-on-read scan and every
+  * compaction rewrite. Bucket files are pk-sorted, so a k-way merge +
+  * per-key fold replaces any table-wide shuffle.
   *
   * @param schema      table schema (engine + per-field configuration)
   * @param rowSchema   layout of input rows (read columns ++ partition cols)
-  * @param output      names of columns the merged row must produce
+  * @param output      names of columns the merged row must produce; a
+  *                    compaction rewrite also asks for the merge machinery
+  *                    columns (seq, pos, kind, bucket)
+  * @param dropDeletes drop keys whose final state is a delete (reads and
+  *                    max-level rewrites); a rewrite below the max level
+  *                    keeps the -D/-U survivor so it still cancels older
+  *                    runs at read time (reference: MergeTreeCompactRewriter
+  *                    dropDelete)
   */
-class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
-    extends Serializable {
+class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String],
+    dropDeletes: Boolean = true) extends Serializable {
   import GraftMeta._
 
   private def idx(name: String): Int = rowSchema.fieldIndex(name)
@@ -38,8 +45,13 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
 
   private val outIdx: Array[Int] = output.map(idx).toArray
   private val outTypes: Array[DataType] = output.map(typ).toArray
+  // key, partition and machinery columns come from the latest version
+  // (seq/pos are then raised to the group maxima, see merge)
   private val isKeyOrPartition: Array[Boolean] = output.map(n =>
-    schema.primaryKeys.contains(n) || schema.partitionKeys.contains(n)).toArray
+    schema.primaryKeys.contains(n) || schema.partitionKeys.contains(n) ||
+      Seq(SeqCol, PosCol, KindCol, BucketCol).contains(n)).toArray
+  private val outSeq = output.indexOf(SeqCol)
+  private val outPos = output.indexOf(PosCol)
 
   /** Compare the merge key of two rows (ascending). */
   def compareKeys(a: InternalRow, b: InternalRow): Int = {
@@ -77,36 +89,45 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
     k == KindDelete || k == KindUpdateBefore
 
   /** Merge all versions of ONE key (any order) into the final row, or None
-    * if the key's final state is a delete. Mirrors [[MergeEngines.merge]].
+    * if the key's final state is a delete (and deletes are dropped). The
+    * row's kind is that of the version deciding the key (the first one for
+    * first-row, else the latest); its seq/pos are the group's maxima, so a
+    * rewritten row out-versions everything it replaced.
     */
   def merge(allRows: mutable.ArrayBuffer[InternalRow]): Option[InternalRow] = {
-    // ignore-delete: mirror of the DF path's retract pre-filter
+    // ignore-delete: retracts written before the option was set (or by
+    // older writers) still vanish at merge time (reference:
+    // DeduplicateMergeFunction.java:50 checks ignoreDelete in add())
     val rows =
       if (!schema.ignoreDelete) allRows
       else allRows.filterNot(r => isDeleteKind(r.getByte(kindI)))
     if (rows.isEmpty) return None
     val latest = rows.maxBy(identity)(ordOrdering)
-    schema.mergeEngine match {
-      case "deduplicate" => finishPicked(latest)
-      case "first-row" => finishPicked(rows.minBy(identity)(ordOrdering))
+    val decider =
+      if (schema.mergeEngine == "first-row") rows.minBy(identity)(ordOrdering) else latest
+    if (dropDeletes && isDeleteKind(decider.getByte(kindI))) return None
+    val out = schema.mergeEngine match {
+      case "deduplicate" | "first-row" => picked(decider)
       case "partial-update" => partialUpdate(rows, latest)
       case "aggregation" => aggregation(rows, latest)
       case e => throw new IllegalArgumentException(s"unknown merge-engine: $e")
     }
+    if (outSeq >= 0) out(outSeq) = rows.iterator.map(_.getLong(seqI)).max
+    if (outPos >= 0) out(outPos) = rows.iterator.map(_.getLong(posI)).max
+    Some(new GenericInternalRow(out))
   }
 
   private val ordOrdering: Ordering[InternalRow] =
     (a: InternalRow, b: InternalRow) => compareOrd(a, b)
 
-  private def finishPicked(row: InternalRow): Option[InternalRow] = {
-    if (isDeleteKind(row.getByte(kindI))) return None
+  private def picked(row: InternalRow): Array[Any] = {
     val out = new Array[Any](outIdx.length)
     var i = 0
     while (i < outIdx.length) {
       out(i) = if (row.isNullAt(outIdx(i))) null else row.get(outIdx(i), outTypes(i))
       i += 1
     }
-    Some(new GenericInternalRow(out))
+    out
   }
 
   // ---------------- partial-update ----------------
@@ -134,8 +155,7 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
   }
 
   private def partialUpdate(rows: mutable.ArrayBuffer[InternalRow],
-      latest: InternalRow): Option[InternalRow] = {
-    if (isDeleteKind(latest.getByte(kindI))) return None
+      latest: InternalRow): Array[Any] = {
     val out = new Array[Any](outIdx.length)
     var i = 0
     while (i < outIdx.length) {
@@ -159,14 +179,13 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
       }
       i += 1
     }
-    Some(new GenericInternalRow(out))
+    out
   }
 
   // ---------------- aggregation engine ----------------
 
   private def aggregation(rows: mutable.ArrayBuffer[InternalRow],
-      latest: InternalRow): Option[InternalRow] = {
-    if (isDeleteKind(latest.getByte(kindI))) return None
+      latest: InternalRow): Array[Any] = {
     val sorted = rows.sorted(ordOrdering)
     val out = new Array[Any](outIdx.length)
     var i = 0
@@ -181,14 +200,14 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
         }
       i += 1
     }
-    Some(new GenericInternalRow(out))
+    out
   }
 
-  /** Fold one field over the version-ordered rows — mirrors
-    * [[MergeEngines.fieldAggregate]] (reference: aggregate/Field*Agg).
-    * Retraction handling mirrors the DF path: sum/count subtract -U/-D
-    * rows; 'fields.<f>.ignore-retract' skips them (reference:
-    * FieldIgnoreRetractAgg.java:22).
+  /** Fold one field over the version-ordered rows (reference:
+    * aggregate/Field*Agg). Retractions: sum/count subtract -U/-D rows;
+    * 'fields.<f>.ignore-retract' skips them (reference:
+    * FieldIgnoreRetractAgg.java:22); other aggregators fold them as values
+    * (a lenient divergence from the reference's throw).
     */
   private def foldField(func: String, fieldName: String,
       allSorted: mutable.ArrayBuffer[InternalRow], ci: Int, dt: DataType): Any = {
@@ -234,10 +253,10 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
         val acc = mutable.LinkedHashMap.empty[Seq[Any], Any]
         nonNull.foreach { v =>
           val arr = v.asInstanceOf[ArrayData]
-          arr.foreach(st, (_, e) => if (e != null) { // skip null entries (DF path does too)
+          arr.foreach(st, (_, e) => if (e != null) { // skip null entries
             val row = e.asInstanceOf[InternalRow].copy()
             val key = keyIdxs.map(j => row.get(j, st(j).dataType)).toSeq
-            acc.remove(key) // re-append: an update moves to the end (DF-path order)
+            acc.remove(key) // re-append: an update moves to the end
             acc.put(key, row)
           })
         }
@@ -257,8 +276,8 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
           if (a == null) d else java.lang.Double.valueOf(a.asInstanceOf[Double] * d)
         }
       case "collect" =>
-        // mirror the DF path: concatenate arrays (dups kept unless the
-        // 'fields.<f>.distinct' option), sort with nulls first
+        // concatenate arrays (dups kept unless the 'fields.<f>.distinct'
+        // option), sort with nulls first for a deterministic result
         val elemType = dt.asInstanceOf[ArrayType].elementType
         val distinct = schema.options.get(s"fields.$fieldName.distinct").exists(_.toBoolean)
         val acc = mutable.ArrayBuffer.empty[Any]
@@ -291,10 +310,10 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
           .reduceOption { (a, b) => a.or(b); a }
         folded.map(graft.functions.BitmapAgg.serialize).orNull
       case "rbm64" =>
-        val folded = nonNull.map(v => graft.functions.Bitmap64OrAgg
+        val folded = nonNull.map(v => graft.functions.BitmapAgg
             .deserialize64(v.asInstanceOf[Array[Byte]]))
           .reduceOption { (a, b) => a.or(b); a }
-        folded.map(graft.functions.Bitmap64OrAgg.serialize64).orNull
+        folded.map(graft.functions.BitmapAgg.serialize64).orNull
       case "hll_sketch" =>
         nonNull.map(_.asInstanceOf[Array[Byte]])
           .reduceOption(graft.functions.Sketches.hllMerge).orNull
@@ -317,7 +336,7 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String])
         if (a == null) java.lang.Long.valueOf(l)
         else java.lang.Long.valueOf(a.asInstanceOf[Long] + l)
       }) match {
-        // keep the column's own type, like Spark's typed sum in the DF path
+        // keep the column's own declared type (Spark's typed sum would widen)
         case null => null
         case l: java.lang.Long => dt match {
           case LongType => l
@@ -388,9 +407,10 @@ class SortMergeRows(merger: RowMerger, inputs: Seq[Iterator[InternalRow]])
       require(merger.compareKeys(row, prev) >= 0,
         "merge input run is not key-sorted: a data file was written out of " +
           "key order (staging-write ordering regression?) — refusing to " +
-          "merge, stale row versions would silently survive. Repair: run " +
-          "full compaction (CALL sys.compact) — it merges through the " +
-          "order-insensitive DataFrame path and rewrites sorted files")
+          "merge, stale row versions would silently survive. Compaction " +
+          "merges through this same path and refuses too. Repair: roll the " +
+          "table back to a snapshot before the bad write (CALL sys.rollback) " +
+          "and re-write that data")
     }
   }
 

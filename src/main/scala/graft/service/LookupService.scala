@@ -264,13 +264,22 @@ object LookupClient {
     * batch's misses into its own Spark job and the scheduler overlaps
     * them, so wall time is max(batch) instead of sum(batch). Results are
     * returned per batch, in request order — element i is exactly what
-    * `lookupBatch(endpoint, batches(i))` returns.
+    * `lookupBatch(endpoint, batches(i))` returns, and a failure throws
+    * the same exception `lookupBatch` would.
     */
   def lookupBatches(endpoint: String,
       batches: Seq[Seq[Map[String, Any]]]): Seq[Seq[String]] = {
-    val inFlight = batches.map(b => http.sendAsync(requestFor(endpoint, b),
-      java.net.http.HttpResponse.BodyHandlers.ofString()))
-    inFlight.map(f => parseResponse(f.join()))
+    // strict fan-out: a lazy Seq would send each request only when the
+    // previous response is joined, serializing the batches
+    val inFlight = batches.iterator.map(b => http.sendAsync(requestFor(endpoint, b),
+      java.net.http.HttpResponse.BodyHandlers.ofString())).toVector
+    inFlight.map { f =>
+      val resp =
+        try f.join()
+        catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+          throw e.getCause }
+      parseResponse(resp)
+    }
   }
 
   def lookup(endpoint: String, key: Map[String, Any]): Option[String] =

@@ -27,8 +27,8 @@ import scala.collection.mutable
   * and fully-compacted buckets (vectorized parquet), MERGE splits per
   * (partition, bucket) otherwise — each merge split is read with a k-way
   * sorted merge + merge-engine fold ON THE EXECUTOR, so a merged read
-  * never shuffles the table (the DataFrame path's shuffle was the verdict's
-  * #1 scale-killer).
+  * never shuffles the table. Compaction reads its input through the same
+  * reader ([[GraftScan.compactionInput]]).
   */
 class GraftScanBuilder(spark: SparkSession, table: GraftTable, snapshot: Option[Snapshot],
     readOptions: Map[String, String] = Map.empty)
@@ -96,7 +96,12 @@ class GraftScan(
     filters: Seq[Filter],
     limit: Option[Int],
     filesOverride: Option[Seq[DataFileMeta]] = None,
-    readOptions: Map[String, String] = Map.empty)
+    readOptions: Map[String, String] = Map.empty,
+    /** Output level of a compaction rewrite reading through this scan: one
+      * merge task per (partition, bucket) group, merge machinery columns
+      * kept, deletes kept below the max level (see [[GraftScan.compactionInput]]).
+      */
+    compactTo: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
@@ -134,8 +139,9 @@ class GraftScan(
   // deletion-vector tables scan RAW (append-style): superseded rows are
   // masked by per-file bitmaps, so no k-way merge is needed and value
   // predicates may prune files (a mask, unlike a newer version in another
-  // file, cannot be lost by skipping that file)
-  private def mergeRead = isPk && !schema.deletionVectors
+  // file, cannot be lost by skipping that file). Compaction always merges:
+  // L0 -D tombstones must cancel their keys in the rewrite.
+  private def mergeRead = isPk && (!schema.deletionVectors || compactTo.isDefined)
 
   // ---------------- reported partitioning / ordering ----------------
   // Fixed-bucket unpartitioned PK tables are physically clustered by
@@ -518,6 +524,13 @@ class GraftScan(
           GraftInputPartition(p.toSeq, merge = false, keyRow)
         }
       }.toArray
+    } else if (compactTo.isDefined) {
+      // compaction: ONE task per (partition, bucket) group merges all of
+      // the group's files in key order (its key-disjoint sections drain
+      // through the same heap one after another), so the rewrite writes
+      // exactly one file per group and needs no exchange
+      bucketGroups(effectiveFiles).map(fs =>
+        GraftInputPartition(fs.map(info), merge = true)).toArray
     } else {
       // interval partitioning: key-disjoint file groups within the bucket
       // become INDEPENDENT merge splits, so a hot bucket with many
@@ -544,11 +557,17 @@ class GraftScan(
     * into post-DPP planning (shrinking the file set only drops or shrinks
     * sections, so the pre-DPP all-raw/estimate uses stay conservative).
     */
-  private def mergeSections(files: Seq[DataFileMeta]): Seq[Seq[DataFileMeta]] = {
+  private def mergeSections(files: Seq[DataFileMeta]): Seq[Seq[DataFileMeta]] =
+    bucketGroups(files).flatMap(fs => IntervalSections.of(schema, fs))
+
+  /** Files per (partition, bucket) group — per bucket on cross-partition
+    * tables, where a key may live in any partition of its bucket.
+    */
+  private def bucketGroups(files: Seq[DataFileMeta]): Seq[Seq[DataFileMeta]] = {
     val grouped =
       if (schema.crossPartition) files.groupBy(f => (Seq.empty[String], f.bucket))
       else files.groupBy(f => (f.partition, f.bucket))
-    grouped.values.toSeq.flatMap(fs => IntervalSections.of(schema, fs))
+    grouped.values.toSeq
   }
 
   /** READ-OPTIMIZED detection: a merge-read scan whose every bucket section
@@ -560,7 +579,7 @@ class GraftScan(
     * version — there is none), and qualifies for the columnar handoff:
     * the "read-optimized table" fast path of a compacted lakehouse.
     */
-  private lazy val allRawMergeScan: Boolean = mergeRead &&
+  private lazy val allRawMergeScan: Boolean = mergeRead && compactTo.isEmpty &&
     mergeSections(effectiveFiles).forall(sec =>
       sec.size == 1 && sec.head.level >= GraftTable.MaxLevel)
 
@@ -700,11 +719,6 @@ class GraftScan(
           }
         }
       }
-      if (sys.env.contains("GRAFT_DEBUG_SCAN")) {
-        println(s"[scan-debug] sid=$sid fileSchema=${fileSchema.fields.map(f => s"${f.id}:${f.name}")}" +
-          s" readSchemaForFile=${readSchemaForFile.fieldNames.mkString(",")}" +
-          s" align=${align.mkString(";")} rowSchema=${rowSchema.fieldNames.mkString(",")}")
-      }
       // identity align = the batch's columns (readSchemaForFile ++
       // partitionSchema) already ARE rowSchema, position for position —
       // the precondition for handing the ColumnarBatch through untouched
@@ -717,7 +731,8 @@ class GraftScan(
     }.toMap
 
     val merger =
-      if (effectiveMerge) Some(new RowMerger(schema, rowSchema, requested.fieldNames.toSeq))
+      if (effectiveMerge) Some(new RowMerger(schema, rowSchema, requested.fieldNames.toSeq,
+        dropDeletes = compactTo.forall(_ >= GraftTable.MaxLevel)))
       else None
     // dv-mode raw reads drop -D tombstones by the kind byte
     val dropKindIdx: Option[Int] =
@@ -725,9 +740,10 @@ class GraftScan(
     // raw output projection: rowSchema position of each requested column
     val outIdx = requested.fieldNames.map(n => rowSchema.fieldIndex(n))
     // read-time default values, applied post-merge (reference:
-    // DefaultValueAssigner.java:48)
+    // DefaultValueAssigner.java:48) — never baked into a compaction rewrite
     val defaultsExprs: Option[Seq[Expression]] =
-      if (!requested.fieldNames.exists(n => schema.defaultValueOf(n).isDefined)) None
+      if (compactTo.isDefined ||
+          !requested.fieldNames.exists(n => schema.defaultValueOf(n).isDefined)) None
       else Some(effective.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val ref = BoundReference(i, f.dataType, nullable = true)
         schema.defaultValueOf(f.name) match {
@@ -751,16 +767,36 @@ class GraftScan(
       !wantsFilePath && !wantsRowIndex &&
       plans.nonEmpty && plans.values.forall(p => p.batched && p.identityAlign) &&
       effectiveFiles.forall(_.dvPath.isEmpty)
+    // record-level TTL on compaction inputs (reference:
+    // io/RecordLevelExpire.java:79-91 wraps each compaction file reader):
+    // rows expire BEFORE the merge, so an expired newer version lets an
+    // older live version win; plain reads never expire rows
+    val expiry = compactTo.flatMap(_ => schema.recordLevelExpire).map { case (tf, sec) =>
+      val i = rowSchema.fieldIndex(tf)
+      RecordExpiry(i, rowSchema(i).dataType, tf, System.currentTimeMillis() / 1000 - sec)
+    }
     new GraftReaderFactory(table.location, partitionSchema, rowSchema,
       plans, merger, outIdx, defaultsExprs,
       new org.apache.spark.util.SerializableConfiguration(hadoopConf),
-      dropKindIdx, columnar)
+      dropKindIdx, columnar, expiry)
   }
 
   private def seqGroupCols: Seq[String] = schema.options.keys.collect {
     case k if k.startsWith("fields.") && k.endsWith(".sequence-group") =>
       k.stripPrefix("fields.").stripSuffix(".sequence-group")
   }.toSeq
+}
+
+/** Record-level expiry of compaction input rows: a row lives while its
+  * seconds-epoch time field is at or above `minSec`; a null time value is
+  * an error, as in the reference's checkArgument.
+  */
+case class RecordExpiry(field: Int, dataType: DataType, name: String, minSec: Long) {
+  def keep(r: InternalRow): Boolean = {
+    if (r.isNullAt(field)) throw new IllegalArgumentException(
+      s"Time field '$name' for record-level expire should not be null.")
+    r.get(field, dataType).asInstanceOf[Number].longValue >= minSec
+  }
 }
 
 /** Serializable per-schema-version read plan. */
@@ -794,7 +830,8 @@ class GraftReaderFactory(
     defaultsExprs: Option[Seq[Expression]],
     conf: org.apache.spark.util.SerializableConfiguration,
     dropKindIdx: Option[Int] = None,
-    columnar: Boolean = false)
+    columnar: Boolean = false,
+    expiry: Option[RecordExpiry] = None)
     extends PartitionReaderFactory {
 
   // scan-level, not per-partition: Spark requires every partition of a
@@ -859,7 +896,8 @@ class GraftReaderFactory(
             raw.zipWithIndex.collect { case (r, i) if !bm.contains(i) => r }
           case None => raw
         }
-        val aligned = undeleted.map(proj)
+        val projected = undeleted.map(proj)
+        val aligned = expiry.fold(projected)(e => projected.filter(e.keep))
         if (!hasPath) aligned
         else {
           val pathRow = new GenericInternalRow(Array[Any](
@@ -942,6 +980,43 @@ class GraftReaderFactory(
 }
 
 object GraftScan {
+  /** Merged rows of `files` for a compaction rewrite into `outputLevel`
+    * (reference: MergeTreeCompactRewriter over SortMergeReader — compaction
+    * reuses the read path's merge). Each (partition, bucket) group is one
+    * task reading through the scan's reader: DV bitmaps and record-level
+    * expiry apply per file, then the k-way merge folds each key. Rows carry
+    * the table fields plus seq/pos/kind/bucket, in key order within each
+    * group (reported to Catalyst, so a local sort by the directory columns
+    * and key is elided where it already holds). Deletes survive below the
+    * max level and drop at it. No exchange, no aggregate.
+    */
+  def compactionInput(table: GraftTable, files: Seq[DataFileMeta],
+      outputLevel: Int): org.apache.spark.sql.DataFrame = {
+    val schema = table.schema
+    val out = StructType(schema.structType.fields ++ Seq(GraftMeta.seqField,
+      GraftMeta.posField, GraftMeta.kindField, GraftMeta.bucketField))
+    val scan = new GraftScan(table.spark, table, None, out, Nil, None,
+      filesOverride = Some(files), compactTo = Some(outputLevel))
+    val parts = scan.planInputPartitions()
+    val factory = scan.createReaderFactory()
+    val rdd = table.spark.sparkContext
+      .parallelize(parts.toSeq, math.max(parts.length, 1))
+      .mapPartitions(_.flatMap { p =>
+        val reader = factory.createReader(p)
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit](_ => reader.close())
+        Iterator.continually(reader).takeWhile(_.next()).map(_.get())
+      })
+    // within one group the directory columns are constant; on
+    // cross-partition tables a group spans partitions, so only the key
+    // order holds
+    val ordering =
+      if (schema.crossPartition) schema.primaryKeys
+      else (table.partitionSchema(schema).fieldNames.toSeq ++ schema.primaryKeys).distinct
+    org.apache.spark.sql.graft.SparkShims.rowsFrame(table.spark, rdd, out, ordering,
+      sizeInBytes = files.map(_.size).sum)
+  }
+
   /** Restrict a table field to a nested-pruned requested type: children
     * are intersected BY NAME with the requested struct (recursively),
     * keeping their ids — the alignment target when Spark's SchemaPruning

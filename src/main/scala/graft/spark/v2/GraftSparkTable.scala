@@ -245,8 +245,6 @@ class GraftSparkTable(
               spark.sparkContext.hadoopConfiguration))
         }
         override def toInsertableRelation: InsertableRelation = (data, _) => {
-          if (sys.env.contains("GRAFT_DEBUG_SCAN"))
-            println(s"[write-debug] mode=$mode filters=${overwriteFilters.mkString(";")}")
           // whole-table INSERT OVERWRITE arrives as truncate() (Spark turns
           // an AlwaysTrue delete filter into SupportsTruncate); the
           // dynamic-partition-overwrite table option applies there

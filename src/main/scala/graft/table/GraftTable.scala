@@ -2,7 +2,6 @@ package graft.table
 
 import graft.GraftMeta._
 import graft.core._
-import graft.merge.MergeEngines
 import graft.spark.GraftFileIndex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -180,11 +179,8 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       // as the scan's executor-side k-way fold per bucket section — ZERO
       // table shuffle — with bucket/stats pruning via filter pushdown,
       // the read-optimized columnar handoff for fully-compacted state,
-      // DV bitmaps applied executor-side, and CBO statistics. The
-      // DataFrame group-merge this replaced shuffled the WHOLE table on
-      // every Scala-API read; it remains the compaction rewrite engine
-      // (MergeEngines.mergeRaw), and MergePathEquivalenceSpec keeps the
-      // two folds bit-identical through toDFDataFrameMerge.
+      // DV bitmaps applied executor-side, and CBO statistics. Compaction
+      // merges through the same reader (GraftScan.compactionInput).
       dsv2DF(s)
     case Some(s) =>
       // append tables keep the v1 lazy FileSourceScan relation — already
@@ -206,29 +202,10 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         .create(tbl, None, None))
   }
 
-  /** The legacy DataFrame-fold read of a PK/DV snapshot (group-merge /
-    * tombstone filter over [[rawSnapshot]]) — kept as the equivalence
-    * baseline for the compaction rewrite engine, which still folds with
-    * [[MergeEngines]]: MergePathEquivalenceSpec asserts this path and the
-    * DSv2 row-merge read stay bit-identical.
-    */
-  private[graft] def toDFDataFrameMerge(s: Snapshot): DataFrame = {
-    val sch = schema
-    val raw = rawSnapshot(s, sch)
-    applyDefaults(
-      // deletion-vector tables read RAW: DVs already masked superseded
-      // rows in rawSnapshot; only L0 delete tombstones remain to filter
-      if (sch.deletionVectors)
-        raw.filter(col(KindCol) =!= lit(KindDelete))
-          .select(sch.fields.map(f => col(f.name)): _*)
-      else if (sch.isPrimaryKeyed) MergeEngines.merge(sch, raw, BucketCol)
-      else raw.select(sch.fields.map(f => col(f.name)): _*))
-  }
-
   /** Fill configured per-field default values for NULLs at read (reference:
     * DefaultValueAssigner.java:48 — read-time, post-merge).
     */
-  private def applyDefaults(df: DataFrame): DataFrame = {
+  private[graft] def applyDefaults(df: DataFrame): DataFrame = {
     val withDefaults = schema.fields.filter(f => schema.defaultValueOf(f.name).isDefined)
     if (withDefaults.isEmpty) df
     else df.select(schema.fields.map { f =>
@@ -260,9 +237,6 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     }
   }
 
-  /** Field-id projection of a raw frame from one schema version to another,
-    * preserving metadata columns.
-    */
   /** hash(bucket-key) % n routing column for bucketed append tables
     * (reference: append-table HASH_FIXED RowKeyExtractor). Same Murmur3
     * hash as the PK path, so read-side bucket pruning can mirror it.
@@ -293,6 +267,9 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       .otherwise(struct(children: _*))
   }
 
+  /** Field-id projection of a raw frame from one schema version to another,
+    * preserving metadata columns.
+    */
   private def alignRaw(df: DataFrame, from: TableSchema, to: TableSchema): DataFrame = {
     if (from.id == to.id) return df
     val byId = from.fields.map(f => f.id -> f).toMap
@@ -878,9 +855,10 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         val groups = newFiles.map(f => (f.partition, f.bucket)).toSet
         live.filter(f => groups.contains((f.partition, f.bucket)))
       }
+    // the state a terminal compaction of the files would write: the read
+    // path's bucket-local merge, deletes dropped
     def mergedState(fs: Seq[DataFileMeta]) =
-      MergeEngines.mergeRaw(schema, rawUnion(fs, schema), BucketCol)
-        .filter(col(KindCol) =!= lit(KindDelete) && col(KindCol) =!= lit(KindUpdateBefore))
+      graft.spark.v2.GraftScan.compactionInput(this, fs, GraftTable.MaxLevel)
     // the commit's own keys scope row-deduplicate: a touched-but-unchanged
     // key emits its -U/+U pair unless the option suppresses it
     val touchedKeys = rawUnion(newFiles, schema)

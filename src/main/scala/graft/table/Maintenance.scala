@@ -3,7 +3,6 @@ package graft.table
 import graft.GraftMeta._
 import graft.core._
 import graft.functions.ZOrder
-import graft.merge.MergeEngines
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -132,11 +131,6 @@ trait MaintenanceOps { self: GraftTable =>
           upperMins.flatten.forall(u => baseMaxs.flatten.forall(b => u.compareTo(b) > 0))
     }
 
-  /** Compact triggered buckets only (reference: UniversalCompaction.pick:42).
-    * Buckets with a dominant max-level base rewrite just their upper runs
-    * into one intermediate run (O(picked bytes) write amplification); the
-    * size-amplification trigger still forces the terminal full rewrite.
-    */
   /** Consolidate the dynamic-bucket hash index when its delta-dir list
     * grows past `dynamic-bucket.index-compact.threshold` (default 16):
     * read every delta, write ONE folded dir, and commit a COMPACT snapshot
@@ -220,6 +214,11 @@ trait MaintenanceOps { self: GraftTable =>
       indexFiles = Seq(rel), consumedIndexFiles = snap.indexFiles)
   }
 
+  /** Compact triggered buckets only (reference: UniversalCompaction.pick:42).
+    * Buckets with a dominant max-level base rewrite just their upper runs
+    * into one intermediate run (O(picked bytes) write amplification); the
+    * size-amplification trigger still forces the terminal full rewrite.
+    */
   def maybeCompact(): Option[Snapshot] = {
     if (isPrimaryKeyed) {
       val groups = pickCompaction()
@@ -243,7 +242,7 @@ trait MaintenanceOps { self: GraftTable =>
           else (Nil, groups)
         var snap: Option[Snapshot] = None
         if (full.nonEmpty) snap = Some(compactBuckets(full.toSet))
-        if (partial.nonEmpty) snap = Some(compactBucketsPartial(partial.toSet))
+        if (partial.nonEmpty) snap = Some(rewriteBuckets(partial.toSet, level = 1))
         snap
       }
     } else {
@@ -264,77 +263,54 @@ trait MaintenanceOps { self: GraftTable =>
     }
   }
 
-  /** NON-terminal compaction of the given buckets: merge only the runs
-    * ABOVE the max-level base into one intermediate (level-1) run, leaving
-    * the base untouched. Deletes are retained and merged sequence/kind
-    * survive, so the rewritten run re-folds correctly against the base at
-    * read time. Write amplification is O(upper-run bytes), not O(bucket)
-    * (reference: UniversalCompaction.pick run subsets :70-114).
+  /** Merge + rewrite ONLY the given (partition, bucket) groups as max-level
+    * files; all other buckets are untouched (their manifest entries
+    * survive). Each group is one merge task → one file, so N triggered
+    * buckets parallelize across N tasks and the commit is O(touched files)
+    * metadata (reference: MergeTreeCompactTask — per-bucket rewrite).
     */
-  def compactBucketsPartial(groups: Set[(Seq[String], Int)]): Snapshot = {
+  def compactBuckets(groups: Set[(Seq[String], Int)]): Snapshot =
+    rewriteBuckets(groups, GraftTable.MaxLevel)
+
+  /** Rewrite the given groups' runs into ONE run per group at `level`,
+    * merging through the read path's bucket-local k-way merge
+    * ([[graft.spark.v2.GraftScan.compactionInput]]; reference:
+    * MergeTreeCompactRewriter over SortMergeReader) — no exchange, no
+    * aggregate. Below the max level this is the run-subset rewrite: only
+    * the runs ABOVE the max-level base merge, into one intermediate run
+    * that keeps deletes, kinds and sequences so it re-folds against the
+    * untouched base at read time (write amplification O(upper-run bytes);
+    * reference: UniversalCompaction.pick run subsets :70-114). At the max
+    * level every run merges, deletes drop out and kinds become +I.
+    */
+  private def rewriteBuckets(groups: Set[(Seq[String], Int)], level: Int): Snapshot = {
     require(isPrimaryKeyed, "use compactSmallFiles() for append tables")
-    require(subsetEligible, s"run-subset compaction unsupported for ${schema.mergeEngine}")
+    val terminal = level >= GraftTable.MaxLevel
+    require(terminal || subsetEligible,
+      s"run-subset compaction unsupported for ${schema.mergeEngine}")
     val live = store.latestSnapshot.map(store.liveFiles).getOrElse(Nil)
+    // cross-partition keys live anywhere in their bucket → compact the
+    // whole bucket across partitions
     val inGroups =
       if (schema.crossPartition) {
         val buckets = groups.map(_._2)
         live.filter(f => buckets.contains(f.bucket))
       } else live.filter(f => groups.contains((f.partition, f.bucket)))
-    val touched = inGroups.filter(_.level < GraftTable.MaxLevel)
+    val touched = if (terminal) inGroups else inGroups.filter(_.level < GraftTable.MaxLevel)
     if (touched.isEmpty) return commitFiles(Nil, CommitKind.COMPACT)
     val seq = store.latestSnapshotId.getOrElse(0L)
-    // mergeRaw keeps KindCol/SeqCol/PosCol and does NOT drop deletes — a
-    // -D survivor must still cancel base rows at read time
-    val merged = MergeEngines.mergeRaw(schema,
-      applyRecordExpire(rawUnion(touched, schema)), BucketCol)
-    val sortCols = (dirColsPublic ++ schema.primaryKeys).map(col)
-    val prepared = merged
-      .repartition((schema.partitionKeys :+ BucketCol).map(col): _*)
-      .sortWithinPartitions(sortCols: _*)
-    val files = stageWrite(prepared, level = 1, seq = seq)
-    // merged rows can land in a (partition, bucket) combo no prior commit
-    // recorded for their key (partial-update can mix partition-column
-    // sources) — index the rewrite output so the global index keeps
-    // covering every live row
-    commitFiles(
-      touched.map(ManifestEntry(ManifestEntry.DELETE, _)) ++
-        files.map(ManifestEntry(ManifestEntry.ADD, _)),
-      CommitKind.COMPACT, indexFiles = globalIndexDelta(files))
-  }
-
-  /** Merge + rewrite ONLY the given (partition, bucket) groups as max-level
-    * files; all other buckets are untouched (their manifest entries
-    * survive). Each group is one shuffle group → one write task, so N
-    * triggered buckets parallelize across N tasks and the commit is
-    * O(touched files) metadata (reference: MergeTreeCompactTask — per-bucket
-    * rewrite; the verdict's scale requirement).
-    */
-  def compactBuckets(groups: Set[(Seq[String], Int)]): Snapshot = {
-    require(isPrimaryKeyed, "use compactSmallFiles() for append tables")
-    val live = store.latestSnapshot.map(store.liveFiles).getOrElse(Nil)
-    // cross-partition keys live anywhere in their bucket → compact the
-    // whole bucket across partitions
-    val touched =
-      if (schema.crossPartition) {
-        val buckets = groups.map(_._2)
-        live.filter(f => buckets.contains(f.bucket))
-      } else live.filter(f => groups.contains((f.partition, f.bucket)))
-    if (touched.isEmpty) return commitFiles(Nil, CommitKind.COMPACT)
-    val seq = store.latestSnapshotId.getOrElse(0L)
-    val raw = applyRecordExpire(rawUnion(touched, schema))
-    val merged = MergeEngines.mergeRaw(schema, raw, BucketCol)
-      .filter(col(KindCol) =!= lit(KindDelete) && col(KindCol) =!= lit(KindUpdateBefore))
-      .withColumn(KindCol, lit(KindInsert))
-    val sortCols = (dirColsPublic ++ schema.primaryKeys).map(col)
-    val prepared = merged
-      .repartition((schema.partitionKeys :+ BucketCol).map(col): _*)
-      .sortWithinPartitions(sortCols: _*)
-    val files = stageWrite(prepared, level = GraftTable.MaxLevel, seq = seq)
+    val merged = graft.spark.v2.GraftScan.compactionInput(this, touched, level)
+    // a no-op sort on fixed-partition tables (the merge already emits this
+    // order); cross-partition groups span partition directories
+    val prepared = (if (terminal) merged.withColumn(KindCol, lit(KindInsert)) else merged)
+      .sortWithinPartitions((dirColsPublic ++ schema.primaryKeys).map(col): _*)
+    val files = stageWrite(prepared, level = level, seq = seq)
     // full-compaction changelog: exact -U/+U/-D diff between the previous
     // compacted state and the new one (reference:
     // FullChangelogMergeTreeCompactRewriter.java:43)
     val changelog =
-      if (schema.option(TableSchema.ChangelogProducerOpt, "none") != "full-compaction") Nil
+      if (!terminal ||
+          schema.option(TableSchema.ChangelogProducerOpt, "none") != "full-compaction") Nil
       else {
         val oldTop = rawUnion(touched.filter(_.level >= GraftTable.MaxLevel), schema)
         // keys with records BELOW the top level are the input since the
@@ -344,37 +320,16 @@ trait MaintenanceOps { self: GraftTable =>
           .select(schema.primaryKeys.map(col): _*)
         changelogDiff(oldTop, rawUnion(files, schema), seq, Some(touchedKeys))
       }
+    // merged rows can land in a (partition, bucket) combo no prior commit
+    // recorded for their key (partial-update can mix partition-column
+    // sources) — index the rewrite output so the global index keeps
+    // covering every live row
     commitFiles(
       touched.map(ManifestEntry(ManifestEntry.DELETE, _)) ++
         files.map(ManifestEntry(ManifestEntry.ADD, _)),
       CommitKind.COMPACT,
       changelog = changelog, indexFiles = globalIndexDelta(files))
   }
-
-  /** Record-level TTL filter on COMPACTION inputs (reference:
-    * io/RecordLevelExpire.java:79-91 wraps each compaction file reader):
-    * a row expires when `timeField + expire-time < now` with the time
-    * field holding seconds-since-epoch as INT. Filtering happens BEFORE
-    * the merge, as in the reference — an expired newer version lets an
-    * older live version win. Null time values are an error (reference
-    * checkArgument); plain reads never filter, so expiry is best-effort
-    * until a compaction touches the bucket.
-    */
-  private def applyRecordExpire(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    schema.recordLevelExpire match {
-      case None => df
-      case Some((tf, expireSec)) =>
-        val now = System.currentTimeMillis() / 1000
-        // one conditional expression, not a conjunction — the optimizer
-        // would split `assert && cond` and null rows could be filtered
-        // before the assert ever evaluates
-        df.filter(
-          when(col(tf).isNull, raise_error(lit(
-            s"Time field '$tf' for record-level expire should not be null."))
-            .cast("boolean"))
-          .otherwise(col(tf).cast("long") + lit(expireSec) >= lit(now)))
-    }
 
   /** Compute the per-key diff of two merged states and stage it as
     * changelog files: +I for new keys, -U/+U pairs for updated values, -D
@@ -435,10 +390,10 @@ trait MaintenanceOps { self: GraftTable =>
   }
 
   /** Full compaction of a primary-key table: merge every (partition, bucket)
-    * section and rewrite it as max-level pk-sorted files; deletes drop out
-    * (terminal merge). One distributed job — each (partition, bucket) group
-    * is a shuffle group, so 1000 buckets parallelize across 1000 tasks
-    * (reference: MergeTreeCompactManager / MergeTreeCompactTask).
+    * group and rewrite it as one max-level pk-sorted file; deletes drop out
+    * (terminal merge). One distributed job — each group is one merge task,
+    * so 1000 buckets parallelize across 1000 tasks (reference:
+    * MergeTreeCompactManager / MergeTreeCompactTask).
     */
   def compact(): Snapshot = {
     require(isPrimaryKeyed, "use compactSmallFiles() for append tables")

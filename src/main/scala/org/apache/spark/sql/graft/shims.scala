@@ -50,6 +50,25 @@ object SparkShims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over an RDD of internal rows whose partitions are each
+    * sorted ascending by `orderedBy` (column names of `schema`). The
+    * ordering and the size estimate are reported to Catalyst, so a local
+    * sort it already satisfies is removed and joins plan from the size.
+    */
+  def rowsFrame(spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType, orderedBy: Seq[String],
+      sizeInBytes: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val ordering = orderedBy.map(n => SortOrder(output.find(_.name == n).get, Ascending))
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = org.apache.spark.sql.execution.LogicalRDD(output, rdd,
+      outputOrdering = ordering)(session,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(BigInt(sizeInBytes))))
+    ofRows(spark, plan)
+  }
+
   /** Analyzed logical plan of a (classic) DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -434,12 +434,12 @@ class FeatureSpec extends SparkSpec {
 
   test("rbm32/rbm64 aggregators union bitmap metrics in both merge paths") {
     import spark.implicits._
-    import graft.functions.{BitmapAgg, Bitmap64OrAgg}
+    import graft.functions.BitmapAgg
     import org.roaringbitmap.RoaringBitmap
     import org.roaringbitmap.longlong.Roaring64NavigableMap
     def bm32(xs: Int*): Array[Byte] = BitmapAgg.serialize(RoaringBitmap.bitmapOf(xs: _*))
     def bm64(xs: Long*): Array[Byte] = {
-      val m = new Roaring64NavigableMap(); xs.foreach(m.addLong); Bitmap64OrAgg.serialize64(m)
+      val m = new Roaring64NavigableMap(); xs.foreach(m.addLong); BitmapAgg.serialize64(m)
     }
     val df1 = Seq((1L, bm32(1, 2), bm64(10L)), (2L, bm32(5), bm64(50L)))
       .toDF("k", "visitors", "events")
@@ -458,12 +458,13 @@ class FeatureSpec extends SparkSpec {
     def check(rows: Array[org.apache.spark.sql.Row]): Unit = {
       val byK = rows.map(r => r.getLong(0) ->
         (BitmapAgg.deserialize(r.getAs[Array[Byte]](1)),
-          Bitmap64OrAgg.deserialize64(r.getAs[Array[Byte]](2)))).toMap
+          BitmapAgg.deserialize64(r.getAs[Array[Byte]](2)))).toMap
       assert(byK(1L)._1.toArray.toSeq == Seq(1, 2, 3))
       assert(byK(1L)._2.toArray.toSeq == Seq(10L, 11L))
       assert(byK(2L)._1.toArray.toSeq == Seq(5))
     }
-    // DataFrame merge path
+    // DataFrame fold (the test oracle's rbm aggregators)
+    check(ReferenceMerge.read(t, t.store.latestSnapshot.get).orderBy("k").collect())
     check(t.toDF.orderBy("k").collect())
     // executor row-merge path (DSv2 catalog scan)
     check(spark.sql("SELECT k, visitors, events FROM grbm.db.rbm_t ORDER BY k").collect())

@@ -197,4 +197,18 @@ class LookupServiceSpec extends SparkSpec {
         Map("region" -> "eu", "id" -> 2L)).isEmpty)
     } finally srv.stop()
   }
+
+  test("lookupBatches fails like lookupBatch against a closed port") {
+    // a port nothing listens on: bind an ephemeral one, then release it
+    val port = {
+      val sock = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+      try sock.getLocalPort finally sock.close()
+    }
+    val endpoint = s"http://127.0.0.1:$port"
+    val keys = Seq(Map[String, Any]("k" -> 1L))
+    val single = intercept[Exception](LookupClient.lookupBatch(endpoint, keys))
+    val fanned = intercept[Exception](LookupClient.lookupBatches(endpoint, Seq(keys, keys)))
+    assert(!fanned.isInstanceOf[java.util.concurrent.CompletionException], fanned.toString)
+    assert(fanned.getClass == single.getClass, s"$fanned vs $single")
+  }
 }

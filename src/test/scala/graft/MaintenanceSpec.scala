@@ -1,9 +1,14 @@
 package graft
 
 import graft.table.GraftTable
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-class MaintenanceSpec extends SparkSpec {
+class MaintenanceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("pk full compaction: result unchanged, files collapse to max level") {
     val orders = sf("orders")
@@ -760,5 +765,123 @@ class MaintenanceSpec extends SparkSpec {
     val nManifests = t.store.latestSnapshot.get.manifests.size
     assert(localRows.forall(n => n >= 0 && n <= nManifests),
       s"driver-side leaf bigger than the manifest list: $localRows vs $nManifests manifests")
+  }
+
+  /** Executed plans of every query `f` runs (final adaptive plans). */
+  private def plansOf(f: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val done = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe.executedPlan); done.incrementAndGet()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        done.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    // listener events arrive asynchronously: a marker query after `f`
+    // is the last event this listener waits for
+    try {
+      f
+      val before = done.get()
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (done.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  /** Plans that read merged rows through the compaction reader. */
+  private def mergePlans(plans: Seq[SparkPlan]): Seq[SparkPlan] =
+    plans.filter(p => collect(p) { case s: RDDScanExec => s }.nonEmpty)
+
+  test("compaction rewrites merge bucket-locally: no exchange, no aggregate") {
+    val orders = sf("orders")
+    val t = GraftTable.create(spark, tmpTable(), orders.schema,
+      primaryKeys = Seq("o_orderkey"), options = Map("bucket" -> "2",
+        "write-only" -> "true", "num-sorted-run.compaction-trigger" -> "2",
+        "compaction.max-size-amplification-percent" -> "1000000"))
+    t.upsert(orders)
+    t.upsert(orders.filter(col("o_orderkey") % 5 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 1))
+    def assertBucketLocal(what: String, plans: Seq[SparkPlan]): Unit = {
+      val rewrites = mergePlans(plans)
+      assert(rewrites.nonEmpty, s"$what ran no compaction rewrite")
+      rewrites.foreach { p =>
+        assert(collect(p) { case e: Exchange => e }.isEmpty, s"$what shuffles:\n$p")
+        assert(collect(p) { case a: BaseAggregateExec => a }.isEmpty,
+          s"$what aggregates:\n$p")
+        // the merge already emits the writer's (bucket, key) order
+        assert(collect(p) { case s: SortExec => s }.isEmpty, s"$what sorts:\n$p")
+      }
+    }
+    val expected = t.toDF.orderBy("o_orderkey").collect()
+    assertBucketLocal("compact()", plansOf(t.compact()))
+    // one file per bucket
+    val compacted = t.store.liveFiles(t.store.latestSnapshot.get)
+    assert(compacted.groupBy(_.bucket).values.forall(_.size == 1))
+    t.upsert(orders.filter(col("o_orderkey") % 3 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 2))
+    t.upsert(orders.filter(col("o_orderkey") % 7 === 0), kinds = Some(lit(GraftMeta.KindDelete)))
+    val expected2 = t.toDF.orderBy("o_orderkey").collect()
+    assertBucketLocal("maybeCompact() run-subset", plansOf(t.maybeCompact()))
+    val live = t.store.liveFiles(t.store.latestSnapshot.get)
+    // the run-subset path ran: the base stayed, each bucket gained ONE
+    // level-1 run holding the merged upper runs (deletes kept)
+    assert(live.filter(_.level == GraftTable.MaxLevel).map(_.path).toSet ==
+      compacted.map(_.path).toSet)
+    assert(live.filter(_.level < GraftTable.MaxLevel).groupBy(_.bucket).values
+      .forall(fs => fs.size == 1 && fs.head.level == 1))
+    assert(t.toDF.orderBy("o_orderkey").collect().sameElements(expected2))
+    assert(expected.length > expected2.length)
+  }
+
+  test("lookup changelog: merged states carry no aggregate") {
+    val orders = sf("orders")
+    val t = GraftTable.create(spark, tmpTable(), orders.schema,
+      primaryKeys = Seq("o_orderkey"), options = Map("bucket" -> "2",
+        "changelog-producer" -> "lookup", "write-only" -> "true"))
+    t.upsert(orders)
+    val plans = plansOf(t.upsert(orders.filter(col("o_orderkey") % 5 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 1)))
+    val diffs = mergePlans(plans)
+    assert(diffs.nonEmpty, "the lookup changelog read no merged state")
+    // only changelogDiff's join may shuffle or aggregate (the touched-key
+    // distinct): no aggregate sits above a merged-state scan
+    diffs.foreach { p =>
+      collect(p) { case a: BaseAggregateExec => a }.foreach { a =>
+        assert(collect(a) { case s: RDDScanExec => s }.isEmpty,
+          s"a merged state is aggregated:\n$p")
+      }
+    }
+    val cl = t.incremental(1, 2).filter(col("o_orderkey") % 5 === 0)
+    assert(cl.count() == 2 * orders.filter(col("o_orderkey") % 5 === 0).count())
+  }
+
+  test("an out-of-key-order run fails the merged read and compaction loudly") {
+    import GraftMeta._
+    val t = GraftTable.create(spark, tmpTable(),
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING"),
+      primaryKeys = Seq("k"), options = Map("bucket" -> "1", "write-only" -> "true"))
+    t.upsert(spark.range(100).select(col("id").as("k"), lit("a").as("v")))
+    // a staged run whose keys DESCEND — what a staging-write ordering
+    // regression would leave behind
+    val unsorted = spark.range(50).select(col("id").as("k"), lit("b").as("v"),
+        lit(2L).as(SeqCol), col("id").as(PosCol), lit(KindInsert).as(KindCol),
+        lit(0).as(BucketCol))
+      .coalesce(1).sortWithinPartitions(col(BucketCol), col("k").desc)
+    val files = t.stageWrite(unsorted, level = 0, seq = 2)
+    t.commitFiles(files.map(graft.core.ManifestEntry(graft.core.ManifestEntry.ADD, _)),
+      graft.core.CommitKind.APPEND)
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val read = intercept[Exception](t.toDF.collect())
+    assert(messages(read).contains("not key-sorted"), messages(read))
+    val snapshots = t.store.snapshotIds
+    val compaction = intercept[Exception](t.compact())
+    assert(messages(compaction).contains("not key-sorted"), messages(compaction))
+    assert(t.store.snapshotIds == snapshots, "a failed compaction committed a snapshot")
   }
 }

@@ -6,16 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.Random
 
-/** The engine has TWO production merge-on-read implementations: the
-  * DataFrame fold ([[graft.merge.MergeEngines]], used by `toDF` and by
-  * compaction) and the executor-side row k-way merge
-  * ([[graft.merge.RowMergeEngines]], used by the DSv2 catalog scan). They
-  * must agree on every merge engine, option combination, and data shape —
-  * an earlier advisor round found a real divergence (null handling in
-  * nested_update), so this spec fuzzes both paths end-to-end: random
-  * engine configs + random batches with nulls, duplicate keys, deletes,
-  * and out-of-order sequence values, read through BOTH surfaces, before
-  * and after compaction.
+/** Every production merge — the DSv2 merge-on-read scan and every
+  * compaction rewrite — runs through the executor-side row k-way merge
+  * ([[graft.merge.RowMerger]]). This spec holds it to an independent
+  * oracle, the DataFrame group-merge fold kept in [[ReferenceMerge]] (the
+  * two have diverged before, on null handling in nested_update). It
+  * fuzzes random engine configs + random batches with nulls, duplicate
+  * keys, deletes, and out-of-order sequence values, and compares the
+  * oracle against the DSv2 read before any compaction, after full
+  * compaction, and after a run-subset compaction where the engine allows
+  * one — and checks that no compaction changes the table's contents.
   */
 class MergePathEquivalenceSpec extends SparkSpec {
 
@@ -55,7 +55,12 @@ class MergePathEquivalenceSpec extends SparkSpec {
     // sequence column instead of the global order
     val seqGroup = if (engine == "partial-update" && rnd.nextBoolean())
       Map("fields.ver.sequence-group" -> "d,s") else Map.empty
-    base ++ seqField ++ aggs ++ seqGroup
+    // compaction is driven explicitly: write-only stops the writer's own,
+    // and the triggers let maybeCompact pick every group with a base and
+    // one upper run for the run-subset rewrite
+    base ++ seqField ++ aggs ++ seqGroup ++ Map("write-only" -> "true",
+      "num-sorted-run.compaction-trigger" -> "2",
+      "compaction.max-size-amplification-percent" -> "1000000")
   }
 
   private def randomBatch(rnd: Random, n: Int): Seq[Row] =
@@ -82,6 +87,7 @@ class MergePathEquivalenceSpec extends SparkSpec {
     }.mkString("|")).sorted.toSeq
 
   test("DF merge path and row merge path agree across random engines and data") {
+    var subsetRuns = 0
     for (scenario <- 0 until 12) {
       val rnd = new Random(scenario * 7919L + 17)
       val opts = randomConfig(rnd)
@@ -91,7 +97,7 @@ class MergePathEquivalenceSpec extends SparkSpec {
       val t = GraftTable.create(spark, s"$wh/db/$name", schema,
         partitionKeys = pts, primaryKeys = pks, options = opts)
       val withDeletes = opts("merge-engine") == "deduplicate"
-      for (_ <- 0 until 3) {
+      def upserts(n: Int): Unit = for (_ <- 0 until n) {
         val rows = randomBatch(rnd, 30)
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 2), schema)
@@ -101,16 +107,32 @@ class MergePathEquivalenceSpec extends SparkSpec {
         else None
         t.upsert(df, kinds = kinds)
       }
-      // the DataFrame group-merge fold (the compaction rewrite engine)
-      // vs the DSv2 row-merge read — toDF itself now routes to the
-      // latter, so the equivalence baseline calls the fold directly
-      def viaDf = canon(t.toDFDataFrameMerge(t.store.latestSnapshot.get).collect())
-      def viaRows = canon(spark.table(s"geq.db.$name").collect())
-      assert(viaDf == viaRows,
-        s"scenario $scenario (${opts.toSeq.sorted.mkString(",")}) diverged pre-compaction")
+      // the DataFrame group-merge oracle vs the DSv2 row-merge read, over
+      // the same live files; returns the agreed contents
+      def agreed(stage: String): Seq[String] = {
+        val viaDf = canon(ReferenceMerge.read(t, t.store.latestSnapshot.get).collect())
+        val viaRows = canon(spark.table(s"geq.db.$name").collect())
+        assert(viaDf == viaRows,
+          s"scenario $scenario (${opts.toSeq.sorted.mkString(",")}) diverged $stage")
+        viaRows
+      }
+      def levels = t.store.liveFiles(t.store.latestSnapshot.get).map(_.level)
+      upserts(3)
+      val pre = agreed("pre-compaction")
       t.compact()
-      assert(viaDf == viaRows,
-        s"scenario $scenario (${opts.toSeq.sorted.mkString(",")}) diverged post-compaction")
+      assert(agreed("post-compaction") == pre, s"scenario $scenario: compaction changed contents")
+      upserts(2)
+      val upper = agreed("before the run-subset compaction")
+      t.maybeCompact()
+      // the subset rewrite leaves the max-level base and adds level-1 runs
+      if (levels.contains(1)) subsetRuns += 1
+      assert(agreed("post run-subset compaction") == upper,
+        s"scenario $scenario: run-subset compaction changed contents")
+      t.compact()
+      assert(levels.forall(_ == GraftTable.MaxLevel))
+      assert(agreed("post second full compaction") == upper,
+        s"scenario $scenario: compaction changed contents")
     }
+    assert(subsetRuns > 0, "no scenario exercised the run-subset rewrite")
   }
 }

@@ -1,10 +1,24 @@
-package graft.merge
+package graft
 
-import graft.core.TableSchema
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{Snapshot, TableSchema}
+import graft.functions.{BitmapAgg, ExpressionEncoders, Sketches}
+import graft.table.GraftTable
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.RoaringBitmap
 
-/** Merge-on-read engines for primary-key tables.
+/** TEST ORACLE: the DataFrame group-merge fold that compaction used before
+  * every production merge moved onto the executor-side k-way merge
+  * (graft.merge.RowMerger / SortMergeRows). It is an independent
+  * implementation of the same merge semantics — hash aggregates instead of
+  * a per-key row fold — so specs compare the production read and
+  * compaction against it; an oracle running RowMerger itself would be
+  * blind to RowMerger's own bugs.
+  *
+  * The original design notes follow.
+  *
+  * Merge-on-read engines for primary-key tables.
   *
   * Reference semantics: paimon-core org/apache/paimon/mergetree/compact/
   * MergeFunction.java:24-46 and its implementations (DeduplicateMergeFunction,
@@ -23,7 +37,7 @@ import org.apache.spark.sql.functions._
   * sequence) — out-of-order input is handled by version comparison, not
   * event-time windows (reference: CoreOptions "sequence.field":535).
   */
-object MergeEngines {
+object ReferenceMerge {
   import graft.GraftMeta._
 
   /** The ordering struct used to pick row versions. The within-commit
@@ -265,12 +279,98 @@ object MergeEngines {
       aggregate(collect_list(c.cast("double")), lit(1.0d), (acc, x) => acc * x)
     // serialized RoaringBitmap metrics union per key (reference:
     // FieldRoaringBitmap32Agg.java / FieldRoaringBitmap64Agg.java)
-    case "rbm32" => graft.functions.BitmapOrAgg.or(c)
-    case "rbm64" => graft.functions.Bitmap64OrAgg.or(c)
+    case "rbm32" => BitmapOrAgg.or(c)
+    case "rbm64" => Bitmap64OrAgg.or(c)
     // distinct-count sketch unions (reference: FieldHllSketchAgg.java /
     // FieldThetaSketchAgg.java; self-contained algorithms, see Sketches)
-    case "hll_sketch" => graft.functions.HllUnionAgg.union(c)
-    case "theta_sketch" => graft.functions.ThetaUnionAgg.union(c)
+    case "hll_sketch" => HllUnionAgg.union(c)
+    case "theta_sketch" => ThetaUnionAgg.union(c)
     case other => throw new IllegalArgumentException(s"unknown aggregate-function: $other")
   }
+
+  /** Reference read of a PK snapshot: the fold over the raw snapshot rows
+    * (deletion-vector tables: raw rows minus -D tombstones, DVs already
+    * masked), with read-time defaults applied.
+    */
+  def read(t: GraftTable, s: Snapshot): DataFrame = {
+    val sch = t.schema
+    val raw = t.rawSnapshot(s, sch)
+    t.applyDefaults(
+      if (sch.deletionVectors)
+        raw.filter(col(KindCol) =!= lit(KindDelete))
+          .select(sch.fields.map(f => col(f.name)): _*)
+      else merge(sch, raw, BucketCol))
+  }
+}
+
+/** OR-merge of pre-serialized 32-bit RoaringBitmap blobs — the `rbm32`
+  * field aggregator (reference: FieldRoaringBitmap32Agg.java): rows carry
+  * bitmap-typed metrics (e.g. visitor-id sets) as binary columns and the
+  * merge engine unions them per key. Null inputs are identity.
+  */
+object BitmapOrAgg extends Aggregator[Array[Byte], RoaringBitmap, Array[Byte]] {
+  override def zero: RoaringBitmap = new RoaringBitmap()
+  override def reduce(b: RoaringBitmap, bytes: Array[Byte]): RoaringBitmap = {
+    if (bytes != null) b.or(BitmapAgg.deserialize(bytes))
+    b
+  }
+  override def merge(a: RoaringBitmap, b: RoaringBitmap): RoaringBitmap = { a.or(b); a }
+  override def finish(b: RoaringBitmap): Array[Byte] = BitmapAgg.serialize(b)
+  override def bufferEncoder: Encoder[RoaringBitmap] = Encoders.kryo[RoaringBitmap]
+  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+
+  def or(bitmaps: Column): Column = udaf(BitmapOrAgg, Encoders.BINARY).apply(bitmaps)
+}
+
+/** OR-merge of serialized 64-bit Roaring64NavigableMap blobs — the `rbm64`
+  * field aggregator (reference: FieldRoaringBitmap64Agg.java).
+  */
+object Bitmap64OrAgg extends Aggregator[Array[Byte],
+    org.roaringbitmap.longlong.Roaring64NavigableMap, Array[Byte]] {
+  import org.roaringbitmap.longlong.Roaring64NavigableMap
+
+  override def zero: Roaring64NavigableMap = new Roaring64NavigableMap()
+  override def reduce(b: Roaring64NavigableMap, bytes: Array[Byte]): Roaring64NavigableMap = {
+    if (bytes != null) b.or(BitmapAgg.deserialize64(bytes))
+    b
+  }
+  override def merge(a: Roaring64NavigableMap,
+      b: Roaring64NavigableMap): Roaring64NavigableMap = { a.or(b); a }
+  override def finish(b: Roaring64NavigableMap): Array[Byte] = BitmapAgg.serialize64(b)
+  override def bufferEncoder: Encoder[Roaring64NavigableMap] =
+    Encoders.kryo[Roaring64NavigableMap]
+  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+
+  def or(bitmaps: Column): Column = udaf(Bitmap64OrAgg, Encoders.BINARY).apply(bitmaps)
+}
+
+/** Union serialized HLL sketches — the `hll_sketch` field aggregator's
+  * reference fold.
+  */
+object HllUnionAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
+  override def zero: Array[Byte] = Sketches.hllEmpty()
+  override def reduce(b: Array[Byte], v: Array[Byte]): Array[Byte] =
+    if (v == null) b else Sketches.hllMerge(b, v)
+  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = Sketches.hllMerge(a, b)
+  override def finish(b: Array[Byte]): Array[Byte] = b
+  override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+
+  def union(c: Column): Column = udaf(HllUnionAgg, Encoders.BINARY).apply(c)
+}
+
+/** Union serialized theta sketches — the `theta_sketch` field aggregator's
+  * reference fold.
+  */
+object ThetaUnionAgg extends Aggregator[Array[Byte], Array[Long], Array[Byte]] {
+  override def zero: Array[Long] = Array.emptyLongArray
+  override def reduce(b: Array[Long], v: Array[Byte]): Array[Long] =
+    if (v == null) b else Sketches.thetaMergeHashes(b, Sketches.thetaDeserialize(v))
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+    Sketches.thetaMergeHashes(a, b)
+  override def finish(b: Array[Long]): Array[Byte] = Sketches.thetaSerialize(b)
+  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoders.longArray
+  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+
+  def union(c: Column): Column = udaf(ThetaUnionAgg, Encoders.BINARY).apply(c)
 }

@@ -3,8 +3,8 @@ package graft
 import graft.table.GraftTable
 import org.apache.spark.sql.functions._
 
-/** Staged data files MUST be primary-key-sorted runs — the merge read and
-  * compaction k-way heaps assume it. Spark's planned-write path silently
+/** Staged data files MUST be primary-key-sorted runs — the k-way merge
+  * heap behind reads and compaction assumes it. Spark's planned-write path silently
   * violated this: V1Writes wraps string partition columns in empty2null,
   * its ordering check then never matches a pre-arranged frame, and the
   * replacement partition-cols-only sort interleaves ~360-row chunks once
@@ -50,6 +50,23 @@ class WriteOrderSpec extends SparkSpec {
     val out = t.toDF
     assert(out.count() == n, s"merged count ${out.count()} != $n")
     assert(out.filter(col("v") === -1.0).count() === n / 3 + (if (n % 3 == 0) 0 else 1))
+
+    // compaction streams each (partition, bucket) through the k-way merge
+    // into ONE max-level file, which must be just as key-sorted
+    t.compact()
+    val compacted = t.store.liveFiles(t.store.latestSnapshot.get)
+    assert(compacted.forall(_.level == GraftTable.MaxLevel))
+    assert(compacted.groupBy(f => (f.partition, f.bucket)).values.forall(_.size == 1),
+      "compaction must write one file per (partition, bucket)")
+    compacted.foreach { f =>
+      val keys = spark.read.parquet(t.location + "/" + f.path)
+        .select("k").collect().map(_.getLong(0))
+      val descents = keys.sliding(2).count(a => a(0) > a(1))
+      assert(descents == 0,
+        s"compacted file ${f.path} (${keys.length} rows) has $descents key-order descents")
+    }
+    assert(t.toDF.count() == n)
+    assert(t.toDF.filter(col("v") === -1.0).count() === n / 3 + (if (n % 3 == 0) 0 else 1))
   }
 
   test("cross-partition upsert merges moved keys at spill size") {
