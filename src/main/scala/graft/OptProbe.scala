@@ -157,7 +157,7 @@ object OptProbe {
       // pinned single-use digests); after: shared precomputed sig frame
       dump("incr_dedup_before", Dedup.nearDupPairsAgainst(
         batch, "doc_id", "text", sig, corpus, 0.7))
-      val (shared, _) = Dedup.sigFrameFor(sig, batch, "doc_id", "text")
+      val shared = Dedup.sigFrameFor(sig, batch, "doc_id", "text")
       dump("incr_dedup_after", Dedup.nearDupPairsAgainst(
         batch, "doc_id", "text", sig, corpus, 0.7,
         precomputedSigs = Some(shared)))

@@ -45,7 +45,9 @@ object StatsCodec {
         } catch { case _: java.time.format.DateTimeParseException => None }
     }
 
-  /** Comparable key for a stored stat string under the column's type.
+  /** Comparable key for a stored stat string under the column's type, in
+    * Spark's own ordering: strings in UTF-8 byte order (as `UTF8String`
+    * compares them), -0.0 equal to 0.0 and NaN greatest for floating point.
     * Returns None for types we don't order (complex, binary).
     */
   def toComparable(dt: DataType, s: String): Option[Comparable[Any]] = {
@@ -57,9 +59,11 @@ object StatsCodec {
         }
         case ByteType | ShortType | IntegerType | LongType | DateType =>
           java.lang.Long.valueOf(s.toLong)
-        case FloatType | DoubleType => java.lang.Double.valueOf(s.toDouble)
+        case FloatType | DoubleType =>
+          val d = s.toDouble
+          java.lang.Double.valueOf(if (d == 0.0) 0.0 else d)
         case _: DecimalType => new java.math.BigDecimal(s)
-        case StringType => s
+        case StringType => org.apache.spark.unsafe.types.UTF8String.fromString(s)
         case BooleanType => java.lang.Boolean.valueOf(s)
         case _ => return None
       }
@@ -246,12 +250,17 @@ object Pruning {
         stats.get(c).forall(_.nullCount < rowCount)
       case StringStartsWith(c, prefix) =>
         // min/max string range can exclude a prefix: file matches only if
-        // prefix is within [min.take(p), max.take(p)] lexicographically.
+        // prefix is within [min.take(p), max.take(p)], both taken and
+        // compared as UTF-8 bytes (the order the bounds were collected in)
         stats.get(c) match {
           case Some(cs) =>
-            val lo = cs.min.forall(_.take(prefix.length) <= prefix)
-            val hi = cs.max.forall(_.take(prefix.length) >= prefix)
-            lo && hi
+            val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            def cmpHead(bound: String): Int = {
+              val b = bound.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+              java.util.Arrays.compareUnsigned(b, 0, math.min(b.length, p.length),
+                p, 0, p.length)
+            }
+            cs.min.forall(cmpHead(_) <= 0) && cs.max.forall(cmpHead(_) >= 0)
           case None => true
         }
       case EqualNullSafe(c, v) =>

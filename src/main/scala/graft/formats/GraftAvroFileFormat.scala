@@ -33,12 +33,11 @@ import org.apache.spark.util.SerializableConfiguration
   * `org/apache/paimon/format/avro/AvroFileFormat.java:50` (Avro as a
   * first-class `file.format` next to parquet/orc). The integration seam is
   * Spark's `FileFormat`: the engine's write path
-  * (`GraftTable.stageWrite`) drives [[prepareWrite]] through
-  * `DataFrameWriter.format(classOf[...].getName)` and both scan paths
-  * (DSv1 `HadoopFsRelation`, DSv2 `GraftScan`) drive [[buildReader]], so
-  * Avro tables get partition pruning, stats-based file skipping (via the
-  * scan-stats pass — Avro has no footer stats), MOR merge and schema
-  * evolution for free.
+  * (`GraftTable.stageWrite`) drives [[prepareWrite]] through Spark's
+  * `FileFormatWriter` and both scan paths (DSv1 `HadoopFsRelation`, DSv2
+  * `GraftScan`) drive [[buildReader]], so Avro tables get partition
+  * pruning, stats-based file skipping (stats collected in the writer task,
+  * as for every format), MOR merge and schema evolution for free.
   *
   * Splits: Avro files are block-structured with 16-byte sync markers, so a
   * byte-range read is `sync(start)` then records until `pastSync(end)` —

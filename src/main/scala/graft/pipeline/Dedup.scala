@@ -211,18 +211,20 @@ object Dedup {
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, numHashes: Int = DefaultNumHashes,
       bands: Int = 16,
-      precomputedSigs: Option[DataFrame] = None): DataFrame = {
+      precomputedSigs: Option[(DataFrame, Int)] = None): DataFrame = {
     val src = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    // precomputedSigs: a pinned (id, sig) frame signed at `numHashes` for a
-    // SUPERSET of df's rows whose extra ids do not occur in df (see
-    // [[sigFrameFor]]). No restriction join is needed: a phantom id can
+    // precomputedSigs: a pinned (id, sig) frame and the numHashes it was
+    // signed at (as [[sigFrameFor]] returns them), for a SUPERSET of df's
+    // rows whose extra ids do not occur in df. A frame signed at another
+    // family fails here. No restriction join is needed: a phantom id can
     // ride the candidate prefilter but can never reach the output —
     // verification recomputes shingle sets from df ITSELF and inner-joins
     // them by id, so pairs touching an id absent from df vanish there.
     // Signatures are a pure per-row function, so output is identical; the
     // caller saves a full re-shingle + re-sign pass per reuse (ingest
     // pipelines sign the same batch up to three times otherwise).
-    val sigs = precomputedSigs.getOrElse(sigFrame(df, idCol, textCol, numHashes))
+    val sigs = precomputedSigs.map(signedAt("nearDupPairs", numHashes, _))
+      .getOrElse(sigFrame(df, idCol, textCol, numHashes))
     val cutoff = estCutoff(threshold, numHashes)
     // lazy pins: cands feeds both the id-set derivation and the final
     // verify join, sets feeds both sides of it — pin each so it computes
@@ -475,28 +477,36 @@ object Dedup {
   def appendToSigIndex(index: graft.table.GraftTable, df: DataFrame,
       idCol: String, textCol: String, commitIdentifier: Long = -1L,
       commitUser: String = "",
-      precomputedSigs: Option[DataFrame] = None,
-      precomputedSigsNumHashes: Int = -1): Unit = {
+      precomputedSigs: Option[(DataFrame, Int)] = None): Unit = {
     val (numHashes, _) = sigMeta(index)
     // precomputedSigs: ONLY valid when df's text is byte-identical to the
     // text the signatures were computed from (ingest pipelines that rewrite
     // text — e.g. a span-cut stage — must re-sign), AND when the frame was
-    // signed at THIS index's family — callers must pass the numHashes
-    // [[sigFrameFor]] returned so a drifted family fails loud here instead
-    // of silently committing incompatible signatures.
+    // signed at THIS index's family — a drifted family fails loud here
+    // instead of silently committing incompatible signatures.
     val sigs = precomputedSigs match {
-      case Some(s) =>
-        require(precomputedSigsNumHashes == numHashes,
-          s"appendToSigIndex: precomputed signatures were signed at " +
-            s"numHashes=$precomputedSigsNumHashes but the index at " +
-            s"${index.location} uses numHashes=$numHashes — pass the " +
-            "numHashes returned by sigFrameFor, or drop precomputedSigs")
-        s.join(df.select(col(idCol).as("id")), "id")
+      case Some(p) =>
+        signedAt(s"appendToSigIndex (index at ${index.location})", numHashes, p)
+          .join(df.select(col(idCol).as("id")), "id")
           .select(col("id"), col("sig"))
       case None => sigFrame(df, idCol, textCol, numHashes)
     }
     index.upsert(sigs,
       commitIdentifier = commitIdentifier, commitUser = commitUser)
+  }
+
+  /** The signature frame of a (frame, numHashes) pair, required to be
+    * signed at the family `numHashes` its consumer bands with: signatures
+    * of another width band into wrong buckets and silently miss dups.
+    */
+  private def signedAt(consumer: String, numHashes: Int,
+      precomputed: (DataFrame, Int)): DataFrame = {
+    val (sigs, signed) = precomputed
+    require(signed == numHashes,
+      s"$consumer: precomputed signatures were signed at numHashes=$signed " +
+        s"but it bands at numHashes=$numHashes — pass the pair sigFrameFor " +
+        "returned for this family, or drop precomputedSigs")
+    sigs
   }
 
   /** The per-document signature frame for `df` at `index`'s configured
@@ -582,14 +592,15 @@ object Dedup {
   def nearDupPairsAgainst(newDf: DataFrame, idCol: String, textCol: String,
       index: graft.table.GraftTable, corpus: DataFrame,
       threshold: Double = 0.7,
-      precomputedSigs: Option[DataFrame] = None): DataFrame = {
+      precomputedSigs: Option[(DataFrame, Int)] = None): DataFrame = {
     val (numHashes, bands) = sigMeta(index)
     // precomputedSigs must be signed at THIS index's numHashes (see
     // [[sigFrameFor]]) for a superset of newDf whose extra ids do not
     // occur in newDf — phantom ids die at the verify join exactly as in
     // [[nearDupPairs]] (candSets reads text from newDf itself)
-    val newSigs = precomputedSigs.getOrElse(
-      sigFrame(newDf, idCol, textCol, numHashes)) // already pinned
+    val newSigs = precomputedSigs
+      .map(signedAt(s"nearDupPairsAgainst (index at ${index.location})", numHashes, _))
+      .getOrElse(sigFrame(newDf, idCol, textCol, numHashes)) // already pinned
     val corpusSigs = PipelineUtil.pin(index.toDF.select(col("id"), col("sig")))
     // band-bucket join, new × corpus: the new side is the small one — AQE
     // broadcast-converts it, so the corpus index scan is never shuffled.

@@ -209,22 +209,23 @@ object GraftAggPushdown {
     val dt = schema.fieldByName(c).sparkType
     val bounds = fs.flatMap { f =>
       val s = f.stats(c)
-      (if (isMin) s.min else s.max).flatMap(StatsCodec.toComparable(dt, _))
+      (if (isMin) s.min else s.max).flatMap(b => StatsCodec.toComparable(dt, b).map(_ -> b))
     }
     if (bounds.isEmpty) null // every row null (or no files)
     else {
-      val winner = bounds.reduce { (a, b) =>
-        val cpr = a.compareTo(b)
+      val (winner, raw) = bounds.reduce { (a, b) =>
+        val cpr = a._1.compareTo(b._1)
         if ((isMin && cpr <= 0) || (!isMin && cpr >= 0)) a else b
       }
-      // comparable domain → Catalyst internal value
+      // comparable domain → Catalyst internal value; floating point from
+      // the stored string, which keeps the sign of a zero
       (winner: Any, dt) match {
         case (l: java.lang.Long, ByteType) => l.toByte
         case (l: java.lang.Long, ShortType) => l.toShort
         case (l: java.lang.Long, IntegerType | DateType) => l.toInt
         case (l: java.lang.Long, _) => l.longValue()
-        case (d: java.lang.Double, FloatType) => d.toFloat
-        case (d: java.lang.Double, _) => d.doubleValue()
+        case (_: java.lang.Double, FloatType) => raw.toFloat
+        case (_: java.lang.Double, _) => raw.toDouble
         case (b: java.math.BigDecimal, d: DecimalType) =>
           org.apache.spark.sql.types.Decimal(b, d.precision, d.scale)
         case (b: java.lang.Boolean, _) => b.booleanValue()

@@ -258,15 +258,12 @@ object StreamingDedup {
       // the sig commit must re-sign the cut text (see appendToSigIndex).
       // (sigFrameFor pins the frame — the pin IS the share point; a
       // second persist on top would just duplicate the cache)
-      val (freshSigs0, sigNumHashes) =
-        Dedup.sigFrameFor(index, fresh, idCol, textCol)
-      val freshSigs = Some(freshSigs0)
+      val freshSigs = Some(Dedup.sigFrameFor(index, fresh, idCol, textCol))
 
       // 2. near-dup intra-batch: larger id of every verified pair drops
       val intraPairs = timed("build_text_intra")(
         Dedup.nearDupPairs(fresh, idCol, textCol, threshold,
-          precomputedSigs =
-            if (sigNumHashes == Dedup.DefaultNumHashes) freshSigs else None))
+          precomputedSigs = freshSigs.filter(_._2 == Dedup.DefaultNumHashes)))
       val (intraSurvivors, intraN) = counted("text_intra")(fresh.join(
         Dedup.dropIds(intraPairs).withColumnRenamed("drop_id", idCol),
         Seq(idCol), "left_anti"))
@@ -430,8 +427,7 @@ object StreamingDedup {
             commitIdentifier = batchId, commitUser = s"$commitUser-index",
             // a span stage rewrote the committed text — must re-sign it;
             // otherwise finalAdmitted ⊆ fresh with identical text
-            precomputedSigs = if (span.isEmpty) freshSigs else None,
-            precomputedSigsNumHashes = sigNumHashes))
+            precomputedSigs = if (span.isEmpty) freshSigs else None))
       }
 
       if (trackCounts)

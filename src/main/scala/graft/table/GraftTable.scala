@@ -29,7 +29,6 @@ import java.util.UUID
 class GraftTable(val spark: SparkSession, val store: FileStore)
     extends RowLevelOps with MaintenanceOps with SystemTables with SchemaEvolution
     with org.apache.spark.internal.Logging {
-  import GraftTable.{StatsStringCap, truncateUp}
 
   def schema: TableSchema = store.latestSchema
   def isPrimaryKeyed: Boolean = schema.isPrimaryKeyed
@@ -1157,14 +1156,14 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
 
   // ================= staging write =================
 
-  /** Write a prepared frame through Spark's parquet writer into a staging
-    * dir, then collect per-file stats with one aggregate pass and move files
-    * into the table layout. Executors do all data work; the driver only
-    * handles metadata (the property that scales to 1000 executors).
+  /** Write a prepared frame into a staging dir through Spark's file writer
+    * for the level's format, collecting each file's stats in the writer
+    * task ([[FileStatsTracker]]), then move the files into the table layout.
+    * Executors do all data work; the driver only handles metadata (the
+    * property that scales to 1000 executors).
     */
   def stageWrite(prepared: DataFrame, level: Int, seq: Long): Seq[DataFileMeta] = {
-    // not dot-prefixed: Spark's file listing filters hidden paths, and the
-    // staging dir must be readable by the stats pass
+    // not dot-prefixed: Spark's file listing filters hidden paths
     val stagingName = s"tmp-staging-${UUID.randomUUID()}"
     val staging = new Path(store.rootPath, stagingName)
     val dirs = dirCols()
@@ -1181,7 +1180,17 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     // per-LSM-level format: row-oriented L0 runs, columnar compacted base
     // (reference: CoreOptions FILE_FORMAT_PER_LEVEL)
     val fmtName = schema.fileFormatForLevel(level)
-    val writer0 = routed.write.mode("overwrite").format(GraftTable.sourceNameFor(fmtName))
+    // parquet's TIMESTAMP_MILLIS output drops sub-millisecond digits; drop
+    // them before the write so the collected stats describe stored values
+    // (a projection of data columns: the dirs' order the writer checks stays)
+    val millis = fmtName == "parquet" &&
+      spark.sessionState.conf.parquetOutputTimestampType ==
+        org.apache.spark.sql.internal.SQLConf.ParquetOutputTimestampType.TIMESTAMP_MILLIS
+    val written = routed.schema.fields.foldLeft(routed) { (df, f) =>
+      if (millis && f.dataType == TimestampType && !dirs.contains(f.name))
+        df.withColumn(f.name, date_trunc("millisecond", col(f.name)))
+      else df
+    }
     // codec: per-LSM-level override first ("0:lz4,5:zstd" — fast codec for
     // short-lived L0 runs, tight codec for the long-lived compacted base;
     // reference: CoreOptions "file.compression.per.level"), else the
@@ -1193,34 +1202,38 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         }
       }
       .orElse(schema.options.get("file.compression"))
-    val writer1 = codec.fold(writer0)(c => writer0.option("compression", c))
     // zstd effort and row-group/stripe sizing knobs (reference: CoreOptions
     // "file.compression.zstd-level", "file.block-size") map onto the
     // format writers' own options — block size is THE write-side lever for
     // scan parallelism granularity at 100 TB
-    val writer = Seq(
-      schema.options.get("file.compression.zstd-level").map(l => (w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =>
-        w.option("parquet.compression.codec.zstd.level", l)),
-      schema.options.get("file.block-size").map(b => (w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) => {
+    val options = codec.map("compression" -> _).toMap ++
+      schema.options.get("file.compression.zstd-level")
+        .map("parquet.compression.codec.zstd.level" -> _) ++
+      schema.options.get("file.block-size").flatMap { b =>
         val bytes = TableSchema.parseBytes(b).toString
         fmtName match {
-          case "parquet" => w.option("parquet.block.size", bytes)
-          case "orc" => w.option("orc.stripe.size", bytes)
-          case _ => w // avro sync interval is row-oriented; default stands
+          case "parquet" => Some("parquet.block.size" -> bytes)
+          case "orc" => Some("orc.stripe.size" -> bytes)
+          case _ => None // avro sync interval is row-oriented; default stands
         }
-      })).flatten.foldLeft(writer1)((w, f) => f(w))
-    // planned-write MUST be off for this save: V1Writes' empty2null wrapper
-    // on string partition columns defeats its ordering check, and the
-    // replacement partition-cols-only sort UNSORTS the pk order inside
-    // files once it spills — fatal for the merge read's sorted-run
-    // assumption (caught by the 10x-scale oracle sweep; see
-    // SparkShims.withPlannedWriteDisabled). Thread-scoped, so concurrent
-    // queries are untouched.
-    org.apache.spark.sql.graft.SparkShims.withPlannedWriteDisabled {
-      (if (dirs.nonEmpty) writer.partitionBy(dirs: _*) else writer).save(staging.toString)
+      }
+    val dataCols = written.schema.fields.filterNot(f => dirs.contains(f.name))
+    def ordinalOf(name: String): Int = {
+      val i = dataCols.indexWhere(_.name == name)
+      require(i >= 0, s"staged frame lacks data column $name")
+      i
     }
+    val tracker = new FileStatsTracker(
+      statCols().map { f =>
+        val i = ordinalOf(f.name)
+        StatColumn(f.name, i, dataCols(i).dataType, schema.statsMode(f.name))
+      },
+      bloomCols().map { f => val i = ordinalOf(f.name); (f.name, i, dataCols(i).dataType) },
+      bloomBits, dirs.size)
+    org.apache.spark.sql.graft.SparkShims.writeFiles(written,
+      GraftTable.fileFormatFor(fmtName), staging.toString, dirs, options, Seq(tracker))
 
-    try collectStatsAndMove(staging, level, seq)
+    try moveStaged(staging, tracker.files, level, seq)
     finally store.fs.delete(staging, true)
   }
 
@@ -1250,37 +1263,44 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
   private def bloomBits: Long =
     schema.option("file-index.bloom.bits", (1L << 20).toString).toLong
 
-  /** Per-staged-file stats in external form, source-agnostic: from parquet
-    * FOOTERS when possible (metadata-only — writing 100 TB must not imply
-    * re-reading 100 TB), else from one aggregation scan of the staged data.
+  /** Move the staged files into the table layout, each with the stats its
+    * writer task collected. A staged file without stats, or stats of a
+    * non-empty file the staging dir lacks, fails the write. Zero-row files
+    * are never committed, whatever the format: they stay in the staging
+    * dir, which the caller deletes.
     */
-  private case class StagedStats(
-      uri: String, rowCount: Long,
-      mins: Map[String, Any], maxs: Map[String, Any], nulls: Map[String, Long],
-      blooms: Map[String, Array[Byte]])
-
-  private def collectStatsAndMove(staging: Path, level: Int, seq: Long): Seq[DataFileMeta] = {
+  private def moveStaged(staging: Path, written: Seq[WrittenFileStats],
+      level: Int, seq: Long): Seq[DataFileMeta] = {
     val fs = store.fs
-    if (!fs.exists(staging)) return Nil
-    val cols = statCols()
-    val blooms = bloomCols()
-    // footers carry min/max/nullCount already; the scan fallback covers orc,
-    // bloom sidecar builds (which need the data anyway), and any footer with
-    // absent/unknown statistics
-    val fmtName = schema.fileFormatForLevel(level)
-    val perFile: Seq[StagedStats] =
-      (if (blooms.nonEmpty) None // bloom sidecars need the data anyway
-       else if (fmtName == "parquet") footerStats(staging, cols)
-       else if (fmtName == "orc") orcFooterStats(staging, cols)
-       else None)
-        .getOrElse(scanStats(staging, cols, blooms, fmtName))
-
     val stagingName = staging.getName
-    perFile.map { r =>
-      val uri = r.uri
+    def relOf(p: Path): String = {
+      val uri = p.toString
       val at = uri.indexOf(stagingName)
       require(at >= 0, s"unexpected staged file path: $uri")
-      val rel = uri.substring(at + stagingName.length + 1)
+      uri.substring(at + stagingName.length + 1)
+    }
+    val staged = {
+      val it = fs.listFiles(staging, true)
+      val b = Set.newBuilder[String]
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (!p.getName.startsWith("_") && !p.getName.startsWith(".")) b += relOf(p)
+      }
+      b.result()
+    }
+    val measured = written.map(_.relPath).toSet
+    require(measured.size == written.size,
+      s"stats collected twice for a staged file: ${written.map(_.relPath)}")
+    val unmeasured = staged -- measured
+    require(unmeasured.isEmpty,
+      s"staged files without collected stats: ${unmeasured.mkString(", ")}")
+    val kept = written.filter(_.rowCount > 0)
+    val missing = kept.map(_.relPath).filterNot(staged)
+    require(missing.isEmpty,
+      s"collected stats for files the write did not stage: ${missing.mkString(", ")}")
+
+    kept.map { w =>
+      val rel = w.relPath
       // partition values from the directory segments, in dirCols order
       val segs = rel.split('/').dropRight(1)
       val kv = segs.map { s =>
@@ -1289,28 +1309,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       }.toMap
       val ptValues = schema.partitionKeys.map(k => kv.getOrElse(k, PartitionPathUtils.NullPartitionValue))
       val bucket = kv.get(BucketCol).map(_.toInt).getOrElse(0)
-
-      val stats = cols.map { f =>
-        val (mode, tlen) = schema.statsMode(f.name)
-        val mnRaw = r.mins.getOrElse(f.name, null)
-        val mxRaw = r.maxs.getOrElse(f.name, null)
-        val (mn, mx) = f.sparkType match {
-          case _ if mode == "counts" => (None, None) // null count only
-          case StringType if mode == "full" =>
-            (Option(mnRaw).map(_.toString), Option(mxRaw).map(_.toString))
-          case StringType =>
-            val cap = if (mode == "truncate") tlen else StatsStringCap
-            (Option(mnRaw).map(_.toString).map(_.take(cap)),
-             Option(mxRaw).map(_.toString).flatMap { s =>
-               if (s.length <= cap) Some(s)
-               else truncateUp(s.take(cap)) // None → unbounded
-             })
-          case dt => (StatsCodec.encode(dt, mnRaw), StatsCodec.encode(dt, mxRaw))
-        }
-        f.name -> ColStats(mn, mx, r.nulls.getOrElse(f.name, 0L))
-      }.toMap
-
-      val bloomPaths = r.blooms.map { case (n, b) => n -> store.writeBloom(b) }
+      val bloomPaths = w.blooms.map { case (n, b) => n -> store.writeBloom(b) }
 
       val fileName = rel.split('/').last
       val targetRel = (Seq("data") ++ segs :+ fileName).mkString("/")
@@ -1321,312 +1320,15 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       DataFileMeta(
         path = targetRel,
         size = fs.getFileStatus(target).getLen,
-        rowCount = r.rowCount,
+        rowCount = w.rowCount,
         partition = ptValues,
         bucket = bucket,
         level = level,
         minSeq = seq, maxSeq = seq,
         schemaId = schema.id,
-        stats = stats,
+        stats = w.stats,
         blooms = bloomPaths)
     }
-  }
-
-  /** One aggregation pass over the staged files (the pre-footer path). */
-  private def scanStats(staging: Path, cols: Seq[Field],
-      blooms: Seq[Field], fmtName: String): Seq[StagedStats] = {
-    val staged = spark.read
-      .schema(StructType(physicalDataSchema().fields)) // data cols only; dirs ignored
-      .option("basePath", staging.toString)
-      .format(GraftTable.sourceNameFor(fmtName))
-      .load(staging.toString)
-    val bloomAggs = blooms.zipWithIndex.map { case (f, i) =>
-      org.apache.spark.sql.graft.SparkShims
-        .bloomFilterAgg(xxhash64(col(f.name)), bloomBits).as(s"__bf$i")
-    }
-    val aggs = Seq(count(lit(1)).as("__cnt")) ++ bloomAggs ++
-      cols.zipWithIndex.flatMap { case (f, i) =>
-      val c = col(f.name)
-      val statC = f.sparkType match {
-        // long strings bloat manifests: collect one char past the cap so the
-        // driver can tell "truncated" apart from "short", then store a
-        // truncated-down min / truncated-UP max — valid outer bounds
-        // (reference: SimpleStats truncation; storing subset min/max would
-        // silently prune files containing long matching strings).
-        // stats-mode=full collects the whole value (exact bounds)
-        case StringType if schema.statsMode(f.name)._1 != "full" =>
-          val cap = schema.statsMode(f.name) match {
-            case ("truncate", n) => n
-            case _ => StatsStringCap
-          }
-          substring(c, 1, cap + 1)
-        case _ => c
-      }
-      Seq(min(statC).as(s"__mn$i"), max(statC).as(s"__mx$i"),
-        sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nc$i"))
-    }
-    staged.groupBy(col("_metadata.file_path").as("__path"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { row =>
-        StagedStats(
-          uri = row.getAs[String]("__path"),
-          rowCount = row.getAs[Long]("__cnt"),
-          mins = cols.zipWithIndex.flatMap { case (f, i) =>
-            Option(row.get(row.fieldIndex(s"__mn$i"))).map(f.name -> _) }.toMap,
-          maxs = cols.zipWithIndex.flatMap { case (f, i) =>
-            Option(row.get(row.fieldIndex(s"__mx$i"))).map(f.name -> _) }.toMap,
-          nulls = cols.zipWithIndex.map { case (f, i) =>
-            f.name -> row.getAs[Long](s"__nc$i") }.toMap,
-          blooms = blooms.zipWithIndex.flatMap { case (f, i) =>
-            Option(row.getAs[Array[Byte]](s"__bf$i")).map(f.name -> _) }.toMap)
-      }
-  }
-
-  /** Metadata-only stats from parquet footers — row counts and per-column
-    * min/max/nullCount read from row-group metadata, no data pages touched
-    * (reference: the reference's writers collect stats DURING the write;
-    * footers are the Spark-native equivalent since the staged write is
-    * Spark's own parquet writer). Returns None (→ scan fallback) on any
-    * file whose footer lacks well-formed statistics for a stat column or
-    * stores it under an unexpected physical type.
-    */
-  private def footerStats(staging: Path, cols: Seq[Field]): Option[Seq[StagedStats]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val fs = store.fs
-    val conf = spark.sessionState.newHadoopConf()
-    val files = {
-      val it = fs.listFiles(staging, true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) b += f.getPath
-      }
-      b.result()
-    }
-    // footer opens are independent driver-side IO — read them CONCURRENTLY
-    // (a partitioned append stages one file per touched dir; an IVF-index
-    // batch touches ~C cells, and C serial opens were a measurable slice
-    // of its per-commit fixed cost)
-    def footerOf(p: Path): Option[StagedStats] = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks
-        var rowCount = 0L
-        val mins = scala.collection.mutable.Map.empty[String, Any]
-        val maxs = scala.collection.mutable.Map.empty[String, Any]
-        val nulls = scala.collection.mutable.Map.empty[String, Long]
-        val wanted = cols.map(f => f.name -> f).toMap
-        var i = 0
-        while (i < blocks.size()) {
-          val block = blocks.get(i)
-          rowCount += block.getRowCount
-          var j = 0
-          val chunks = block.getColumns
-          while (j < chunks.size()) {
-            val ch = chunks.get(j)
-            val path = ch.getPath.toArray
-            if (path.length == 1 && wanted.contains(path(0))) {
-              val f = wanted(path(0))
-              val st = ch.getStatistics
-              if (st == null || !st.isNumNullsSet) return None
-              nulls.updateWith(f.name)(n => Some(n.getOrElse(0L) + st.getNumNulls))
-              if (st.hasNonNullValue) {
-                val conv = footerValue(f.sparkType, ch.getPrimitiveType, _: Any)
-                val (mnV, mxV) =
-                  (conv(st.genericGetMin), conv(st.genericGetMax)) match {
-                    case (Some(a), Some(b)) => (a, b)
-                    case _ => return None // unsupported mapping → scan fallback
-                  }
-                val ord = footerOrdering(f.sparkType).getOrElse(return None)
-                mins.updateWith(f.name)(cur =>
-                  Some(cur.filter(c => ord.compare(c, mnV) <= 0).getOrElse(mnV)))
-                maxs.updateWith(f.name)(cur =>
-                  Some(cur.filter(c => ord.compare(c, mxV) >= 0).getOrElse(mxV)))
-              } else if (st.getNumNulls < block.getRowCount) {
-                // non-null values exist but the footer records no usable
-                // min/max — INT96 timestamps (parquet ignores their stats),
-                // dropped oversized values, … → scan fallback. Skipping
-                // silently here would leave boundless ColStats: no pruning
-                // and no watermark for the column, with no signal why.
-                return None
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        Some(StagedStats(p.toString, rowCount, mins.toMap, maxs.toMap,
-          nulls.toMap, Map.empty))
-      } finally reader.close()
-    }
-    // any single file's fallback (footerOf = None via its early returns)
-    // falls the whole batch back to the scan path, exactly as before
-    val out = GraftTable.concurrently(files)(footerOf)
-    if (out.exists(_.isEmpty)) None else Some(out.map(_.get))
-  }
-
-  /** Metadata-only stats from ORC file footers — the ORC twin of
-    * [[footerStats]]: per-column file-level ColumnStatistics read via
-    * `OrcFile.createReader` (no stripes decoded), mapped to the same
-    * external-value domain [[StatsCodec.encode]] canonicalizes. Returns
-    * None (→ scan fallback) on any column whose statistics are missing,
-    * truncated, or of an unexpected kind — never a weaker bound.
-    */
-  private def orcFooterStats(staging: Path, cols: Seq[Field]): Option[Seq[StagedStats]] = {
-    import org.apache.orc._
-    val fs = store.fs
-    val conf = spark.sessionState.newHadoopConf()
-    val files = {
-      val it = fs.listFiles(staging, true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".orc")) b += f.getPath
-      }
-      b.result()
-    }
-    def tsMicros(t: java.sql.Timestamp): java.lang.Long = {
-      val secs = Math.floorDiv(t.getTime, 1000L)
-      java.lang.Long.valueOf(secs * 1000000L + t.getNanos / 1000)
-    }
-    val wanted = cols.map(f => f.name -> f).toMap
-    def footerOf(p: Path): Option[StagedStats] = {
-      val reader = OrcFile.createReader(p, OrcFile.readerOptions(conf))
-      try {
-        val rowCount = reader.getNumberOfRows
-        val root = reader.getSchema
-        if (root.getCategory != TypeDescription.Category.STRUCT) return None
-        val stats = reader.getStatistics
-        val names = root.getFieldNames
-        val children = root.getChildren
-        val mins = scala.collection.mutable.Map.empty[String, Any]
-        val maxs = scala.collection.mutable.Map.empty[String, Any]
-        val nulls = scala.collection.mutable.Map.empty[String, Long]
-        var i = 0
-        while (i < names.size()) {
-          wanted.get(names.get(i)).foreach { f =>
-            val st = stats(children.get(i).getId)
-            nulls(f.name) = rowCount - st.getNumberOfValues
-            if (st.getNumberOfValues > 0) {
-              // the stats domain must match what StatsCodec.encode expects
-              // for the SPARK type — reject any unexpected pairing
-              val mnmx: Option[(Any, Any)] = (f.sparkType, st) match {
-                case (ByteType | ShortType | IntegerType | LongType,
-                    s: IntegerColumnStatistics) =>
-                  Some((Long.box(s.getMinimum), Long.box(s.getMaximum)))
-                case (TimestampNTZType, s: IntegerColumnStatistics) =>
-                  // Spark's ORC writer stores NTZ physically as a bigint of
-                  // epoch-micros (round-tripped via a metadata attribute),
-                  // so integer stats ARE the micros stats domain
-                  Some((Long.box(s.getMinimum), Long.box(s.getMaximum)))
-                case (FloatType | DoubleType, s: DoubleColumnStatistics) =>
-                  Some((Double.box(s.getMinimum), Double.box(s.getMaximum)))
-                case (BooleanType, s: BooleanColumnStatistics) =>
-                  Some((Boolean.box(s.getFalseCount == 0),
-                    Boolean.box(s.getTrueCount > 0)))
-                case (StringType, s: StringColumnStatistics) =>
-                  // null min/max with values present = truncated/unavailable
-                  if (s.getMinimum == null || s.getMaximum == null) return None
-                  Some((s.getMinimum, s.getMaximum))
-                case (DateType, s: DateColumnStatistics) =>
-                  Some((Long.box(s.getMinimumDayOfEpoch),
-                    Long.box(s.getMaximumDayOfEpoch)))
-                case (TimestampType, s: TimestampColumnStatistics) =>
-                  if (s.getMinimumUTC == null || s.getMaximumUTC == null) return None
-                  Some((tsMicros(s.getMinimumUTC), tsMicros(s.getMaximumUTC)))
-                case (d: DecimalType, s: DecimalColumnStatistics) =>
-                  // HiveDecimal strips trailing zeros; restore the column
-                  // scale so the encoding matches the scan-path external
-                  if (s.getMinimum == null || s.getMaximum == null) return None
-                  Some((s.getMinimum.bigDecimalValue().setScale(d.scale),
-                    s.getMaximum.bigDecimalValue().setScale(d.scale)))
-                // binary, nested, unexpected pairings: no safe mapping
-                case _ => return None
-              }
-              mnmx.foreach { case (mn, mx) =>
-                mins(f.name) = mn; maxs(f.name) = mx
-              }
-            }
-          }
-          i += 1
-        }
-        Some(StagedStats(p.toString, rowCount, mins.toMap, maxs.toMap,
-          nulls.toMap, Map.empty))
-      } finally reader.close()
-    }
-    val out = GraftTable.concurrently(files)(footerOf)
-    if (out.exists(_.isEmpty)) None else Some(out.map(_.get))
-  }
-
-  /** Map a parquet footer min/max to the external value [[StatsCodec.encode]]
-    * canonicalizes for the given Spark type; None = unsupported combination.
-    */
-  private def footerValue(dt: DataType,
-      primType: org.apache.parquet.schema.PrimitiveType,
-      v: Any): Option[Any] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.io.api.Binary
-    val prim = primType.getPrimitiveTypeName
-    (dt, prim) match {
-      case (ByteType | ShortType | IntegerType | DateType, INT32) => Some(v)
-      case (LongType, INT64) => Some(v)
-      case (TimestampType | TimestampNTZType, INT64) =>
-        // the stats domain is epoch-MICROS; a writer configured with
-        // spark.sql.parquet.outputTimestampType=TIMESTAMP_MILLIS stores
-        // footer min/max in millis — trusting the primitive type alone
-        // would make bounds 1000× too small and prune matching files
-        primType.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MICROS => Some(v)
-              case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                Some(java.lang.Long.valueOf(
-                  Math.multiplyExact(v.asInstanceOf[java.lang.Long].longValue(), 1000L)))
-              case _ => None // NANOS etc. → scan fallback
-            }
-          case _ => None // no annotation → unknown unit → scan fallback
-        }
-      case (FloatType, FLOAT) => Some(v)
-      case (DoubleType, DOUBLE) => Some(v)
-      case (BooleanType, BOOLEAN) => Some(v)
-      case (StringType, BINARY) =>
-        Some(new String(v.asInstanceOf[Binary].getBytes,
-          java.nio.charset.StandardCharsets.UTF_8))
-      case (d: DecimalType, INT32) =>
-        Some(java.math.BigDecimal.valueOf(v.asInstanceOf[Integer].longValue(), d.scale))
-      case (d: DecimalType, INT64) =>
-        Some(java.math.BigDecimal.valueOf(v.asInstanceOf[java.lang.Long], d.scale))
-      case (d: DecimalType, FIXED_LEN_BYTE_ARRAY | BINARY) =>
-        Some(new java.math.BigDecimal(
-          new java.math.BigInteger(v.asInstanceOf[Binary].getBytes), d.scale))
-      case _ => None
-    }
-  }
-
-  /** Ordering used to merge footer stats across row groups — must match the
-    * engine's own comparison semantics per type (UTF8 byte order for
-    * strings, numeric order otherwise).
-    */
-  private def footerOrdering(dt: DataType): Option[Ordering[Any]] = {
-    val o: Option[Ordering[_]] = dt match {
-      case ByteType | ShortType | IntegerType | DateType =>
-        Some(Ordering.by((x: Any) => x.asInstanceOf[Integer].intValue()))
-      case LongType | TimestampType | TimestampNTZType =>
-        Some(Ordering.by((x: Any) => x.asInstanceOf[java.lang.Long].longValue()))
-      case FloatType => Some(Ordering.by((x: Any) => x.asInstanceOf[java.lang.Float].floatValue()))
-      case DoubleType => Some(Ordering.by((x: Any) => x.asInstanceOf[java.lang.Double].doubleValue()))
-      case BooleanType => Some(Ordering.by((x: Any) => x.asInstanceOf[java.lang.Boolean].booleanValue()))
-      case StringType => Some(Ordering.comparatorToOrdering(
-        (a: Any, b: Any) => org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.asInstanceOf[String]))))
-      case _: DecimalType => Some(Ordering.by((x: Any) => x.asInstanceOf[java.math.BigDecimal]))
-      case _ => None
-    }
-    o.map(_.asInstanceOf[Ordering[Any]])
   }
 }
 
@@ -1634,35 +1336,10 @@ object GraftTable {
   /** Highest LSM level — fully-compacted files live here. */
   val MaxLevel = 5
 
-  private lazy val footerIoPool =
-    java.util.concurrent.Executors.newFixedThreadPool(16,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-footer-io"); t.setDaemon(true); t
-      })
-
-  /** Order-preserving bounded-concurrency map for driver-side metadata IO
-    * (parquet/ORC footer opens after a staged write — independent small
-    * reads whose serial latency was a measurable slice of per-commit
-    * fixed cost on C-directory partitioned appends).
-    */
-  private[table] def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.sizeIs <= 1) xs.map(f)
-    else xs.map(x => footerIoPool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
-      .map { fut =>
-        // Unwrap so callers see the worker's own exception type (e.g.
-        // IOException from a footer read), as the serial path threw it.
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException
-              if e.getCause != null => throw e.getCause
-        }
-      }
-
   /** File-format instance by name. */
   def fileFormatFor(name: String): org.apache.spark.sql.execution.datasources.FileFormat =
     name match {
-      case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+      case "orc" => new graft.formats.GraftOrcFileFormat
       case "avro" => new graft.formats.GraftAvroFileFormat
       case _ => new ParquetFileFormat
     }
@@ -1670,18 +1347,6 @@ object GraftTable {
   /** File-format instance for a schema version's data files. */
   def fileFormatOf(s: TableSchema): org.apache.spark.sql.execution.datasources.FileFormat =
     fileFormatFor(s.fileFormat)
-
-  /** DataSource provider name for `DataFrameWriter.format` / reader
-    * `.format` — built-in names for parquet/orc, the engine's own
-    * `FileFormat` class for avro (no spark-avro module in this build).
-    */
-  def sourceNameFor(format: String): String =
-    format match {
-      case "avro" => classOf[graft.formats.GraftAvroFileFormat].getName
-      case f => f
-    }
-
-  def sourceNameOf(s: TableSchema): String = sourceNameFor(s.fileFormat)
 
   /** Format of a data file from its extension (Spark writers always append
     * one, including through compression suffixes like `.snappy.parquet`).
@@ -1695,16 +1360,22 @@ object GraftTable {
     else if (path.endsWith(".avro")) Some("avro")
     else None
 
-  /** Max stored length of string min/max stats. */
-  val StatsStringCap = 64
-
-  /** Smallest string > every string with the given prefix: increment the
-    * rightmost incrementable char, drop the tail. None if impossible.
+  /** Smallest string > every string with the given prefix, in code-point
+    * (= UTF-8 byte) order: increment the rightmost code point that can be
+    * incremented (skipping the surrogate range), drop the tail. None if
+    * every code point is U+10FFFF.
     */
   def truncateUp(s: String): Option[String] = {
-    var i = s.length - 1
-    while (i >= 0 && s.charAt(i) == Char.MaxValue) i -= 1
-    if (i < 0) None else Some(s.substring(0, i) + (s.charAt(i) + 1).toChar)
+    val cps = s.codePoints().toArray
+    var i = cps.length - 1
+    while (i >= 0 && cps(i) == Character.MAX_CODE_POINT) i -= 1
+    if (i < 0) None
+    else {
+      val next = if (cps(i) + 1 == Character.MIN_SURROGATE) Character.MAX_SURROGATE + 1
+        else cps(i) + 1
+      cps(i) = next
+      Some(new String(cps, 0, i + 1))
+    }
   }
 
   def create(

@@ -84,17 +84,6 @@ object SparkShims {
     spark.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema, isStreaming = false)
   }
 
-  /** Spark's internal bloom-filter aggregate (the engine behind runtime
-    * filtering) as a usable Column — builds an
-    * org.apache.spark.util.sketch.BloomFilter over the child's LONG values.
-    */
-  def bloomFilterAgg(child: org.apache.spark.sql.Column, numBits: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val agg = new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-      expr(child), Literal(numBits / 16), Literal(numBits))
-    column(agg.toAggregateExpression())
-  }
-
   /** Driver-side xxhash64 of one literal, matching the executor-side
     * `xxhash64(col)` used when the bloom was built (seed 42).
     */
@@ -127,26 +116,40 @@ object SparkShims {
       org.apache.spark.paths.SparkPath.fromPathString(path),
       start, length, Array.empty, 0L, length)
 
-  /** Run `f` with Spark's planned-write optimization disabled on THIS
-    * thread (a cloned SQLConf via the thread-local override — concurrent
-    * queries on other threads keep their settings).
-    *
-    * Why: `V1Writes` wraps STRING partition columns in `empty2null(...)`,
-    * so its ordering check can never match a pre-arranged frame sorted by
-    * the raw partition column — it then inserts a partition-columns-only
-    * sort whose spill merge does not preserve the existing order of
-    * equal-key rows. For an LSM staging write that silently UNSORTS the
-    * primary-key order inside data files once the sorter spills (observed
-    * at the 6M-row sweep: ~360-row sorted chunks interleaved), and the
-    * merge read's k-way heap then resurrects stale versions. With the
-    * planned write off, FileFormatWriter's physical ordering check sees
-    * the real child ordering (partition cols are a prefix of our
-    * (dirs, pk, seq) sort) and writes the rows as arranged.
+  /** Write `df` as `format` files under `path`, one directory level per
+    * `partitionBy` column, through Spark's `FileFormatWriter` — the writer
+    * `DataFrameWriter.save` reaches, called directly (the pattern of Delta
+    * Lake's TransactionalWrite.writeFiles) so `statsTrackers` see every row
+    * of every file. No V1Writes rule runs here: the writer sorts only when
+    * the frame's own order does not already cluster the partition columns,
+    * so a pre-arranged (dirs, key) order reaches the files intact. The
+    * write is its own SQL execution, visible to QueryExecutionListeners.
     */
-  def withPlannedWriteDisabled[T](f: => T): T = {
-    val sqlConf = org.apache.spark.sql.internal.SQLConf.get.clone()
-    sqlConf.setConf(
-      org.apache.spark.sql.internal.SQLConf.PLANNED_WRITE_ENABLED, false)
-    org.apache.spark.sql.internal.SQLConf.withExistingConf(sqlConf)(f)
+  def writeFiles(df: org.apache.spark.sql.DataFrame,
+      format: org.apache.spark.sql.execution.datasources.FileFormat,
+      path: String, partitionBy: Seq[String], options: Map[String, String],
+      statsTrackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker])
+      : Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val session = ds.sparkSession
+    val qe = session.sessionState.executePlan(ds.logicalPlan)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val partitionColumns = partitionBy.map(n => plan.output.find(_.name == n)
+        .getOrElse(throw new IllegalArgumentException(s"no column $n to partition by")))
+      val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
+      val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+        session.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString, path)
+      // the basic tracker reports the task output metrics (bytes, records)
+      val basic = new BasicWriteJobStatsTracker(
+        new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+        BasicWriteJobStatsTracker.metrics)
+      FileFormatWriter.write(session, plan, format, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output), hadoopConf,
+        partitionColumns, None, basic +: statsTrackers, options)
+    }
   }
 }

@@ -498,37 +498,60 @@ class FeatureSpec extends SparkSpec {
     assert(out(0).getLong(0) == 0L && out(0).getString(1) == "2024-03")
   }
 
-  test("footer-derived stats equal scan-derived stats across all stat types") {
-    import spark.implicits._
+  /** Every live file's writer-collected stats and bloom sidecar bytes
+    * equal the scan-aggregate oracle's over the same files. */
+  private def assertOracleStats(t: GraftTable): Unit = {
+    val files = t.store.liveFiles(t.store.latestSnapshot.get)
+    val ref = ReferenceStats.of(t, files)
+    assert(files.nonEmpty && ref.keySet == files.map(_.path).toSet)
+    files.foreach { f =>
+      val r = ref(f.path)
+      assert(f.rowCount == r.rowCount, f.path)
+      assert(f.stats == r.stats, s"stats diverged in ${f.path}:\n" +
+        s"  writer: ${f.stats.toSeq.sortBy(_._1)}\n  oracle: ${r.stats.toSeq.sortBy(_._1)}")
+      assert(f.blooms.keySet == r.blooms.keySet, f.path)
+      f.blooms.foreach { case (n, rel) =>
+        val in = t.store.fs.open(new org.apache.hadoop.fs.Path(t.store.rootPath, rel))
+        val bytes = try in.readAllBytes() finally in.close()
+        assert(bytes.sameElements(r.blooms(n)), s"bloom of $n diverged in ${f.path}")
+      }
+    }
+  }
+
+  test("writer-collected stats equal the scan-aggregate oracle across all stat types") {
     // mixed-type frame incl nulls, long strings past the 64-char cap,
-    // decimals, dates and both timestamp flavors
+    // decimals, dates, booleans and both timestamp flavors
     val df = sf("orders").limit(500)
       .withColumn("dec", (col("o_totalprice") * 100).cast("decimal(12,2)"))
       .withColumn("dt", to_date(col("o_orderdate")))
       .withColumn("ntz", col("o_orderdate").cast("timestamp_ntz"))
+      .withColumn("flag", col("o_orderkey") % 2 === 0)
+      .withColumn("price32", col("o_totalprice").cast("float"))
       .withColumn("longstr",
         when(col("o_orderkey") % 3 === 0, lit(null))
           .otherwise(concat(lit("x" * 80), col("o_orderkey").cast("string"))))
       .cache()
-    // footer path: plain parquet table
-    val tf = GraftTable.create(spark, tmpTable(), df.schema,
-      options = Map("write-only" -> "true"))
-    tf.append(df)
-    // scan path: identical table with a bloom column (forces the fallback)
-    val ts = GraftTable.create(spark, tmpTable(), df.schema,
-      options = Map("write-only" -> "true",
-        "file-index.bloom.columns" -> "o_orderkey"))
-    ts.append(df)
-    def statsOf(t: GraftTable) = t.store
-      .liveFiles(t.store.latestSnapshot.get)
-      .sortBy(_.path).map(f => (f.rowCount, f.stats.toSeq.sortBy(_._1)))
-    val (a, b) = (statsOf(tf), statsOf(ts))
-    assert(a.map(_._1).sum == b.map(_._1).sum)
-    // same number of files written identically → compare pairwise
-    assert(a.size == b.size)
-    a.zip(b).foreach { case ((ra, sa), (rb, sb)) =>
-      assert(ra == rb)
-      assert(sa == sb, s"stats diverged:\n  footer: $sa\n  scan:   $sb")
+    val cnt = df.filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")).count()
+    assert(cnt > 0)
+    for (fmt <- Seq("parquet", "orc", "avro")) {
+      // partitioned append table with bloom columns of two types
+      val ta = GraftTable.create(spark, tmpTable(), df.schema,
+        partitionKeys = Seq("o_orderstatus"),
+        options = Map("write-only" -> "true", "file.format" -> fmt,
+          "file-index.bloom.columns" -> "o_orderkey,o_clerk"))
+      ta.append(df)
+      assertOracleStats(ta)
+      // bucketed PK table: sequence/kind columns and bucket dirs
+      val tk = GraftTable.create(spark, tmpTable(), df.schema,
+        primaryKeys = Seq("o_orderkey"),
+        options = Map("write-only" -> "true", "file.format" -> fmt, "bucket" -> "2",
+          "file-index.bloom.columns" -> "o_orderkey"))
+      tk.upsert(df)
+      assertOracleStats(tk)
+      // pruning correctness through the collected stats
+      for (t <- Seq(ta, tk)) assert(t.toDF
+        .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
+        .count() == cnt, fmt)
     }
   }
 
@@ -798,8 +821,7 @@ class FeatureSpec extends SparkSpec {
     assert(e.getMessage.contains("unsupported file.format"), e.getMessage)
   }
 
-  test("ORC footer-derived stats equal scan-derived stats") {
-    import spark.implicits._
+  test("ORC writer-collected stats equal the scan-aggregate oracle") {
     val df = sf("orders").limit(500)
       .withColumn("dec", (col("o_totalprice") * 100).cast("decimal(12,2)"))
       .withColumn("dt", to_date(col("o_orderdate")))
@@ -808,62 +830,49 @@ class FeatureSpec extends SparkSpec {
         when(col("o_orderkey") % 3 === 0, lit(null))
           .otherwise(concat(lit("x" * 80), col("o_orderkey").cast("string"))))
       .cache()
-    // footer path: plain ORC table
     val tf = GraftTable.create(spark, tmpTable(), df.schema,
       options = Map("write-only" -> "true", "file.format" -> "orc"))
     tf.append(df)
-    // scan path: identical ORC table with a bloom column (forces fallback)
+    assertOracleStats(tf)
+    // and with a bloom column: the sidecar bytes match too
     val ts = GraftTable.create(spark, tmpTable(), df.schema,
       options = Map("write-only" -> "true", "file.format" -> "orc",
         "file-index.bloom.columns" -> "o_orderkey"))
     ts.append(df)
-    def statsOf(t: GraftTable) = t.store
-      .liveFiles(t.store.latestSnapshot.get)
-      .sortBy(_.path).map(f => (f.rowCount, f.stats.toSeq.sortBy(_._1)))
-    val (a, b) = (statsOf(tf), statsOf(ts))
-    assert(a.size == b.size && a.nonEmpty)
-    a.zip(b).foreach { case ((ra, sa), (rb, sb)) =>
-      assert(ra == rb)
-      assert(sa == sb, s"stats diverged:\n  footer: $sa\n  scan:   $sb")
-    }
-    // pruning correctness through the footer-stats path
+    assertOracleStats(ts)
+    // pruning correctness through the collected stats
     val cnt = df.filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")).count()
     assert(cnt > 0 && tf.toDF
       .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
       .count() == cnt)
   }
 
-  test("footer stats stay in the micros domain under TIMESTAMP_MILLIS output") {
+  test("writer-collected stats stay in the micros domain under TIMESTAMP_MILLIS output") {
     // a writer configured for millis parquet timestamps must not poison
     // the epoch-micros stats domain (bounds 1000x too small would let
-    // pruning skip files that contain matching rows)
+    // pruning skip files that contain matching rows), and bounds must
+    // describe the STORED values, which lose their sub-millisecond digits
     val df = sf("orders").limit(500)
       .withColumn("ntz", col("o_orderdate").cast("timestamp_ntz"))
+      .withColumn("sub", timestamp_micros(unix_micros(col("o_orderdate").cast("timestamp")) +
+        col("o_orderkey") % 1000 + 1))
       .cache()
     val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
     try {
       val tf = GraftTable.create(spark, tmpTable(), df.schema,
-        options = Map("write-only" -> "true"))
+        options = Map("write-only" -> "true", "file-index.bloom.columns" -> "sub"))
       tf.append(df)
-      // scan-derived twin (bloom column forces the non-footer path)
-      val ts = GraftTable.create(spark, tmpTable(), df.schema,
-        options = Map("write-only" -> "true",
-          "file-index.bloom.columns" -> "o_orderkey"))
-      ts.append(df)
-      def statsOf(t: GraftTable) = t.store
-        .liveFiles(t.store.latestSnapshot.get)
-        .sortBy(_.path).map(f => (f.rowCount, f.stats.toSeq.sortBy(_._1)))
-      statsOf(tf).zip(statsOf(ts)).foreach { case ((ra, sa), (rb, sb)) =>
-        assert(ra == rb)
-        assert(sa == sb, s"stats diverged:\n  footer: $sa\n  scan:   $sb")
-      }
+      assertOracleStats(tf)
       // pruning correctness: a timestamp range filter must still see rows
       val cnt = df.filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")).count()
       assert(cnt > 0)
       assert(tf.toDF
         .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
         .count() == cnt)
+      // the smallest stored value is found by an equality filter
+      val lo = tf.toDF.agg(min("sub")).head.getTimestamp(0)
+      assert(tf.toDF.filter(col("sub") === lit(lo)).count() >= 1)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
       case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")

@@ -55,6 +55,39 @@ class StreamingDedupSpec extends SparkSpec {
     assert(index.toDF.count() == 6)
   }
 
+  /** A batch signed at numHashes=32, for consumers banding at 64. */
+  private def signedAt32(batch: org.apache.spark.sql.DataFrame) = {
+    val index32 = Dedup.buildSigIndex(batch, "doc_id", "body", tmpTable(), numHashes = 32)
+    val pair = Dedup.sigFrameFor(index32, batch, "doc_id", "body")
+    assert(pair._2 == 32)
+    pair
+  }
+
+  test("appendToSigIndex refuses signatures of another family") {
+    val (_, index) = mkCorpusAndIndex()
+    val batch = Seq((101L, text(10))).toDF("doc_id", "body")
+    val e = intercept[IllegalArgumentException](Dedup.appendToSigIndex(
+      index, batch, "doc_id", "body", precomputedSigs = Some(signedAt32(batch))))
+    assert(e.getMessage.contains("numHashes=32"), e.getMessage)
+    assert(index.toDF.count() == 3) // nothing committed
+  }
+
+  test("nearDupPairs refuses signatures of another family") {
+    val batch = Seq((101L, text(10)), (102L, text(10, perturb = 3))).toDF("doc_id", "body")
+    val e = intercept[IllegalArgumentException](Dedup.nearDupPairs(
+      batch, "doc_id", "body", precomputedSigs = Some(signedAt32(batch))))
+    assert(e.getMessage.contains("numHashes=32"), e.getMessage)
+  }
+
+  test("nearDupPairsAgainst refuses signatures of another family") {
+    val (corpus, index) = mkCorpusAndIndex()
+    val batch = Seq((103L, text(1, perturb = 5))).toDF("doc_id", "body")
+    val e = intercept[IllegalArgumentException](Dedup.nearDupPairsAgainst(
+      batch, "doc_id", "body", index, corpus.toDF,
+      precomputedSigs = Some(signedAt32(batch))))
+    assert(e.getMessage.contains("numHashes=32"), e.getMessage)
+  }
+
   test("re-ingest of an existing corpus id is dropped, not duplicated") {
     val (corpus, index) = mkCorpusAndIndex()
     // doc 1 is ALREADY in the corpus (a re-crawl): same-id pairs are
