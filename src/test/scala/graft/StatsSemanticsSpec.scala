@@ -53,6 +53,25 @@ class StatsSemanticsSpec extends SparkSpec {
       col("x") === 0.0, col("x") >= 0.0)
   }
 
+  test("MIN/MAX answered from stats keep the sign of a zero") {
+    for (v <- Seq(0.0, -0.0)) {
+      val df = Seq((1L, v)).toDF("k", "x")
+      val t = GraftTable.create(spark, tmpTable(), df.schema)
+      t.append(df)
+      val tbl = new graft.spark.v2.GraftSparkTable(spark, t,
+        org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty[String], "t"),
+        t.store.latestSnapshot)
+      val agg = org.apache.spark.sql.graft.SparkShims.ofRows(spark,
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          .create(tbl, None, None)).agg(min("x"), max("x"))
+      assert(agg.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+      val r = agg.head
+      // 0.0 == -0.0 numerically: compare the bits
+      def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+      assert(bits(r.getDouble(0)) == bits(v) && bits(r.getDouble(1)) == bits(v), s"$v: $r")
+    }
+  }
+
   test("NaN is the greatest double for file skipping") {
     val df = Seq((1L, 1.0), (2L, Double.NaN)).toDF("k", "x")
     check("{1.0, NaN}", df, col("x") > 5.0, col("x") === Double.NaN)
