@@ -141,11 +141,13 @@ object Bench {
       // server over the compacted PK table answers a 2000-key probe set
       // in 4 batches — times the batched bucket-pruned miss path + HTTP
       // round trips; repeat probes would be cache-speed (LookupServiceSpec).
-      // r20: the 4 independent batches are IN FLIGHT CONCURRENTLY
+      // Two methodology breaks (BASELINE.md §remote_lookup): r20 sends the
+      // 4 independent batches IN FLIGHT CONCURRENTLY
       // (LookupClient.lookupBatches — the many-stream-partitions
-      // production shape; guide §2.6 overlapping independent jobs). Same
-      // probe set, same 4 batches, same cold server; wall is max(batch)
-      // instead of sum — r19 sequential medians: 0.705/1.208 s.
+      // production shape), so wall is max(batch) instead of sum — r19
+      // sequential medians: 0.705/1.208 s; and each batch's misses are
+      // now read on the server's handler thread (GraftScan.pointRead), not
+      // by a Spark job per batch.
       results("remote_lookup") = time {
         val srv = new graft.service.LookupServer(pk).start()
         try {

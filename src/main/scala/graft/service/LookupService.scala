@@ -1,8 +1,13 @@
 package graft.service
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.core.Snapshot
+import graft.spark.v2.GraftScan
 import graft.table.GraftTable
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, CreateNamedStruct, Literal, StructsToJson}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
@@ -13,11 +18,12 @@ import java.nio.charset.StandardCharsets
   * Spark-first shape: the server pins a table handle and answers pk
   * probes over HTTP (JDK `com.sun.net.httpserver` — zero dependencies).
   * Probes arrive BATCHED — the natural unit of a streaming lookup join's
-  * micro-batch — and each batch of cache misses becomes ONE bucket-pruned
-  * Spark job (`isin` / OR-of-ANDs over the primary key, which the file
-  * index prunes to the keys' buckets), not one job per key. Results land
-  * in a key-level LRU so hot keys (the lookup-join steady state) are
-  * served memory-speed without touching Spark at all — the cache role the
+  * micro-batch — and each batch of cache misses is resolved by ONE read on
+  * the driver ([[GraftScan.pointRead]], shared with `GraftTable.lookup`):
+  * the scan's planner prunes to the keys' buckets and its reader merges
+  * them on the handler thread, with no Spark job. Results land in a
+  * key-level LRU so hot keys (the lookup-join steady state) are served
+  * memory-speed without reading the table at all — the cache role the
   * reference fills with its LookupFile/RocksDB layer.
   *
   * Scale shape: the server is a thin stateless-ish front over the
@@ -47,17 +53,15 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
   // newer snapshot exists (one latest-snapshot-id stat per interval, no
   // data read) — without it a long-running enrichment stream would serve
   // stale dims forever unless the operator remembers to call refresh().
-  @volatile private var pinnedSnapshotId: Long =
-    table.store.latestSnapshotId.getOrElse(0L)
-  @volatile private var pinnedDf = table.toDF // resolves the snapshot eagerly
+  // None = the table had no snapshot yet: every probe is absent.
+  @volatile private var pinned: Option[Snapshot] = table.store.latestSnapshot
   // pin generation: bumped by every refresh so an in-flight batch that
   // scanned the PREVIOUS pin cannot repopulate the freshly cleared cache
   // with old-snapshot rows (they would serve as stale hits until the next
   // advance) — lookupBatch re-checks the era before its write-through
   private val pinEra = new java.util.concurrent.atomic.AtomicLong()
   def refresh(): Unit = synchronized {
-    pinnedSnapshotId = table.store.latestSnapshotId.getOrElse(0L)
-    pinnedDf = table.toDF
+    pinned = table.store.latestSnapshot
     pinEra.incrementAndGet()
     cache.clear()
   }
@@ -70,14 +74,15 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
       ex.scheduleWithFixedDelay(() => {
         try {
           // cheap stat: re-pin (and drop the cache) only on a real advance
-          if (table.store.latestSnapshotId.getOrElse(0L) != pinnedSnapshotId)
-            refresh()
+          if (table.store.latestSnapshotId != pinned.map(_.id)) refresh()
         } catch { case _: Exception => () } // transient FS error: retry next tick
       }, refreshIntervalMs, refreshIntervalMs, java.util.concurrent.TimeUnit.MILLISECONDS)
       Some(ex)
     }
 
-  /** Spark jobs run so far — observability + lets tests assert cache hits. */
+  /** Miss batches resolved from the table so far (one per batch with a
+    * cache miss) — observability + lets tests assert cache hits.
+    */
   private val jobsRunCount = new java.util.concurrent.atomic.AtomicLong()
   def jobsRun: Long = jobsRunCount.get()
 
@@ -131,9 +136,10 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
   private def jsonStr(s: String): String =
     graft.core.Json.write(graft.core.Json.obj().put("m", s)).drop(5).dropRight(1)
 
-  /** Canonical cache key: every component is rendered THROUGH the pk
-    * column's Spark type (stringify → Catalyst cast → stringify), applied
-    * identically to JSON-parsed probe values and scanned row values. A raw
+  /** Canonical cache key of a probe: every component is rendered THROUGH
+    * the pk column's Spark type (stringify → Catalyst cast in the session
+    * time zone → stringify the Catalyst value), which is how a found row's
+    * own Catalyst pk values render (see [[readMisses]]). A raw
     * `String.valueOf` on both sides diverges for types whose renderings
     * differ (DecimalType probe "5" vs row "5.00", timestamps) and would
     * report an existing row absent — and then negatively cache the miss.
@@ -143,19 +149,17 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
     // free of raw control bytes): cannot collide with any cast rendering
     case (null, _) => "\u0000" + "null"
     case (v, f) =>
-      val cast = org.apache.spark.sql.catalyst.expressions.Cast(
-        org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(String.valueOf(v)),
-          org.apache.spark.sql.types.StringType),
-        f.sparkType, Some(java.util.TimeZone.getDefault.getID))
-      String.valueOf(cast.eval(null))
+      String.valueOf(Cast(Literal(UTF8String.fromString(String.valueOf(v)), StringType),
+        f.sparkType, Some(SQLConf.get.sessionLocalTimeZone)).eval(null))
   }
 
   /** Resolve a batch of probes: cache hits are free; all misses fold into
-    * ONE bucket-pruned Spark job. Returns found rows' JSON (order
-    * unspecified, duplicates collapsed).
+    * ONE bucket-pruned read of the pinned snapshot on this thread. Returns
+    * found rows' JSON (order unspecified, duplicates collapsed). Runs with
+    * the table's session active: handler threads have none, and the casts,
+    * the read and the JSON rendering read its conf (time zone, ANSI mode).
     */
-  def lookupBatch(keys: Seq[Seq[Any]]): Seq[String] = {
+  def lookupBatch(keys: Seq[Seq[Any]]): Seq[String] = GraftScan.withSession(table.spark) {
     // canonical key → one representative raw probe; dup probes (including
     // rendering-only dups like 5 vs "5.00" on a decimal pk) collapse here
     val byCk = scala.collection.mutable.LinkedHashMap[Seq[String], Seq[Any]]()
@@ -169,24 +173,9 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
       if (cached != null) { resolved(ck) = cached; false } else true
     }
     if (misses.nonEmpty) {
-      val missKeys = misses.map(_._2)
-      val cond =
-        if (pks.size == 1)
-          col(pks.head).isin(missKeys.map(k =>
-            lit(k.head).cast(pkFields.head.sparkType)): _*)
-        else missKeys.map(k => pks.zip(k).zip(pkFields).map { case ((c, v), f) =>
-          col(c) === lit(v).cast(f.sparkType)
-        }.reduce(_ && _)).reduce(_ || _)
       jobsRunCount.incrementAndGet()
       val era = pinEra.get()
-      val df = pinnedDf
-      val rows = df
-        .select(to_json(struct(df.columns.map(col): _*)).as("__j") +:
-          pks.map(col): _*)
-        .filter(cond)
-        .collect() // O(probe batch) rows — bounded by the request size
-      val foundByKey = rows.map(r =>
-        cacheKey(pks.indices.map(i => r.get(i + 1))) -> r.getString(0)).toMap
+      val foundByKey = pinned.fold(Map.empty[Seq[String], String])(readMisses(_, misses.map(_._2)))
       // if refresh() advanced the pin while we scanned, the response is
       // still served from this batch's (consistent, old-pin) resolution,
       // but the write-through is SKIPPED: old-snapshot rows must not
@@ -202,11 +191,29 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
     byCk.keysIterator.flatMap(ck => resolved(ck)).toSeq
   }
 
+  /** Found rows of `snap` for raw probe keys, by cache key, each rendered
+    * as `to_json(struct(*))` renders it. Keys cast to the pk types as
+    * `lit(v).cast(type)` does; the read matches rows to them in the
+    * Catalyst domain, so only found rows render a cache key.
+    */
+  private def readMisses(snap: Snapshot, keys: Seq[Seq[Any]]): Map[Seq[String], String] = {
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    val (out, rows) = GraftScan.pointRead(table, snap, keys.map(_.zip(pkFields).map {
+      case (v, f) => Cast(Literal(v), f.sparkType, tz).eval()
+    }))
+    val json = StructsToJson(Map.empty, CreateNamedStruct(out.fields.toSeq.zipWithIndex.flatMap {
+      case (f, i) => Seq(Literal(f.name), BoundReference(i, f.dataType, f.nullable))
+    }), tz).replacement
+    val pkIdx = pks.map(out.fieldIndex)
+    rows.map(r => pkIdx.map(i => String.valueOf(r.get(i, out(i).dataType))) ->
+      json.eval(r).toString).toMap
+  }
+
   def start(): LookupServer = {
     // a real pool, not the calling thread: concurrent probes from many
     // stream partitions must not serialize through one HTTP handler
-    // (cache misses racing on the same key run idempotent duplicate jobs
-    // at worst — the LRU is a synchronized map)
+    // (cache misses racing on the same key read it twice at worst — the
+    // LRU is a synchronized map)
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
     server.start(); this
   }
@@ -260,9 +267,9 @@ object LookupClient {
 
   /** Several independent probe batches IN FLIGHT AT ONCE (async HTTP):
     * the production shape of a streaming lookup join, where many stream
-    * partitions probe concurrently — the server's handler pool turns each
-    * batch's misses into its own Spark job and the scheduler overlaps
-    * them, so wall time is max(batch) instead of sum(batch). Results are
+    * partitions probe concurrently — the server's handler pool resolves
+    * each batch's misses on its own handler thread, and the threads overlap
+    * the reads, so wall time is max(batch) instead of sum(batch). Results are
     * returned per batch, in request order — element i is exactly what
     * `lookupBatch(endpoint, batches(i))` returns, and a failure throws
     * the same exception `lookupBatch` would.

@@ -249,8 +249,8 @@ object GraftFileIndex {
   /** Buckets a fully-pinned pk equality can touch on a DYNAMIC-bucket
     * table, resolved from the snapshot's durable hash index (the
     * key-hash → bucket parquet files; reference: the HashBucketIndex the
-    * dynamic-bucket point-lookup path loads). One columnar, pushdown-
-    * filtered read of the index — at 100 TB a point lookup reads the
+    * dynamic-bucket point-lookup path loads). One pushdown-filtered read
+    * of the index on the driver — at 100 TB a point lookup reads the
     * index plus exactly the mapped bucket instead of EVERY bucket.
     * None = not a pinned lookup (or no index yet — all buckets);
     * Some(empty) = key provably absent.
@@ -258,14 +258,38 @@ object GraftFileIndex {
   def dynamicBuckets(spark: SparkSession, store: FileStore, schema: TableSchema,
       indexFiles: Seq[String], filters: Seq[Filter]): Option[Set[Int]] = {
     if (!schema.dynamicBucket || indexFiles.isEmpty) return None
-    import org.apache.spark.sql.functions.{col, lit}
     pkHashFromFilters(schema, filters).map { h =>
-      spark.read
-        .parquet(indexFiles.map(d => new Path(store.rootPath, d).toString): _*)
-        .filter(col("__kh") === lit(h))
-        .select(GraftMeta.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet // O(hash collisions) rows
+      indexProbe(spark, store, indexFiles, Literal(h),
+        StructType(Seq(StructField(GraftMeta.BucketCol, IntegerType))))
+        .map(_.getInt(1)).toSet // O(hash collisions) rows
     }
+  }
+
+  /** Rows of the parquet index deltas under `indexDirs` whose `__kh`
+    * equals `kh`, as (`__kh` +: `cols`) — read on the calling thread, no
+    * Spark job, so planning a point lookup stays on the driver. The pushed
+    * equality skips row groups whose `__kh` range excludes the hash.
+    */
+  private def indexProbe(spark: SparkSession, store: FileStore, indexDirs: Seq[String],
+      kh: Literal, cols: StructType): Seq[InternalRow] = {
+    val schema = StructType(StructField("__kh", kh.dataType) +: cols.fields)
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
+        Seq(SEqualTo("__kh", kh.value)),
+        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    indexDirs.flatMap(d => store.fs.listStatus(new Path(store.rootPath, d)).toSeq)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .flatMap { st =>
+        val rows = read(org.apache.spark.sql.graft.SparkShims.partitionedFile(
+          InternalRow.empty, st.getPath.toString, 0, st.getLen))
+        try rows.filter(_.get(0, kh.dataType) == kh.value).map(_.copy()).toVector
+        finally rows match {
+          case c: AutoCloseable => c.close()
+          case _ => ()
+        }
+      }
   }
 
   /** xxhash64(seed 42) of a fully-pinned pk tuple — identical to the write
@@ -299,13 +323,10 @@ object GraftFileIndex {
       schema: TableSchema, indexFiles: Seq[String],
       filters: Seq[Filter]): Option[Set[(String, Int)]] = {
     if (!schema.globalIndexEnabled || indexFiles.isEmpty) return None
-    import org.apache.spark.sql.functions.{col, lit}
     pkXxHashFromFilters(schema, filters).map { h =>
-      spark.read
-        .parquet(indexFiles.map(d => new Path(store.rootPath, d).toString): _*)
-        .filter(col("__kh") === lit(h))
-        .select(col("__pt"), col(GraftMeta.BucketCol)).distinct()
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSet // O(collisions)
+      indexProbe(spark, store, indexFiles, Literal(h), StructType(Seq(
+        StructField("__pt", StringType), StructField(GraftMeta.BucketCol, IntegerType))))
+        .map(r => (r.getUTF8String(1).toString, r.getInt(2))).toSet // O(collisions)
     }
   }
 

@@ -7,7 +7,7 @@ import graft.spark.GraftFileIndex
 import graft.table.GraftTable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, CreateNamedStruct, Expression, GenericInternalRow, GetStructField, If, IsNull, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.PartitionedFile
@@ -848,12 +848,9 @@ class GraftReaderFactory(
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     val identityOut = outIdx == rowSchema.indices
+    val files = new OpenFiles
     val batches: Iterator[ColumnarBatch] = p.files.iterator.flatMap { f =>
-      val plan = plans((f.schemaId, f.dvPath.isDefined,
-        GraftTable.formatNameOfPath(f.path)))
-      val pf = org.apache.spark.sql.graft.SparkShims.partitionedFile(
-        partitionRow(f), s"$tableRoot/${f.path}", 0, f.length)
-      plan.readFunc(pf).asInstanceOf[Iterator[AnyRef]].map {
+      files.open(f).map {
         case b: ColumnarBatch =>
           if (identityOut) b
           else new ColumnarBatch(outIdx.map(b.column).toArray, b.numRows())
@@ -866,20 +863,17 @@ class GraftReaderFactory(
       override def next(): Boolean =
         if (batches.hasNext) { current = batches.next(); true } else false
       override def get(): ColumnarBatch = current
-      override def close(): Unit = () // file readers close via the task-completion listener
+      override def close(): Unit = files.close()
     }
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
+    val files = new OpenFiles
 
     def rowsOf(f: GraftFileInfo): Iterator[InternalRow] = {
-      val plan = plans((f.schemaId, f.dvPath.isDefined,
-        GraftTable.formatNameOfPath(f.path)))
-      val ptRow = partitionRow(f)
-      val pf = org.apache.spark.sql.graft.SparkShims.partitionedFile(
-        ptRow, s"$tableRoot/${f.path}", 0, f.length)
-      val raw = plan.readFunc(pf).asInstanceOf[Iterator[AnyRef]].flatMap {
+      val plan = planOf(f)
+      val raw = files.open(f).flatMap {
         case b: ColumnarBatch => b.rowIterator().asScala
         case r: InternalRow => Iterator.single(r)
       }
@@ -966,7 +960,36 @@ class GraftReaderFactory(
         if (iter.hasNext) { current = iter.next(); true } else false
       }
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = files.close()
+    }
+  }
+
+  private def planOf(f: GraftFileInfo): SchemaReadPlan =
+    plans((f.schemaId, f.dvPath.isDefined, GraftTable.formatNameOfPath(f.path)))
+
+  /** The file iterators one reader has opened. `close()` releases them, so
+    * a reader dropped mid-read holds no file handle even where no task-
+    * completion listener runs (a read on the driver). Iterators close
+    * themselves at exhaustion too; closing twice is harmless.
+    */
+  private class OpenFiles {
+    private val opened = mutable.ArrayBuffer.empty[AutoCloseable]
+
+    def open(f: GraftFileInfo): Iterator[AnyRef] = {
+      val it = planOf(f).readFunc(org.apache.spark.sql.graft.SparkShims.partitionedFile(
+        partitionRow(f), s"$tableRoot/${f.path}", 0, f.length))
+      it match {
+        case c: AutoCloseable => opened += c
+        case _ => ()
+      }
+      it.asInstanceOf[Iterator[AnyRef]]
+    }
+
+    /** Closes every iterator, then rethrows the first failure. */
+    def close(): Unit = {
+      val failures = opened.toList.flatMap(c => scala.util.Try(c.close()).failed.toOption)
+      opened.clear()
+      failures.headOption.foreach(throw _)
     }
   }
 
@@ -1015,6 +1038,76 @@ object GraftScan {
       else (table.partitionSchema(schema).fieldNames.toSeq ++ schema.primaryKeys).distinct
     org.apache.spark.sql.graft.SparkShims.rowsFrame(table.spark, rdd, out, ordering,
       sizeInBytes = files.map(_.size).sum)
+  }
+
+  /** The rows of `snapshot` whose primary key equals one of `keys`
+    * (Catalyst values in primary-key order), read on the calling thread
+    * with no Spark job (reference: LocalTableQuery.lookup reads the key's
+    * bucket levels in-process). The keys become pk filters, so planning
+    * prunes as a filtered scan does (bucket, dynamic-bucket and global
+    * index, stats, bloom). Each planned partition drains through the scan's
+    * own reader: DV masks, schema alignment, defaults, the k-way merge. The
+    * scan leaves row filtering to its consumer, so rows are matched to the
+    * keys here. Returns the schema the rows are laid out in and the
+    * matching rows, at most one per key.
+    */
+  def pointRead(table: GraftTable, snapshot: Snapshot,
+      keys: Seq[Seq[Any]]): (StructType, Seq[InternalRow]) = withSession(table.spark) {
+    val out = table.schema.structType
+    val pks = table.schema.primaryKeys
+    val pkIdx = pks.map(out.fieldIndex)
+    val pkTypes = pkIdx.map(out(_).dataType)
+    // distinct keys by Spark's equality: -0.0 = 0.0, binary by content
+    def norm(v: Any): Any = v match {
+      case d: Double if d == 0.0d => 0.0d
+      case f: Float if f == 0.0f => 0.0f
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case other => other
+    }
+    val byNorm = mutable.LinkedHashMap.empty[Seq[Any], Seq[Any]]
+    keys.filter(_.forall(_ != null)).foreach(k => byNorm.getOrElseUpdate(k.map(norm), k))
+    val found = mutable.ArrayBuffer.empty[InternalRow]
+    if (byNorm.nonEmpty) {
+      val toScala = pkTypes.map(CatalystTypeConverters.createToScalaConverter)
+      def eqs(k: Seq[Any]): Seq[Filter] = pks.indices.map(i =>
+        org.apache.spark.sql.sources.EqualTo(pks(i), toScala(i)(k(i))))
+      val wanted = byNorm.values.toSeq
+      val filters: Seq[Filter] =
+        if (wanted.size == 1) eqs(wanted.head)
+        else if (pks.size == 1)
+          Seq(org.apache.spark.sql.sources.In(pks.head, wanted.map(k => toScala.head(k.head)).toArray))
+        else Seq(wanted.map(k => eqs(k).reduce(org.apache.spark.sql.sources.And(_, _)): Filter)
+          .reduce(org.apache.spark.sql.sources.Or(_, _)))
+      val scan = new GraftScan(table.spark, table, Some(snapshot), out, filters, None)
+      val parts = scan.planInputPartitions().iterator
+      val factory = scan.createReaderFactory()
+      val pending = mutable.HashSet(byNorm.keys.toSeq: _*)
+      while (pending.nonEmpty && parts.hasNext) {
+        val reader = factory.createReader(parts.next())
+        try {
+          while (pending.nonEmpty && reader.next()) {
+            val r = reader.get()
+            if (pending.remove(pkIdx.indices.map(i => norm(r.get(pkIdx(i), pkTypes(i))))))
+              found += r.copy()
+          }
+        } finally reader.close()
+      }
+    }
+    (out, found.toSeq)
+  }
+
+  /** Run `f` with `spark` as the thread's active session, so Catalyst reads
+    * its conf (time zone, ANSI mode) on threads that have none, such as a
+    * server's handler threads.
+    */
+  def withSession[T](spark: SparkSession)(f: => T): T = {
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try f
+    finally prev match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 
   /** Restrict a table field to a nested-pruned requested type: children

@@ -3,11 +3,13 @@ package graft.table
 import graft.GraftMeta._
 import graft.core._
 import graft.spark.GraftFileIndex
+import graft.spark.v2.GraftScan
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import java.util.UUID
 
@@ -295,14 +297,35 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       rawUnion(files, schema).select(schema.fields.map(f => col(f.name)): _*)
   }
 
-  /** Point lookup: pk → row. Prunes to one bucket via the FileIndex, then
-    * first match (reference: table/query/LocalTableQuery.java:55,159 — their
-    * LSM lookup; ours rides the pruned scan).
+  /** Point lookup: pk → row of the latest snapshot, read on the driver
+    * (reference: table/query/LocalTableQuery.java:55,159 reads the key's
+    * bucket levels in-process): [[GraftScan.pointRead]]
+    * plans the key's bucket with the scan's own pruning and drains its
+    * reader, merge included — no Spark job. `pkValues` names every pk
+    * column and nothing else. A value compares as `col === lit(value)`
+    * does: one of another type matches only if it converts to the column's
+    * type and back unchanged. The row has the external types `collect()`
+    * returns.
     */
   def lookup(pkValues: Map[String, Any]): Option[Row] = {
-    require(isPrimaryKeyed, "lookup requires a primary-key table")
-    val cond = schema.primaryKeys.map(k => col(k) === lit(pkValues(k))).reduce(_ && _)
-    toDF.filter(cond).limit(1).collect().headOption
+    val ts = schema
+    require(ts.isPrimaryKeyed, "lookup requires a primary-key table")
+    val pks = ts.primaryKeys
+    pkValues.keys.foreach(c => require(pks.contains(c),
+      s"lookup: $c is not a primary-key column; the primary key is ${pks.mkString(", ")}"))
+    pks.foreach(c => require(pkValues.contains(c), s"lookup: missing primary-key column $c"))
+    store.latestSnapshot.flatMap { snap =>
+      GraftScan.withSession(spark) {
+        val key = pks.map(k => GraftTable.keyValue(ts.fieldByName(k).sparkType, pkValues(k)))
+        if (key.exists(_.isEmpty)) None
+        else {
+          val (out, rows) = GraftScan.pointRead(this, snap, Seq(key.flatten))
+          rows.headOption.map(
+            org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(out)
+              .resolveAndBind().createDeserializer())
+        }
+      }
+    }
   }
 
   // ================= incremental / changelog reads =================
@@ -1335,6 +1358,24 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
 object GraftTable {
   /** Highest LSM level — fully-compacted files live here. */
   val MaxLevel = 5
+
+  /** `v` as a Catalyst value of the key column type `dt`, or None when no
+    * key can equal it: null, or a value of another type that does not
+    * convert to `dt` and back unchanged (`5` for a bigint key is 5L; `1.5`
+    * or `2^40` for an int key match nothing, as `col === lit(v)` finds).
+    */
+  private[graft] def keyValue(dt: DataType, v: Any): Option[Any] =
+    if (v == null) None
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+      val lit = Literal(v)
+      if (lit.dataType == dt) Some(lit.value)
+      else {
+        val tz = Some(SQLConf.get.sessionLocalTimeZone)
+        Option(Cast(lit, dt, tz, EvalMode.TRY).eval()).filter(c =>
+          Cast(Literal(c, dt), lit.dataType, tz, EvalMode.TRY).eval() == lit.value)
+      }
+    }
 
   /** File-format instance by name. */
   def fileFormatFor(name: String): org.apache.spark.sql.execution.datasources.FileFormat =

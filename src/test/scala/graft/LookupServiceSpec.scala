@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** The remote KV lookup service (J4; reference: paimon-service
   * KvQueryServer/KvQueryClient) — batched probes over HTTP, one
-  * bucket-pruned Spark job per miss batch, key-level LRU with negative
-  * caching.
+  * bucket-pruned driver-side read per miss batch (no Spark job; see
+  * PointLookupSpec), key-level LRU with negative caching.
   */
 class LookupServiceSpec extends SparkSpec {
   import spark.implicits._
@@ -51,11 +51,11 @@ class LookupServiceSpec extends SparkSpec {
       LookupClient.lookupBatch(srv.endpoint,
         Seq(Map("k" -> 1L), Map("k" -> 2L), Map("k" -> 777L)))
       val after1 = srv.jobsRun
-      assert(after1 == 1L, "one batch of misses = ONE Spark job")
+      assert(after1 == 1L, "one batch of misses = ONE read of the table")
       // all three keys (incl. the absent one) now served from cache
       LookupClient.lookupBatch(srv.endpoint,
         Seq(Map("k" -> 1L), Map("k" -> 2L), Map("k" -> 777L)))
-      assert(srv.jobsRun == after1, "repeat probes touch no Spark job")
+      assert(srv.jobsRun == after1, "repeat probes read nothing")
       // a genuinely new key triggers exactly one more
       LookupClient.lookup(srv.endpoint, Map("k" -> 3L))
       assert(srv.jobsRun == after1 + 1)
@@ -76,7 +76,7 @@ class LookupServiceSpec extends SparkSpec {
         (999L, null)), s"left-join semantics with MERGED dim rows: ${rows.toSeq}")
       val after1 = srv.jobsRun
       // identical probe set again: every key (incl. the miss) is cached —
-      // the service runs NO new Spark job
+      // the service reads nothing
       graft.streaming.LookupJoin.remote(
         probes, srv.endpoint, Seq("k"), dimSchema).collect()
       assert(srv.jobsRun == after1, "hot keys served from the service cache")
@@ -195,6 +195,23 @@ class LookupServiceSpec extends SparkSpec {
       assert(hit.isDefined && hit.get.contains("\"ba\""), s"got $hit")
       assert(LookupClient.lookup(srv.endpoint,
         Map("region" -> "eu", "id" -> 2L)).isEmpty)
+    } finally srv.stop()
+  }
+
+  test("a server over an empty table answers [] until a commit and refresh()") {
+    val df = Seq((1L, "a", 10.0)).toDF("k", "v", "p")
+    val t = GraftTable.create(spark, tmpTable(), df.schema,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "2"))
+    val srv = new LookupServer(t).start()
+    try {
+      assert(LookupClient.lookupBatch(srv.endpoint, Seq(Map("k" -> 1L))).isEmpty)
+      assert(srv.jobsRun == 1L, "a miss batch counts even with nothing to read")
+      t.upsert(df)
+      assert(LookupClient.lookup(srv.endpoint, Map("k" -> 1L)).isEmpty,
+        "the empty pin and its negative cache hold until refresh()")
+      srv.refresh()
+      val hit = LookupClient.lookup(srv.endpoint, Map("k" -> 1L))
+      assert(hit.isDefined && hit.get.contains("\"a\""), s"got $hit")
     } finally srv.stop()
   }
 
