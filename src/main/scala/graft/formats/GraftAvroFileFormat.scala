@@ -153,12 +153,10 @@ class GraftAvroFileFormat extends FileFormat
     // Close at task completion too: early-terminated scans (LIMIT,
     // short-circuited joins, task failures) never exhaust the iterator,
     // and FileScanRDD only closes iterators that are Closeable. Same
-    // pattern as spark-avro's AvroFileFormat reader registration. The
-    // iterator is Closeable itself for reads outside a task.
+    // pattern as spark-avro's AvroFileFormat reader registration.
     Option(org.apache.spark.TaskContext.get())
       .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-    new Iterator[InternalRow] with java.io.Closeable {
-      override def close(): Unit = closeOnce()
+    new Iterator[InternalRow] {
       override def hasNext: Boolean = {
         if (closed) return false
         val more = reader.hasNext && !reader.pastSync(end)

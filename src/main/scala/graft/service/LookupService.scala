@@ -1,7 +1,7 @@
 package graft.service
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.core.Snapshot
+import graft.core.{Snapshot, TableSchema}
 import graft.spark.v2.GraftScan
 import graft.table.GraftTable
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, CreateNamedStruct, Literal, StructsToJson}
@@ -53,15 +53,20 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
   // newer snapshot exists (one latest-snapshot-id stat per interval, no
   // data read) — without it a long-running enrichment stream would serve
   // stale dims forever unless the operator remembers to call refresh().
+  // The schema pins with the snapshot, so misses render in the shape the
+  // cached hits have until the next refresh; it is read after the
+  // snapshot, so it is at least as new as every file the snapshot holds.
   // None = the table had no snapshot yet: every probe is absent.
-  @volatile private var pinned: Option[Snapshot] = table.store.latestSnapshot
+  private def latestPin: Option[(Snapshot, TableSchema)] =
+    table.store.latestSnapshot.map(s => (s, table.schema))
+  @volatile private var pinned: Option[(Snapshot, TableSchema)] = latestPin
   // pin generation: bumped by every refresh so an in-flight batch that
   // scanned the PREVIOUS pin cannot repopulate the freshly cleared cache
   // with old-snapshot rows (they would serve as stale hits until the next
   // advance) — lookupBatch re-checks the era before its write-through
   private val pinEra = new java.util.concurrent.atomic.AtomicLong()
   def refresh(): Unit = synchronized {
-    pinned = table.store.latestSnapshot
+    pinned = latestPin
     pinEra.incrementAndGet()
     cache.clear()
   }
@@ -74,7 +79,7 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
       ex.scheduleWithFixedDelay(() => {
         try {
           // cheap stat: re-pin (and drop the cache) only on a real advance
-          if (table.store.latestSnapshotId != pinned.map(_.id)) refresh()
+          if (table.store.latestSnapshotId != pinned.map(_._1.id)) refresh()
         } catch { case _: Exception => () } // transient FS error: retry next tick
       }, refreshIntervalMs, refreshIntervalMs, java.util.concurrent.TimeUnit.MILLISECONDS)
       Some(ex)
@@ -175,7 +180,9 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
     if (misses.nonEmpty) {
       jobsRunCount.incrementAndGet()
       val era = pinEra.get()
-      val foundByKey = pinned.fold(Map.empty[Seq[String], String])(readMisses(_, misses.map(_._2)))
+      val foundByKey = pinned.fold(Map.empty[Seq[String], String]) {
+        case (snap, schema) => readMisses(snap, schema, misses.map(_._2))
+      }
       // if refresh() advanced the pin while we scanned, the response is
       // still served from this batch's (consistent, old-pin) resolution,
       // but the write-through is SKIPPED: old-snapshot rows must not
@@ -192,13 +199,15 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
   }
 
   /** Found rows of `snap` for raw probe keys, by cache key, each rendered
-    * as `to_json(struct(*))` renders it. Keys cast to the pk types as
-    * `lit(v).cast(type)` does; the read matches rows to them in the
-    * Catalyst domain, so only found rows render a cache key.
+    * as `to_json(struct(*))` renders it over `schema`. Keys cast to the pk
+    * types as `lit(v).cast(type)` does; the read matches rows to them in
+    * the Catalyst domain, so only found rows render a cache key.
     */
-  private def readMisses(snap: Snapshot, keys: Seq[Seq[Any]]): Map[Seq[String], String] = {
+  private def readMisses(snap: Snapshot, schema: TableSchema,
+      keys: Seq[Seq[Any]]): Map[Seq[String], String] = {
     val tz = Some(SQLConf.get.sessionLocalTimeZone)
-    val (out, rows) = GraftScan.pointRead(table, snap, keys.map(_.zip(pkFields).map {
+    val out = schema.structType
+    val rows = GraftScan.pointRead(table, snap, schema, keys.map(_.zip(pkFields).map {
       case (v, f) => Cast(Literal(v), f.sparkType, tz).eval()
     }))
     val json = StructsToJson(Map.empty, CreateNamedStruct(out.fields.toSeq.zipWithIndex.flatMap {

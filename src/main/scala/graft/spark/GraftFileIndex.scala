@@ -268,7 +268,10 @@ object GraftFileIndex {
   /** Rows of the parquet index deltas under `indexDirs` whose `__kh`
     * equals `kh`, as (`__kh` +: `cols`) — read on the calling thread, no
     * Spark job, so planning a point lookup stays on the driver. The pushed
-    * equality skips row groups whose `__kh` range excludes the hash.
+    * equality skips, by their parquet stats, the row groups and pages whose
+    * `__kh` range excludes the hash; index files are written sorted by
+    * `__kh` for it, folds also range-partitioned
+    * ([[graft.table.GraftTable.byKeyHash]]).
     */
   private def indexProbe(spark: SparkSession, store: FileStore, indexDirs: Seq[String],
       kh: Literal, cols: StructType): Seq[InternalRow] = {

@@ -101,12 +101,16 @@ class GraftScan(
       * merge task per (partition, bucket) group, merge machinery columns
       * kept, deletes kept below the max level (see [[GraftScan.compactionInput]]).
       */
-    compactTo: Option[Int] = None)
+    compactTo: Option[Int] = None,
+    /** The table schema to read with; the latest when None (a lookup
+      * server reads with the schema it pinned).
+      */
+    pinnedSchema: Option[TableSchema] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
 
-  private val schema = table.schema
+  private val schema = pinnedSchema.getOrElse(table.schema)
   private def isPk = schema.isPrimaryKeyed
 
   /** EFFECTIVE output schema: Spark's nested schema pruning may request a
@@ -967,10 +971,11 @@ class GraftReaderFactory(
   private def planOf(f: GraftFileInfo): SchemaReadPlan =
     plans((f.schemaId, f.dvPath.isDefined, GraftTable.formatNameOfPath(f.path)))
 
-  /** The file iterators one reader has opened. `close()` releases them, so
-    * a reader dropped mid-read holds no file handle even where no task-
-    * completion listener runs (a read on the driver). Iterators close
-    * themselves at exhaustion too; closing twice is harmless.
+  /** The file iterators one reader has opened. `close()` closes the ones
+    * that are Closeable, as FileScanRDD does: Spark's vectorized parquet
+    * reader registers no task-completion listener and relies on that. The
+    * rest close through their listeners. Iterators close themselves at
+    * exhaustion too; closing twice is harmless.
     */
   private class OpenFiles {
     private val opened = mutable.ArrayBuffer.empty[AutoCloseable]
@@ -1048,13 +1053,16 @@ object GraftScan {
     * index, stats, bloom). Each planned partition drains through the scan's
     * own reader: DV masks, schema alignment, defaults, the k-way merge. The
     * scan leaves row filtering to its consumer, so rows are matched to the
-    * keys here. Returns the schema the rows are laid out in and the
-    * matching rows, at most one per key.
+    * keys here. Each reader drains as a task of its own
+    * ([[org.apache.spark.sql.graft.SparkShims.inLocalTask]]): the file
+    * iterators a format closes only through a task-completion listener
+    * close with it, also when the read stops early or fails. Rows are laid
+    * out in `schema`'s struct type, at most one per key.
     */
-  def pointRead(table: GraftTable, snapshot: Snapshot,
-      keys: Seq[Seq[Any]]): (StructType, Seq[InternalRow]) = withSession(table.spark) {
-    val out = table.schema.structType
-    val pks = table.schema.primaryKeys
+  def pointRead(table: GraftTable, snapshot: Snapshot, schema: TableSchema,
+      keys: Seq[Seq[Any]]): Seq[InternalRow] = withSession(table.spark) {
+    val out = schema.structType
+    val pks = schema.primaryKeys
     val pkIdx = pks.map(out.fieldIndex)
     val pkTypes = pkIdx.map(out(_).dataType)
     // distinct keys by Spark's equality: -0.0 = 0.0, binary by content
@@ -1078,22 +1086,26 @@ object GraftScan {
           Seq(org.apache.spark.sql.sources.In(pks.head, wanted.map(k => toScala.head(k.head)).toArray))
         else Seq(wanted.map(k => eqs(k).reduce(org.apache.spark.sql.sources.And(_, _)): Filter)
           .reduce(org.apache.spark.sql.sources.Or(_, _)))
-      val scan = new GraftScan(table.spark, table, Some(snapshot), out, filters, None)
+      val scan = new GraftScan(table.spark, table, Some(snapshot), out, filters, None,
+        pinnedSchema = Some(schema))
       val parts = scan.planInputPartitions().iterator
       val factory = scan.createReaderFactory()
       val pending = mutable.HashSet(byNorm.keys.toSeq: _*)
       while (pending.nonEmpty && parts.hasNext) {
-        val reader = factory.createReader(parts.next())
-        try {
-          while (pending.nonEmpty && reader.next()) {
-            val r = reader.get()
-            if (pending.remove(pkIdx.indices.map(i => norm(r.get(pkIdx(i), pkTypes(i))))))
-              found += r.copy()
-          }
-        } finally reader.close()
+        val part = parts.next()
+        org.apache.spark.sql.graft.SparkShims.inLocalTask {
+          val reader = factory.createReader(part)
+          try {
+            while (pending.nonEmpty && reader.next()) {
+              val r = reader.get()
+              if (pending.remove(pkIdx.indices.map(i => norm(r.get(pkIdx(i), pkTypes(i))))))
+                found += r.copy()
+            }
+          } finally reader.close()
+        }
       }
     }
-    (out, found.toSeq)
+    found.toSeq
   }
 
   /** Run `f` with `spark` as the thread's active session, so Catalyst reads

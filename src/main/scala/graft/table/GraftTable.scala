@@ -303,9 +303,8 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     * plans the key's bucket with the scan's own pruning and drains its
     * reader, merge included — no Spark job. `pkValues` names every pk
     * column and nothing else. A value compares as `col === lit(value)`
-    * does: one of another type matches only if it converts to the column's
-    * type and back unchanged. The row has the external types `collect()`
-    * returns.
+    * does (see [[GraftTable.keyValue]]). The row has the external types
+    * `collect()` returns.
     */
   def lookup(pkValues: Map[String, Any]): Option[Row] = {
     val ts = schema
@@ -316,14 +315,12 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     pks.foreach(c => require(pkValues.contains(c), s"lookup: missing primary-key column $c"))
     store.latestSnapshot.flatMap { snap =>
       GraftScan.withSession(spark) {
-        val key = pks.map(k => GraftTable.keyValue(ts.fieldByName(k).sparkType, pkValues(k)))
+        val key = pks.map(k =>
+          GraftTable.keyValue(spark, k, ts.fieldByName(k).sparkType, pkValues(k)))
         if (key.exists(_.isEmpty)) None
-        else {
-          val (out, rows) = GraftScan.pointRead(this, snap, Seq(key.flatten))
-          rows.headOption.map(
-            org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(out)
-              .resolveAndBind().createDeserializer())
-        }
+        else GraftScan.pointRead(this, snap, ts, Seq(key.flatten)).headOption.map(
+          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(ts.structType)
+            .resolveAndBind().createDeserializer())
       }
     }
   }
@@ -934,7 +931,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       .join(broadcast(fileMap), "__f")
       .select(col("__kh"), col("__pt"), col(BucketCol)).distinct()
     val rel = s"index/global-${UUID.randomUUID()}"
-    delta.write.parquet(new Path(store.rootPath, rel).toString)
+    delta.sortWithinPartitions("__kh").write.parquet(new Path(store.rootPath, rel).toString)
     Seq(rel)
   }
 
@@ -994,7 +991,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       .select(joinKeys.map(col) :+ col(BucketCol): _*)
     val deltaRel = s"index/delta-${UUID.randomUUID()}"
     val deltaPath = new Path(store.rootPath, deltaRel)
-    assigned.write.parquet(deltaPath.toString)
+    assigned.sortWithinPartitions(kh).write.parquet(deltaPath.toString)
     // re-read the just-written delta: assignments materialize exactly once,
     // the routing join never recomputes the rank window
     val hasRows = store.fs.listStatus(deltaPath)
@@ -1359,23 +1356,48 @@ object GraftTable {
   /** Highest LSM level — fully-compacted files live here. */
   val MaxLevel = 5
 
-  /** `v` as a Catalyst value of the key column type `dt`, or None when no
-    * key can equal it: null, or a value of another type that does not
-    * convert to `dt` and back unchanged (`5` for a bigint key is 5L; `1.5`
-    * or `2^40` for an int key match nothing, as `col === lit(v)` finds).
+  /** `v` as a Catalyst value of the key column `name` of type `dt`, or
+    * None when no key can equal it. It compares as `col(name) === lit(v)`
+    * does: Spark's type coercion resolves that equality (a string casts to
+    * the column's type, so `"2024-1-6"` finds a date key; a string against
+    * a decimal compares as a double; an int against a long widens). The
+    * coerced literal, cast to `dt`, is the key when the coerced equality
+    * holds for it (`1.5` or `2^40` for an int key match nothing). A value
+    * the coercion cannot cast fails as the DataFrame's filter does.
     */
-  private[graft] def keyValue(dt: DataType, v: Any): Option[Any] =
+  private[graft] def keyValue(spark: SparkSession, name: String, dt: DataType,
+      v: Any): Option[Any] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Cast, EqualTo, EvalMode, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val lit = Literal(v)
     if (v == null) None
+    else if (lit.dataType == dt) Some(lit.value)
     else {
-      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-      val lit = Literal(v)
-      if (lit.dataType == dt) Some(lit.value)
-      else {
-        val tz = Some(SQLConf.get.sessionLocalTimeZone)
-        Option(Cast(lit, dt, tz, EvalMode.TRY).eval()).filter(c =>
-          Cast(Literal(c, dt), lit.dataType, tz, EvalMode.TRY).eval() == lit.value)
+      val attr = AttributeReference(name, dt)()
+      val cond = spark.sessionState.analyzer.executeAndCheck(
+        Filter(EqualTo(attr, lit), LocalRelation(attr)),
+        new org.apache.spark.sql.catalyst.QueryPlanningTracker).asInstanceOf[Filter].condition
+      val coerced = cond match {
+        case EqualTo(_, right) => right
+        case other => throw new IllegalStateException(s"unexpected key equality $other")
       }
+      Option(coerced.eval())
+        .flatMap(c => Option(Cast(Literal(c, coerced.dataType), dt,
+          Some(SQLConf.get.sessionLocalTimeZone), EvalMode.TRY).eval()))
+        .filter(k => BindReferences.bindReference(cond, Seq(attr))
+          .eval(org.apache.spark.sql.catalyst.InternalRow(k)) == true)
     }
+  }
+
+  /** A pk index (`__kh` key hash rows) laid out for point probes: `files`
+    * output files over disjoint `__kh` ranges, each sorted by `__kh`. A
+    * probe's pushed `__kh` equality then skips, by their stats, every file,
+    * row group and page that cannot hold the hash
+    * (`GraftFileIndex.indexProbe`). Per-commit deltas only sort within
+    * their files, which keeps the page skipping without a range-sampling job.
+    */
+  private[graft] def byKeyHash(index: DataFrame, files: Int): DataFrame =
+    index.repartitionByRange(math.max(1, files), col("__kh")).sortWithinPartitions("__kh")
 
   /** File-format instance by name. */
   def fileFormatFor(name: String): org.apache.spark.sql.execution.datasources.FileFormat =

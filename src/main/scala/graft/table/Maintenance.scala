@@ -159,9 +159,8 @@ trait MaintenanceOps { self: GraftTable =>
     // dynamic-bucket entries are unique by construction (keys never move)
     val folded = if (schema.globalIndexEnabled) folded0.distinct() else folded0
     val rel = s"index/fold-${java.util.UUID.randomUUID()}"
-    folded.repartition(math.max(1,
-      if (schema.dynamicBucket) schema.dynamicBucketAssigners
-      else spark.sparkContext.defaultParallelism))
+    GraftTable.byKeyHash(folded, if (schema.dynamicBucket) schema.dynamicBucketAssigners
+      else spark.sparkContext.defaultParallelism)
       .write.parquet(new Path(store.rootPath, rel).toString)
     Some(commitFiles(Nil, CommitKind.COMPACT,
       indexFiles = Seq(rel), consumedIndexFiles = dirs))
@@ -209,7 +208,8 @@ trait MaintenanceOps { self: GraftTable =>
       .join(broadcast(fileMap), "__f")
       .select(col("__kh"), col("__pt"), col(graft.GraftMeta.BucketCol)).distinct()
     val rel = s"index/fold-${java.util.UUID.randomUUID()}"
-    delta.write.parquet(new Path(store.rootPath, rel).toString)
+    GraftTable.byKeyHash(delta, spark.sparkContext.defaultParallelism)
+      .write.parquet(new Path(store.rootPath, rel).toString)
     commitFiles(Nil, CommitKind.COMPACT,
       indexFiles = Seq(rel), consumedIndexFiles = snap.indexFiles)
   }

@@ -103,6 +103,37 @@ object SparkShims {
     spark.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema, isStreaming = true)
   }
 
+  /** Run `f` as a task of its own on the calling thread, completed when
+    * `f` returns or fails: file readers built outside a Spark task (a read
+    * on the driver) register their close with the task's completion
+    * listeners, as every file format does, so they close here too. The
+    * task is set up and torn down as an executor does it (block locks and
+    * memory per attempt id), under a negative attempt id the scheduler
+    * never hands out. Inside a task, `f` simply runs in it.
+    */
+  def inLocalTask[T](f: => T): T =
+    if (org.apache.spark.TaskContext.get() != null) f
+    else {
+      val env = org.apache.spark.SparkEnv.get
+      val id = localTaskIds.decrementAndGet()
+      val memory = new org.apache.spark.memory.TaskMemoryManager(env.memoryManager, id)
+      val tc = new org.apache.spark.TaskContextImpl(0, 0, 0, id, 0, 1, memory,
+        new java.util.Properties, env.metricsSystem)
+      env.blockManager.registerTask(id)
+      org.apache.spark.TaskContext.setTaskContext(tc)
+      var error: Option[Throwable] = None
+      try f
+      catch { case t: Throwable => error = Some(t); throw t }
+      finally
+        try tc.markTaskCompleted(error)
+        finally {
+          org.apache.spark.TaskContext.unset()
+          env.blockManager.releaseAllLocksForTask(id)
+          memory.cleanUpAllAllocatedMemory()
+        }
+    }
+  private val localTaskIds = new java.util.concurrent.atomic.AtomicLong(-(1L << 40))
+
   /** Construct a PartitionedFile for the file-source read function
     * (insulates callers from the constructor churn across Spark versions).
     */

@@ -3,6 +3,7 @@ package graft
 import graft.service.{LookupClient, LookupServer}
 import graft.table.GraftTable
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The remote KV lookup service (J4; reference: paimon-service
   * KvQueryServer/KvQueryClient) — batched probes over HTTP, one
@@ -212,6 +213,25 @@ class LookupServiceSpec extends SparkSpec {
       srv.refresh()
       val hit = LookupClient.lookup(srv.endpoint, Map("k" -> 1L))
       assert(hit.isDefined && hit.get.contains("\"a\""), s"got $hit")
+    } finally srv.stop()
+  }
+
+  test("a schema change after the pin leaves misses in the pinned shape") {
+    val t = pkTable()
+    val srv = new LookupServer(t).start()
+    try {
+      val before = LookupClient.lookup(srv.endpoint, Map("k" -> 1L))
+      t.addColumn("extra", org.apache.spark.sql.types.IntegerType)
+      t.renameColumn("v", "name")
+      val miss = LookupClient.lookup(srv.endpoint, Map("k" -> 3L)) // no refresh()
+      def fields(j: Option[String]) = j.map(s =>
+        graft.core.Json.parse(s).fieldNames().asScala.toSeq)
+      assert(fields(before) == Some(Seq("k", "v", "p")), s"got $before")
+      assert(fields(miss) == fields(before) && miss.get.contains("\"c\""),
+        s"a miss of the same pin renders as its hits: $miss")
+      srv.refresh() // the new shape; to_json leaves out the null `extra`
+      val after = LookupClient.lookup(srv.endpoint, Map("k" -> 3L))
+      assert(fields(after) == Some(Seq("k", "name", "p")), s"got $after")
     } finally srv.stop()
   }
 
