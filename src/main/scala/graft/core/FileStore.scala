@@ -536,15 +536,6 @@ class FileStore(val root: String, val hadoopConf: Configuration,
     */
   val maxManifestEntries = 4096
 
-  /** Tiered run merging on/off (default on) — the conf knob behind the
-    * r19 A/B that attributes commit-path cost to the cascade fusion.
-    * Off: folds still produce runs but adjacent runs are never fused, so
-    * commits are cheaper and partition-scoped reads pay O(generations)
-    * shard overlap instead of O(log₄ live).
-    */
-  val tieredMergeEnabled: Boolean =
-    hadoopConf.getBoolean("graft.manifest.tiered-merge", true)
-
   case class CommitResult(snapshot: Snapshot, committed: Boolean)
 
   /** Optimistic-concurrency commit of a set of delta entries.
@@ -763,10 +754,7 @@ class FileStore(val root: String, val hadoopConf: Configuration,
         // entry is rewritten O(log₄ live) times total, and a partition
         // overlaps O(log₄ live) runs — the LSM shape, applied to the
         // manifest chain itself (reference analog: ManifestFileMeta.merge
-        // size-tiered suggestion + full-compaction threshold). The conf
-        // switch exists for A/B attribution and for tables that prefer
-        // commit-path latency over pruned-plan shard count. ----
-        if (tieredMergeEnabled) {
+        // size-tiered suggestion + full-compaction threshold). ----
         var runPrefix = meta.segmentLength(_.run > 0L, 0)
         var runs: Vector[Vector[(String, ManifestMeta)]] = {
           val pref = manifests.take(runPrefix).zip(meta.take(runPrefix))
@@ -809,7 +797,6 @@ class FileStore(val root: String, val hadoopConf: Configuration,
           val flat = runs.flatten
           manifests = flat.map(_._1) ++ manifests.drop(runPrefix)
           meta = flat.map(_._2) ++ meta.drop(runPrefix)
-        }
         }
       }
 

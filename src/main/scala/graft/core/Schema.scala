@@ -107,6 +107,11 @@ case class TableSchema(
     Seq("ignore-delete", s"$mergeEngine.ignore-delete")
       .exists(k => option(k, "false").toBoolean)
 
+  /** The configured `changelog-producer`, parsed; `none` when unset. */
+  def changelogProducer: ChangelogProducer =
+    options.get(TableSchema.ChangelogProducerOpt).map(ChangelogProducer.parse)
+      .getOrElse(ChangelogProducer.Off)
+
   /** Suppress -U/+U changelog pairs whose before and after images are
     * identical (reference: CoreOptions "changelog-producer.row-deduplicate",
     * default false — a touched-but-unchanged key still emits its pair).
@@ -301,10 +306,11 @@ case class TableSchema(
         require(fields.exists(_.name == f), s"$k: no such field '$f'")
         TableSchema.parseStatsMode(options(k))
       }
+    // eager parse: a typo must fail DDL, not behave as `input`
+    val producer = changelogProducer
     if (mergeEngine == "first-row") {
-      val producer = option(TableSchema.ChangelogProducerOpt, "none")
-      require(producer == "none" || producer == "lookup",
-        s"first-row supports changelog-producer none or lookup, not $producer")
+      require(producer == ChangelogProducer.Off || producer == ChangelogProducer.Lookup,
+        s"first-row supports changelog-producer none or lookup, not ${producer.name}")
       require(sequenceField.isEmpty,
         "sequence.field is not supported with the first-row merge engine")
     }
@@ -383,12 +389,12 @@ case class TableSchema(
       "deletion-vectors.enabled is ordered by commit time; sequence.field unsupported")
     require(!crossPartition,
       "deletion-vectors.enabled requires partition keys contained in the primary key")
-    val producer = option(TableSchema.ChangelogProducerOpt, "none")
-    // lookup works: its changelog is computed at write time by merging the
-    // touched buckets' pre-mask state, which dv mode leaves intact within
-    // the committing batch (reference pairs dv with the lookup producer)
-    require(producer == "none" || producer == "lookup",
-      s"deletion-vectors.enabled does not support changelog-producer=$producer")
+    val producer = changelogProducer
+    // lookup works: its changelog is computed at write time in one merge
+    // read of the touched buckets, whose pre-image files the committing
+    // batch has not masked yet (reference pairs dv with the lookup producer)
+    require(producer == ChangelogProducer.Off || producer == ChangelogProducer.Lookup,
+      s"deletion-vectors.enabled does not support changelog-producer=${producer.name}")
   }
 
   def toJson: String = {
@@ -410,6 +416,29 @@ case class TableSchema(
     options.toSeq.sortBy(_._1).foreach { case (k, v) => opt.put(k, v) }
     Json.write(root)
   }
+}
+
+/** How a primary-key table produces its changelog (reference: CoreOptions
+  * CHANGELOG_PRODUCER). `none` and `input` both stream the level-0 input
+  * files; `lookup` and `full-compaction` write exact -U/+U/-D changelog
+  * files, at each commit or at each full compaction.
+  */
+sealed abstract class ChangelogProducer(val name: String) {
+  /** Whether a snapshot's changelog is its own changelog files. */
+  def writesFiles: Boolean =
+    this == ChangelogProducer.Lookup || this == ChangelogProducer.FullCompaction
+}
+
+object ChangelogProducer {
+  case object Off extends ChangelogProducer("none")
+  case object Input extends ChangelogProducer("input")
+  case object Lookup extends ChangelogProducer("lookup")
+  case object FullCompaction extends ChangelogProducer("full-compaction")
+  val all: Seq[ChangelogProducer] = Seq(Off, Input, Lookup, FullCompaction)
+
+  def parse(s: String): ChangelogProducer = all.find(_.name == s.trim).getOrElse(
+    throw new IllegalArgumentException(s"unsupported changelog-producer: $s " +
+      s"(expected ${all.map(_.name).mkString(", ")})"))
 }
 
 object TableSchema {

@@ -26,7 +26,7 @@ import scala.collection.mutable
   *                    runs at read time (reference: MergeTreeCompactRewriter
   *                    dropDelete)
   */
-class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String],
+class RowMerger(val schema: TableSchema, rowSchema: StructType, output: Seq[String],
     dropDeletes: Boolean = true) extends Serializable {
   import GraftMeta._
 
@@ -116,6 +116,9 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String],
     if (outPos >= 0) out(outPos) = rows.iterator.map(_.getLong(posI)).max
     Some(new GenericInternalRow(out))
   }
+
+  /** One input row as stored, in the output layout: no fold. */
+  def project(row: InternalRow): InternalRow = new GenericInternalRow(picked(row))
 
   private val ordOrdering: Ordering[InternalRow] =
     (a: InternalRow, b: InternalRow) => compareOrd(a, b)
@@ -393,33 +396,12 @@ class RowMerger(schema: TableSchema, rowSchema: StructType, output: Seq[String],
 class SortMergeRows(merger: RowMerger, inputs: Seq[Iterator[InternalRow]])
     extends Iterator[InternalRow] {
 
-  private case class Head(var row: InternalRow, it: Iterator[InternalRow]) {
-    /** Advance this run, FAILING LOUDLY on an out-of-order row: an
-      * unsorted run makes the heap merge silently miss key matches and
-      * resurrect stale versions — at scale that is corruption with no
-      * symptom (a planned-write regression produced exactly this before
-      * the staging write pinned its ordering; see WriteOrderSpec). One
-      * extra key compare per row, dwarfed by the heap's own O(log k).
-      */
-    def advanceChecked(): Unit = {
-      val prev = row
-      row = it.next()
-      require(merger.compareKeys(row, prev) >= 0,
-        "merge input run is not key-sorted: a data file was written out of " +
-          "key order (staging-write ordering regression?) — refusing to " +
-          "merge, stale row versions would silently survive. Compaction " +
-          "merges through this same path and refuses too. Repair: roll the " +
-          "table back to a snapshot before the bad write (CALL sys.rollback) " +
-          "and re-write that data")
-    }
-  }
+  private implicit val headOrd: Ordering[MergeRun] =
+    (a: MergeRun, b: MergeRun) => -merger.compareKeys(a.row, b.row) // min-heap
 
-  private implicit val headOrd: Ordering[Head] =
-    (a: Head, b: Head) => -merger.compareKeys(a.row, b.row) // min-heap
-
-  private val heap = mutable.PriorityQueue.empty[Head]
+  private val heap = mutable.PriorityQueue.empty[MergeRun]
   inputs.foreach { it =>
-    if (it.hasNext) heap.enqueue(Head(it.next(), it))
+    if (it.hasNext) heap.enqueue(new MergeRun(merger, it.next(), it))
   }
 
   private val group = mutable.ArrayBuffer.empty[InternalRow]
@@ -453,4 +435,127 @@ class SortMergeRows(merger: RowMerger, inputs: Seq[Iterator[InternalRow]])
     advance()
     r
   }
+}
+
+/** One key-sorted input run of a k-way merge, at its current `row`;
+  * `preImage` flags the runs a changelog fold compares against.
+  */
+private[merge] final class MergeRun(merger: RowMerger, var row: InternalRow,
+    val it: Iterator[InternalRow], val preImage: Boolean = false) {
+  /** Advance this run, FAILING LOUDLY on an out-of-order row: an
+    * unsorted run makes the heap merge silently miss key matches and
+    * resurrect stale versions — at scale that is corruption with no
+    * symptom (a planned-write regression produced exactly this before
+    * the staging write pinned its ordering; see WriteOrderSpec). One
+    * extra key compare per row, dwarfed by the heap's own O(log k).
+    */
+  def advanceChecked(): Unit = {
+    val prev = row
+    row = it.next()
+    require(merger.compareKeys(row, prev) >= 0,
+      "merge input run is not key-sorted: a data file was written out of " +
+        "key order (staging-write ordering regression?) — refusing to " +
+        "merge, stale row versions would silently survive. Compaction " +
+        "merges through this same path and refuses too. Repair: roll the " +
+        "table back to a snapshot before the bad write (CALL sys.rollback) " +
+        "and re-write that data")
+  }
+}
+
+/** The exact changelog of a k-way merge, a second consumer of the runs
+  * next to [[SortMergeRows]] (reference: FullChangelogMergeFunctionWrapper,
+  * LookupChangelogMergeFunctionWrapper compare each key's pre-image with
+  * its merged result). `runs` flag which inputs form the pre-image. Per
+  * key, the before image is either the merge of the pre-image rows that
+  * `keep` admits (`storedPreImage = false`, the lookup producer) or each
+  * pre-image row as stored, read before `keep` (`true`, full compaction's
+  * top level); the after image is the merge of every row `keep` admits.
+  *  - a key with an after image only emits +I; one with a before image
+  *    only emits -D;
+  *  - otherwise a -U/+U pair, when the non-key field values differ (`<=>`
+  *    on their structs) or the key is touched — one of its rows, kept or
+  *    not, comes from outside the pre-image — unless the table sets
+  *    `changelog-producer.row-deduplicate`.
+  * Rows come out in the merger's output layout, which must hold the seq,
+  * pos, kind and bucket columns (`outSchema`): kind set, seq = `seq`, pos
+  * 0 for -U and 1 otherwise, bucket that of the image.
+  */
+class ChangelogMergeRows(merger: RowMerger, outSchema: StructType,
+    runs: Seq[(Iterator[InternalRow], Boolean)], storedPreImage: Boolean, seq: Long,
+    keep: InternalRow => Boolean) extends Iterator[InternalRow] {
+  import GraftMeta._
+
+  private val schema = merger.schema
+  private val kindO = outSchema.fieldIndex(KindCol)
+  private val seqO = outSchema.fieldIndex(SeqCol)
+  private val posO = outSchema.fieldIndex(PosCol)
+  private val valueO: Array[Int] = schema.fields.map(_.name)
+    .filterNot(schema.primaryKeys.contains).map(outSchema.fieldIndex).toArray
+  private lazy val valueOrds: Array[Ordering[Any]] = valueO.map(i =>
+    TypeUtils.getInterpretedOrdering(outSchema(i).dataType).asInstanceOf[Ordering[Any]])
+  private val dedupUntouched = schema.changelogRowDeduplicate
+
+  private implicit val headOrd: Ordering[MergeRun] =
+    (a: MergeRun, b: MergeRun) => -merger.compareKeys(a.row, b.row) // min-heap
+
+  private val heap = mutable.PriorityQueue.empty[MergeRun]
+  runs.foreach { case (it, pre) =>
+    if (it.hasNext) heap.enqueue(new MergeRun(merger, it.next(), it, pre))
+  }
+
+  private val all = mutable.ArrayBuffer.empty[InternalRow]
+  private val pre = mutable.ArrayBuffer.empty[InternalRow]
+  private val pending = mutable.Queue.empty[InternalRow]
+
+  private def sameValues(a: InternalRow, b: InternalRow): Boolean = {
+    var i = 0
+    while (i < valueO.length) {
+      val o = valueO(i)
+      val an = a.isNullAt(o); val bn = b.isNullAt(o)
+      if (an != bn) return false
+      if (!an && !valueOrds(i).equiv(a.get(o, outSchema(o).dataType),
+          b.get(o, outSchema(o).dataType))) return false
+      i += 1
+    }
+    true
+  }
+
+  private def emit(r: InternalRow, kind: Byte): Unit = {
+    r.update(kindO, kind)
+    r.update(seqO, seq)
+    r.update(posO, if (kind == KindUpdateBefore) 0L else 1L)
+    pending += r
+  }
+
+  /** Fold keys until one emits or the runs are drained. */
+  private def fill(): Unit = while (pending.isEmpty && heap.nonEmpty) {
+    all.clear(); pre.clear()
+    var touched = false
+    val first = heap.dequeue()
+    def take(h: MergeRun): Unit = {
+      all += h.row
+      if (h.preImage) pre += h.row else touched = true
+      if (h.it.hasNext) { h.advanceChecked(); heap.enqueue(h) }
+    }
+    take(first)
+    while (heap.nonEmpty && merger.compareKeys(heap.head.row, all.head) == 0)
+      take(heap.dequeue())
+    val before: Seq[InternalRow] =
+      if (storedPreImage) pre.map(merger.project).toSeq
+      else merger.merge(pre.filter(keep)).toSeq
+    merger.merge(all.filter(keep)) match {
+      case None => before.foreach(emit(_, KindDelete))
+      case Some(after) if before.isEmpty => emit(after, KindInsert)
+      case Some(after) => before.foreach { b =>
+        if ((touched && !dedupUntouched) || !sameValues(b, after)) {
+          emit(b, KindUpdateBefore)
+          emit(after, KindUpdateAfter)
+        }
+      }
+    }
+  }
+
+  override def hasNext: Boolean = { fill(); pending.nonEmpty }
+
+  override def next(): InternalRow = { fill(); pending.dequeue() }
 }

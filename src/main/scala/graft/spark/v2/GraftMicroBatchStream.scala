@@ -1,6 +1,6 @@
 package graft.spark.v2
 
-import graft.core.{DataFileMeta, ManifestEntry, TableSchema}
+import graft.core.DataFileMeta
 import graft.table.GraftTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
@@ -30,7 +30,7 @@ class GraftMicroBatchStream(
     with SupportsTriggerAvailableNow {
 
   require(!table.schema.deletionVectors ||
-      table.schema.option(graft.core.TableSchema.ChangelogProducerOpt, "none") == "lookup",
+      table.schema.changelogProducer == graft.core.ChangelogProducer.Lookup,
     "streaming reads on a deletion-vector table need changelog-producer=lookup")
 
 
@@ -162,24 +162,8 @@ class GraftMicroBatchStream(
   private def liveAndPreservedIds: Seq[Long] =
     (store.snapshotIdsHinted ++ store.changelogIds).distinct.sorted
 
-  private def deltaFiles(id: Long): Seq[DataFileMeta] = {
-    val s = store.snapshotOrChangelog(id)
-    val producer = table.schema.option(TableSchema.ChangelogProducerOpt, "input")
-    // full-compaction and lookup read dedicated changelog files
-    val fromChangelog = producer == "full-compaction" || producer == "lookup"
-    // compaction/DV/COW rewrites reorganize existing rows — not input; and
-    // overwrite/rollback replaces rows, skipped unless opted in (reference
-    // default: streaming-read-overwrite=false)
-    if (!fromChangelog &&
-        (s.commitKind == graft.core.CommitKind.COMPACT ||
-          (s.commitKind == graft.core.CommitKind.OVERWRITE &&
-            !table.schema.option("streaming-read-overwrite", "false").toBoolean)))
-      return Nil
-    val manifests = if (fromChangelog) s.changelogManifests else s.deltaManifests
-    manifests.flatMap(store.readManifest).collect {
-      case ManifestEntry(ManifestEntry.ADD, f) if fromChangelog || f.level == 0 => f
-    }
-  }
+  private def deltaFiles(id: Long): Seq[DataFileMeta] =
+    table.changelogOf(store.snapshotOrChangelog(id))._2
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GraftOffset].snapshotId

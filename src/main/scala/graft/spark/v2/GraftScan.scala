@@ -2,7 +2,7 @@ package graft.spark.v2
 
 import graft.GraftMeta
 import graft.core._
-import graft.merge.{RowMerger, SortMergeRows}
+import graft.merge.{ChangelogMergeRows, RowMerger, SortMergeRows}
 import graft.spark.GraftFileIndex
 import graft.table.GraftTable
 import org.apache.spark.broadcast.Broadcast
@@ -105,7 +105,15 @@ class GraftScan(
     /** The table schema to read with; the latest when None (a lookup
       * server reads with the schema it pinned).
       */
-    pinnedSchema: Option[TableSchema] = None)
+    pinnedSchema: Option[TableSchema] = None,
+    /** A compaction read that emits the changelog of its merge instead of
+      * the merged rows (see [[GraftScan.changelogInput]]).
+      */
+    changelog: Option[ChangelogPass] = None,
+    /** The clock, in epoch seconds, that record-level expiry of compaction
+      * inputs reads.
+      */
+    nowSec: Long = System.currentTimeMillis() / 1000)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
@@ -777,12 +785,12 @@ class GraftScan(
     // older live version win; plain reads never expire rows
     val expiry = compactTo.flatMap(_ => schema.recordLevelExpire).map { case (tf, sec) =>
       val i = rowSchema.fieldIndex(tf)
-      RecordExpiry(i, rowSchema(i).dataType, tf, System.currentTimeMillis() / 1000 - sec)
+      RecordExpiry(i, rowSchema(i).dataType, tf, nowSec - sec)
     }
     new GraftReaderFactory(table.location, partitionSchema, rowSchema,
       plans, merger, outIdx, defaultsExprs,
       new org.apache.spark.util.SerializableConfiguration(hadoopConf),
-      dropKindIdx, columnar, expiry)
+      dropKindIdx, columnar, expiry, changelog)
   }
 
   private def seqGroupCols: Seq[String] = schema.options.keys.collect {
@@ -802,6 +810,13 @@ case class RecordExpiry(field: Int, dataType: DataType, name: String, minSec: Lo
     r.get(field, dataType).asInstanceOf[Number].longValue >= minSec
   }
 }
+
+/** A changelog pass through the compaction reader: the paths of the
+  * pre-image files among the scan's files, whether their rows are compared
+  * as stored or merged, and the commit sequence the rows carry (see
+  * [[graft.merge.ChangelogMergeRows]]).
+  */
+case class ChangelogPass(preImage: Set[String], storedPreImage: Boolean, seq: Long)
 
 /** Serializable per-schema-version read plan. */
 case class SchemaReadPlan(
@@ -835,7 +850,8 @@ class GraftReaderFactory(
     conf: org.apache.spark.util.SerializableConfiguration,
     dropKindIdx: Option[Int] = None,
     columnar: Boolean = false,
-    expiry: Option[RecordExpiry] = None)
+    expiry: Option[RecordExpiry] = None,
+    changelog: Option[ChangelogPass] = None)
     extends PartitionReaderFactory {
 
   // scan-level, not per-partition: Spark requires every partition of a
@@ -895,7 +911,9 @@ class GraftReaderFactory(
           case None => raw
         }
         val projected = undeleted.map(proj)
-        val aligned = expiry.fold(projected)(e => projected.filter(e.keep))
+        // a changelog pass sees expired rows: its fold applies the expiry
+        val aligned = expiry.filter(_ => changelog.isEmpty)
+          .fold(projected)(e => projected.filter(e.keep))
         if (!hasPath) aligned
         else {
           val pathRow = new GenericInternalRow(Array[Any](
@@ -934,6 +952,11 @@ class GraftReaderFactory(
     }
 
     val merged: Iterator[InternalRow] = (merger, p.merge) match {
+      case (Some(m), true) if changelog.isDefined =>
+        val c = changelog.get
+        new ChangelogMergeRows(m, StructType(outIdx.map(rowSchema(_))),
+          p.files.map(f => (rowsOf(f).map(_.copy()), c.preImage(f.path))),
+          c.storedPreImage, c.seq, r => expiry.forall(_.keep(r)))
       case (Some(m), true) =>
         // merge rows are buffered per key → copy out of the reused buffers
         new SortMergeRows(m, p.files.map(f => rowsOf(f).map(_.copy())))
@@ -1018,13 +1041,28 @@ object GraftScan {
     * and key is elided where it already holds). Deletes survive below the
     * max level and drop at it. No exchange, no aggregate.
     */
-  def compactionInput(table: GraftTable, files: Seq[DataFileMeta],
-      outputLevel: Int): org.apache.spark.sql.DataFrame = {
+  def compactionInput(table: GraftTable, files: Seq[DataFileMeta], outputLevel: Int,
+      nowSec: Long = System.currentTimeMillis() / 1000): org.apache.spark.sql.DataFrame =
+    mergeScan(table, files, outputLevel, None, nowSec)
+
+  /** The exact changelog of merging `files` into the max level, read
+    * through the same reader as [[compactionInput]]: per key, the before
+    * image of `pass.preImage` against the merge of every file
+    * ([[graft.merge.ChangelogMergeRows]]). Rows have compactionInput's
+    * layout and order. No exchange, no aggregate.
+    */
+  def changelogInput(table: GraftTable, files: Seq[DataFileMeta], pass: ChangelogPass,
+      nowSec: Long = System.currentTimeMillis() / 1000): org.apache.spark.sql.DataFrame =
+    mergeScan(table, files, GraftTable.MaxLevel, Some(pass), nowSec)
+
+  private def mergeScan(table: GraftTable, files: Seq[DataFileMeta], outputLevel: Int,
+      changelog: Option[ChangelogPass], nowSec: Long): org.apache.spark.sql.DataFrame = {
     val schema = table.schema
     val out = StructType(schema.structType.fields ++ Seq(GraftMeta.seqField,
       GraftMeta.posField, GraftMeta.kindField, GraftMeta.bucketField))
     val scan = new GraftScan(table.spark, table, None, out, Nil, None,
-      filesOverride = Some(files), compactTo = Some(outputLevel))
+      filesOverride = Some(files), compactTo = Some(outputLevel),
+      changelog = changelog, nowSec = nowSec)
     val parts = scan.planInputPartitions()
     val factory = scan.createReaderFactory()
     val rdd = table.spark.sparkContext

@@ -333,8 +333,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     * INCREMENTAL_BETWEEN CoreOptions.java:916).
     */
   def incremental(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val producer = schema.option(TableSchema.ChangelogProducerOpt, "input")
-    require(!schema.deletionVectors || producer == "lookup",
+    require(!schema.deletionVectors || schema.changelogProducer == ChangelogProducer.Lookup,
       "incremental reads on a deletion-vector table need " +
         "changelog-producer=lookup: a dv rewrite re-adds level-0 files, " +
         "which a raw delta scan would re-emit")
@@ -342,29 +341,33 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     // has already expired — a lagging stream keeps replaying seamlessly
     val ids = (store.snapshotIds ++ store.changelogIds).distinct.sorted
       .filter(id => id > fromExclusive && id <= toInclusive)
-    val files = ids.flatMap { id =>
-      val s = store.snapshotOrChangelog(id)
-      if (producer == "full-compaction" || producer == "lookup")
-        // exact -U/+U/-D stream produced at compaction time
-        // (full-compaction — FullChangelogMergeTreeCompactRewriter.java:43)
-        // or at write time (lookup — LookupMergeTreeCompactRewriter.java:51)
-        s.changelogManifests.flatMap(store.readManifest).collect {
-          case ManifestEntry(ManifestEntry.ADD, f) => f
-        }
-      // COMPACT snapshots reorganize existing rows (compaction, DV
-      // rewrites) — their delta ADDs are not new input and must not
-      // re-emit downstream (reference: DeltaFollowUpScanner skips
-      // compaction snapshots). OVERWRITE snapshots (overwrite/rollback)
-      // are likewise skipped unless opted in (reference default:
-      // streaming-read-overwrite=false).
-      else if (s.commitKind == CommitKind.COMPACT ||
-        (s.commitKind == CommitKind.OVERWRITE &&
-          !schema.option("streaming-read-overwrite", "false").toBoolean)) Nil
-      else s.deltaManifests.flatMap(store.readManifest).collect {
-        case ManifestEntry(ManifestEntry.ADD, f) if f.level == 0 => f
-      }
-    }
+    val files = ids.flatMap(id => changelogOf(store.snapshotOrChangelog(id))._2)
     withChangelogCols(rawUnion(files, schema))
+  }
+
+  /** The changelog of snapshot `s`: the manifests and the files a
+    * streaming or incremental read of it consumes, and that changelog
+    * expiry keeps or deletes with it.
+    *  - `lookup`/`full-compaction`: the exact -U/+U/-D changelog files,
+    *    written at commit time (LookupMergeTreeCompactRewriter.java:51) or
+    *    at compaction time (FullChangelogMergeTreeCompactRewriter.java:43).
+    *  - otherwise the level-0 input files the commit added. COMPACT
+    *    snapshots reorganize existing rows (compaction, DV rewrites): their
+    *    ADDs are not new input and must not re-emit downstream (reference:
+    *    DeltaFollowUpScanner skips compaction snapshots). OVERWRITE
+    *    snapshots (overwrite/rollback) are likewise skipped unless
+    *    `streaming-read-overwrite` is set (reference default false).
+    */
+  private[graft] def changelogOf(s: Snapshot): (Seq[String], Seq[DataFileMeta]) = {
+    def adds(manifests: Seq[String], keep: DataFileMeta => Boolean) =
+      (manifests, manifests.flatMap(store.readManifest).collect {
+        case ManifestEntry(ManifestEntry.ADD, f) if keep(f) => f
+      })
+    if (schema.changelogProducer.writesFiles) adds(s.changelogManifests, _ => true)
+    else if (s.commitKind == CommitKind.COMPACT ||
+      (s.commitKind == CommitKind.OVERWRITE &&
+        !schema.option("streaming-read-overwrite", "false").toBoolean)) (Nil, Nil)
+    else adds(s.deltaManifests, _.level == 0)
   }
 
   /** Incremental read between two tags (reference: CoreOptions
@@ -856,13 +859,13 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     * looking up pre-images at write time, so streaming readers get exact
     * retractions WITHOUT waiting for a full compaction (reference:
     * LookupMergeTreeCompactRewriter.java:51, LookupLevels.java:64 — there a
-    * file-level point lookup; here the distributed analog: merge the
-    * TOUCHED buckets' prior state and diff it against the post-write state,
-    * bucket-local, no table-wide work).
+    * file-level point lookup; here one bucket-local merge read of the
+    * touched buckets, old files plus the commit's, that compares each key's
+    * merged pre-image (the old files) with its merged state after the
+    * commit; no table-wide work).
     */
   private def lookupChangelog(newFiles: Seq[DataFileMeta], seq: Long): Seq[ManifestEntry] = {
-    if (schema.option(TableSchema.ChangelogProducerOpt, "none") != "lookup" ||
-        newFiles.isEmpty) return Nil
+    if (schema.changelogProducer != ChangelogProducer.Lookup || newFiles.isEmpty) return Nil
     val live = store.latestSnapshot.map(store.liveFiles).getOrElse(Nil)
     val oldFiles =
       if (schema.crossPartition) {
@@ -874,17 +877,16 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         val groups = newFiles.map(f => (f.partition, f.bucket)).toSet
         live.filter(f => groups.contains((f.partition, f.bucket)))
       }
-    // the state a terminal compaction of the files would write: the read
-    // path's bucket-local merge, deletes dropped
-    def mergedState(fs: Seq[DataFileMeta]) =
-      graft.spark.v2.GraftScan.compactionInput(this, fs, GraftTable.MaxLevel)
-    // the commit's own keys scope row-deduplicate: a touched-but-unchanged
-    // key emits its -U/+U pair unless the option suppresses it
-    val touchedKeys = rawUnion(newFiles, schema)
-      .select(schema.primaryKeys.map(col): _*)
-    changelogDiff(mergedState(oldFiles), mergedState(oldFiles ++ newFiles), seq,
-      Some(touchedKeys))
+    stageChangelog(oldFiles ++ newFiles, graft.spark.v2.ChangelogPass(
+      oldFiles.map(_.path).toSet, storedPreImage = false, seq))
   }
+
+  /** Stage the changelog pass over `files` as level-0 changelog files. */
+  private[table] def stageChangelog(files: Seq[DataFileMeta],
+      pass: graft.spark.v2.ChangelogPass,
+      nowSec: Long = System.currentTimeMillis() / 1000): Seq[ManifestEntry] =
+    stageWrite(GraftScan.changelogInput(this, files, pass, nowSec), level = 0, seq = pass.seq)
+      .map(ManifestEntry(ManifestEntry.ADD, _))
 
   /** Bound a cross-partition changelog pre-image with the global pk index:
     * join the commit's touched key hashes against the persisted index and

@@ -76,8 +76,8 @@ trait MaintenanceOps { self: GraftTable =>
     *    collapse its count to 1 — and except retract inputs (-U/-D), whose
     *    sign is derived from the row kind the intermediate cannot preserve
     *    per contribution (checked against the actual runs at compact time).
-    * The full-compaction changelog producer always needs the terminal
-    * whole-bucket merge to diff against.
+    * The full-compaction changelog producer compares each key's top-level
+    * row with its terminal merge, so it never rewrites a run subset.
     */
   private def subsetEligible: Boolean = {
     val engineOk = schema.mergeEngine match {
@@ -91,8 +91,7 @@ trait MaintenanceOps { self: GraftTable =>
         }
       case _ => false
     }
-    engineOk &&
-      schema.option(TableSchema.ChangelogProducerOpt, "none") != "full-compaction"
+    engineOk && schema.changelogProducer != ChangelogProducer.FullCompaction
   }
 
   /** Aggregation folds are sign-sensitive to retract kinds; a subset
@@ -299,27 +298,24 @@ trait MaintenanceOps { self: GraftTable =>
     val touched = if (terminal) inGroups else inGroups.filter(_.level < GraftTable.MaxLevel)
     if (touched.isEmpty) return commitFiles(Nil, CommitKind.COMPACT)
     val seq = store.latestSnapshotId.getOrElse(0L)
-    val merged = graft.spark.v2.GraftScan.compactionInput(this, touched, level)
+    // one clock for the rewrite and its changelog: both expire the same rows
+    val nowSec = System.currentTimeMillis() / 1000
+    val merged = graft.spark.v2.GraftScan.compactionInput(this, touched, level, nowSec)
     // a no-op sort on fixed-partition tables (the merge already emits this
     // order); cross-partition groups span partition directories
     val prepared = (if (terminal) merged.withColumn(KindCol, lit(KindInsert)) else merged)
       .sortWithinPartitions((dirColsPublic ++ schema.primaryKeys).map(col): _*)
     val files = stageWrite(prepared, level = level, seq = seq)
-    // full-compaction changelog: exact -U/+U/-D diff between the previous
-    // compacted state and the new one (reference:
-    // FullChangelogMergeTreeCompactRewriter.java:43)
+    // full-compaction changelog: a second pass of the same reader compares
+    // each key's top-level row, as stored, with its merged state (reference:
+    // FullChangelogMergeTreeCompactRewriter.java:43); keys with rows below
+    // the top level are the input since the last full compaction — the
+    // reference's row-deduplicate scope
     val changelog =
-      if (!terminal ||
-          schema.option(TableSchema.ChangelogProducerOpt, "none") != "full-compaction") Nil
-      else {
-        val oldTop = rawUnion(touched.filter(_.level >= GraftTable.MaxLevel), schema)
-        // keys with records BELOW the top level are the input since the
-        // last full compaction — the reference's row-deduplicate scope
-        val touchedKeys = rawUnion(
-          touched.filter(_.level < GraftTable.MaxLevel), schema)
-          .select(schema.primaryKeys.map(col): _*)
-        changelogDiff(oldTop, rawUnion(files, schema), seq, Some(touchedKeys))
-      }
+      if (!terminal || schema.changelogProducer != ChangelogProducer.FullCompaction) Nil
+      else stageChangelog(touched, graft.spark.v2.ChangelogPass(
+        touched.filter(_.level >= GraftTable.MaxLevel).map(_.path).toSet,
+        storedPreImage = true, seq), nowSec)
     // merged rows can land in a (partition, bucket) combo no prior commit
     // recorded for their key (partial-update can mix partition-column
     // sources) — index the rewrite output so the global index keeps
@@ -329,64 +325,6 @@ trait MaintenanceOps { self: GraftTable =>
         files.map(ManifestEntry(ManifestEntry.ADD, _)),
       CommitKind.COMPACT,
       changelog = changelog, indexFiles = globalIndexDelta(files))
-  }
-
-  /** Compute the per-key diff of two merged states and stage it as
-    * changelog files: +I for new keys, -U/+U pairs for updated values, -D
-    * for vanished keys. One full-outer join on the primary key, one write.
-    *
-    * `touchedKeys` (a distinct pk frame of the keys the triggering input
-    * actually wrote) drives the reference's
-    * `changelog-producer.row-deduplicate` default: a touched key whose
-    * value did NOT change still emits its -U/+U pair unless the option
-    * suppresses it. Untouched keys never emit. None = suppress no-op
-    * pairs regardless (callers with no touched-key notion).
-    */
-  protected def changelogDiff(oldState: org.apache.spark.sql.DataFrame,
-      newState: org.apache.spark.sql.DataFrame, seq: Long,
-      touchedKeys: Option[org.apache.spark.sql.DataFrame] = None): Seq[ManifestEntry] = {
-    import org.apache.spark.sql.functions.{array, coalesce, explode, filter => afilter, struct, when}
-    val pks = schema.primaryKeys
-    val values = schema.fields.map(_.name).filterNot(pks.contains)
-    def side(df: org.apache.spark.sql.DataFrame, mark: String) =
-      df.select((schema.fields.map(f => col(f.name)) :+ col(BucketCol)): _*)
-        .withColumn(mark, lit(1))
-    val o = side(oldState, "__om").alias("o")
-    val n = side(newState, "__nm").alias("n")
-    val cond = pks.map(k => col(s"o.$k") === col(s"n.$k")).reduce(_ && _)
-    val outer = o.join(n, cond, "full_outer")
-    val joined = touchedKeys.filter(_ => !schema.changelogRowDeduplicate) match {
-      case None => outer.withColumn("__tm", lit(null: Integer))
-      case Some(t) =>
-        val tk = t.select(pks.map(k => col(k).as(s"__t_$k")): _*).distinct()
-          .withColumn("__tm", lit(1)).alias("t")
-        outer.join(tk,
-          pks.map(k => col(s"n.$k") === col(s"t.__t_$k")).reduce(_ && _),
-          "left_outer")
-    }
-    val oldOnly = col("__om").isNotNull && col("__nm").isNull
-    val newOnly = col("__nm").isNotNull && col("__om").isNull
-    val valuesDiffer =
-      !(struct(values.map(v => col(s"o.$v")): _*) <=>
-        struct(values.map(v => col(s"n.$v")): _*))
-    val changed = col("__om").isNotNull && col("__nm").isNotNull &&
-      (valuesDiffer || col("__tm").isNotNull)
-    def out(kind: Byte, s: String) = struct(
-      (lit(kind).as("__k") +: schema.fields.map(f => col(s"$s.${f.name}").as(f.name))) :+
-        col(s"$s.$BucketCol").as(BucketCol): _*)
-    val candidates = array(
-      when(newOnly, out(KindInsert, "n")),
-      when(changed, out(KindUpdateBefore, "o")),
-      when(changed, out(KindUpdateAfter, "n")),
-      when(oldOnly, out(KindDelete, "o")))
-    val rows = joined
-      .select(explode(afilter(candidates, x => x.isNotNull)).as("r"))
-      .select(col("r.*"))
-      .withColumn(KindCol, col("__k")).drop("__k")
-      .withColumn(SeqCol, lit(seq))
-      .withColumn(PosCol, when(col(KindCol) === lit(KindUpdateBefore), 0L).otherwise(1L))
-    val files = stageWrite(rows, level = 0, seq = seq)
-    files.map(ManifestEntry(ManifestEntry.ADD, _))
   }
 
   /** Full compaction of a primary-key table: merge every (partition, bucket)
@@ -817,24 +755,12 @@ trait MaintenanceOps { self: GraftTable =>
   }
 
   /** The manifests + file paths a streaming/incremental read of snapshot
-    * `s` consumes — EXACTLY the selection [[GraftTable.incremental]] makes:
-    * explicit changelog files for lookup/full-compaction producers, level-0
-    * delta ADDs otherwise, nothing for compaction/overwrite commits.
+    * `s` consumes ([[GraftTable.changelogOf]]), each file with its
+    * sidecars.
     */
   private def changelogPayload(s: Snapshot): (Seq[String], Seq[String]) = {
-    val producer = schema.option(TableSchema.ChangelogProducerOpt, "input")
-    def sidecars(f: DataFileMeta): Seq[String] =
-      f.path +: (f.dvPath.toSeq ++ f.blooms.values.toSeq)
-    if (producer == "full-compaction" || producer == "lookup")
-      (s.changelogManifests, s.changelogManifests.flatMap(store.readManifest).collect {
-        case ManifestEntry(ManifestEntry.ADD, f) => sidecars(f)
-      }.flatten)
-    else if (s.commitKind == CommitKind.COMPACT ||
-      (s.commitKind == CommitKind.OVERWRITE &&
-        !schema.option("streaming-read-overwrite", "false").toBoolean)) (Nil, Nil)
-    else (s.deltaManifests, s.deltaManifests.flatMap(store.readManifest).collect {
-      case ManifestEntry(ManifestEntry.ADD, f) if f.level == 0 => sidecars(f)
-    }.flatten)
+    val (manifests, files) = changelogOf(s)
+    (manifests, files.flatMap(f => f.path +: (f.dvPath.toSeq ++ f.blooms.values.toSeq)))
   }
 
   /** Expire preserved changelogs by their OWN retention

@@ -836,6 +836,23 @@ class MaintenanceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .forall(fs => fs.size == 1 && fs.head.level == 1))
     assert(t.toDF.orderBy("o_orderkey").collect().sameElements(expected2))
     assert(expected.length > expected2.length)
+    // the changelog producers' passes read through the same reader: a
+    // full compaction's and a lookup-producer upsert's
+    for (producer <- Seq("full-compaction", "lookup")) {
+      val c = GraftTable.create(spark, tmpTable(), orders.schema,
+        primaryKeys = Seq("o_orderkey"), options = Map("bucket" -> "2",
+          "write-only" -> "true", "changelog-producer" -> producer))
+      c.upsert(orders)
+      c.compact()
+      val update = orders.filter(col("o_orderkey") % 5 === 0)
+        .withColumn("o_totalprice", col("o_totalprice") + 1)
+      val what = s"the $producer changelog"
+      val plans =
+        if (producer == "lookup") plansOf(c.upsert(update))
+        else { c.upsert(update); plansOf(c.compact()) }
+      assertBucketLocal(what, plans)
+      assert(c.changelogOf(c.store.latestSnapshot.get)._2.nonEmpty, s"$what is empty")
+    }
   }
 
   test("lookup changelog: merged states carry no aggregate") {
