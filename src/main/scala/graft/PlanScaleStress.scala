@@ -178,13 +178,12 @@ object PlanScaleStress {
       println(s"[decompose] shards=${sn.manifestMeta.size} skipped=$nSkip")
       stage("df_analyze")(t.toDF.filter(col("p") === "p0000")
         .queryExecution.optimizedPlan.toString.length)
-      // index-side cost in isolation (fold + per-file filter + FileStatus
-      // + PartitionDirectory grouping), fresh index per call — what the
-      // full plan pays before Spark's FilePartition binning
+      // table-side cost in isolation (fold + per-file pruning + split
+      // packing), fresh scan per call — what the full plan pays beneath
+      // Spark's own planning
       stage("listfiles_full")(
-        new graft.spark.GraftFileIndex(spark, store, t.schema, Left(sn),
-            StructType(Seq(StructField("p", StringType))))
-          .listFiles(Nil, Nil).iterator.map(_.files.length).sum)
+        new graft.spark.v2.GraftScan(spark, t, Some(sn), t.schema.structType, Nil, None)
+          .planInputPartitions().length)
       stage("plan_full")(t.toDF.queryExecution.toRdd.getNumPartitions)
       stage("plan_pruned")(t.toDF.filter(col("p") === "p0000")
         .queryExecution.toRdd.getNumPartitions)

@@ -34,8 +34,8 @@ import org.apache.spark.util.SerializableConfiguration
   * first-class `file.format` next to parquet/orc). The integration seam is
   * Spark's `FileFormat`: the engine's write path
   * (`GraftTable.stageWrite`) drives [[prepareWrite]] through Spark's
-  * `FileFormatWriter` and both scan paths (DSv1 `HadoopFsRelation`, DSv2
-  * `GraftScan`) drive [[buildReader]], so Avro tables get partition
+  * `FileFormatWriter` and the scan (`GraftScan`, the one read path)
+  * drives [[buildReader]], so Avro tables get partition
   * pruning, stats-based file skipping (stats collected in the writer task,
   * as for every format), MOR merge and schema evolution for free.
   *

@@ -1,9 +1,10 @@
 package graft.spark
 
-import graft.core.TableSchema
+import graft.core.Snapshot
+import graft.spark.v2.GraftScan
 import graft.table.GraftTable
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources._
@@ -12,14 +13,13 @@ import org.apache.spark.sql.types.StructType
 
 /** `format("graft")` integration:
   *
-  *  - batch read: `spark.read.format("graft").load(path)` — append tables
-  *    (and `read-optimized=true` PK reads) resolve to a HadoopFsRelation over
-  *    [[GraftFileIndex]], so partition pruning / stats skipping / vectorized
-  *    parquet all apply. Merged (merge-on-read) PK reads need a plan on top
-  *    of the scan, which DataSource V1 relations cannot express — use
-  *    `Graft.load(spark, path)` or `GraftTable.load(...).toDF` for those
-  *    (same integration style as the reference's Spark connector V1 write
-  *    fallback: paimon-spark SparkWrite.scala:30).
+  *  - batch read: `spark.read.format("graft").load(path)` — a
+  *    [[GraftRelation]] that plans a [[graft.spark.v2.GraftScan]] with the
+  *    pushed columns and filters, so it reads what `GraftTable.toDF` reads:
+  *    merged for primary-key tables, pruned, DV-masked, schema-aligned.
+  *    Options `scan.snapshot-id` / `scan.tag-name` time-travel;
+  *    `read-optimized=true` reads the fully-compacted files only, as
+  *    `GraftTable.readOptimized` does.
   *  - batch write: `df.write.format("graft").option("primary-keys", ...)
   *    .save(path)` — creates the table on first write.
   *  - streaming read: snapshot-delta microbatches (offset = snapshot id),
@@ -69,17 +69,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
         case None => table.store.latestSnapshot
       }
     }
-    val readOptimized = parameters.get("read-optimized").exists(_.toBoolean)
-    if (table.isPrimaryKeyed && !readOptimized) {
-      throw new IllegalArgumentException(
-        "graft: merged (merge-on-read) reads of primary-key tables need a " +
-          "plan above the scan; use GraftTable.load(spark, path).toDF or the " +
-          "DSv2 catalog (spark.sql.catalog.<name>), " +
-          "or pass option read-optimized=true for compacted-only data")
-    }
-    val files = snapshot.map(table.store.liveFiles).getOrElse(Nil)
-    val selected = if (readOptimized) files.filter(_.level >= GraftTable.MaxLevel) else files
-    table.fsRelation(selected)
+    new GraftRelation(table, snapshot, parameters.get("read-optimized").exists(_.toBoolean))
   }
 
   // ---------------- batch write ----------------
@@ -110,7 +100,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       case SaveMode.Ignore if exists => ()
       case _ => table.write(data)
     }
-    table.fsRelation(table.store.latestSnapshot.map(table.store.liveFiles).getOrElse(Nil))
+    new GraftRelation(table, table.store.latestSnapshot, readOptimized = false)
   }
 
   // ---------------- streaming read ----------------
@@ -131,6 +121,37 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
   override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
       partitionColumns: Seq[String], outputMode: OutputMode): Sink =
     new GraftSink(sqlContext.sparkSession, pathOf(parameters), parameters)
+}
+
+/** The batch relation of `format("graft")`: each scan is a
+  * [[graft.spark.v2.GraftScan]] of `snapshot` over the required columns and
+  * pushed filters, read by the scan's own reader in Spark tasks. The scan
+  * prunes files only, so Spark re-applies every filter above it.
+  */
+class GraftRelation(val table: GraftTable, snapshot: Option[Snapshot],
+    readOptimized: Boolean) extends BaseRelation with PrunedFilteredScan {
+
+  override def sqlContext: SQLContext = table.spark.sqlContext
+
+  override def schema: StructType = table.schema.structType
+
+  // the reader emits Catalyst rows
+  override def needConversion: Boolean = false
+
+  override def buildScan(requiredColumns: Array[String],
+      filters: Array[Filter]): org.apache.spark.rdd.RDD[Row] = {
+    val required = StructType(requiredColumns.map(schema(_)))
+    val rows = snapshot match {
+      case None => table.spark.sparkContext.emptyRDD[InternalRow]
+      case Some(s) if readOptimized =>
+        new GraftScan(table.spark, table, None, required, filters.toSeq, None,
+          filesOverride = Some(table.store.liveFiles(s).filter(_.level >= GraftTable.MaxLevel)),
+          raw = true).rowsRDD
+      case Some(s) =>
+        new GraftScan(table.spark, table, Some(s), required, filters.toSeq, None).rowsRDD
+    }
+    rows.asInstanceOf[org.apache.spark.rdd.RDD[Row]]
+  }
 }
 
 /** Microbatch source over the snapshot chain: each batch is the raw delta of

@@ -2,161 +2,24 @@ package graft.spark
 
 import graft.GraftMeta
 import graft.core._
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, Murmur3Hash, XxHash64}
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileIndex, PartitionDirectory}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
 import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEqualTo, Filter, In => SIn}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Scan planner: maps a snapshot's manifest entries to Spark's file-source
-  * scan, pruning at three levels before any executor touches a file
-  * (reference: paimon-core AbstractFileStoreScan.doPlan:287):
+/** File-pruning helpers of scan planning ([[graft.spark.v2.GraftScan]]
+  * prunes at partition, bucket, stats and bloom level before any executor
+  * touches a file; reference: paimon-core AbstractFileStoreScan.doPlan:287):
   *
-  *  1. partition pruning — exact evaluation of partition filters against the
-  *     partition values recorded per file (reference:
-  *     SnapshotReaderImpl.withFilter:158-178);
-  *  2. bucket pruning — primary-key equality hashes to a single bucket
-  *     (reference: ScanBucketFilter / SnapshotReaderImpl.withBucketFilter:213);
-  *  3. stats skipping — per-file min/max/nullCount evaluation
-  *     (reference: KeyValueFileStoreScan.filterByStats:103).
-  *
-  * Catalyst calls `listFiles` with the pushed partition + data filters, so
-  * every read through this index — library API or `format("graft")` — gets
-  * pruning and Spark's vectorized parquet reader (row-group pruning included)
-  * with no custom reader code. This is the integration style proven at
-  * 100 TB+ scale by open lakehouse formats on Spark.
+  *  - bucket pruning — primary-key equality hashes to a single bucket
+  *    (reference: ScanBucketFilter / SnapshotReaderImpl.withBucketFilter:213);
+  *  - dynamic-bucket and global-index probes — a pinned key's buckets or
+  *    (partition, bucket) groups, read from the snapshot's pk index;
+  *  - bloom skipping — an equality literal absent from a file's bloom.
   */
-class GraftFileIndex(
-    spark: SparkSession,
-    store: FileStore,
-    schema: TableSchema,
-    source: Either[Snapshot, Seq[DataFileMeta]],
-    val partitionSchema: StructType) extends FileIndex {
-
-  /** Compatibility constructor over an explicit file list. */
-  def this(spark: SparkSession, store: FileStore, schema: TableSchema,
-      files: Seq[DataFileMeta], partitionSchema: StructType) =
-    this(spark, store, schema, Right(files), partitionSchema)
-
-  private val dataDirStr = store.dataDir.toString
-  private val typeByName: Map[String, DataType] =
-    schema.fields.map(f => f.name -> f.sparkType).toMap
-  private val typeOf: String => Option[DataType] = typeByName.get
-
-  private lazy val allFiles: Seq[DataFileMeta] = source match {
-    case Right(fs) => fs
-    case Left(snap) => store.liveFiles(snap)
-  }
-
-  override def rootPaths: Seq[Path] = Seq(store.dataDir)
-
-  override def refresh(): Unit = ()
-
-  override def inputFiles: Array[String] =
-    allFiles.map(f => new Path(store.rootPath, f.path).toString).toArray
-
-  override def sizeInBytes: Long = source match {
-    // metadata-only estimate: no manifest shard is read just for CBO sizing
-    case Left(snap) if snap.manifestMeta.nonEmpty =>
-      math.max(snap.manifestMeta.map(_.dataSize).sum, 1L)
-    case _ => math.max(allFiles.map(_.size).sum, 1L)
-  }
-
-  override def listFiles(
-      partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val partPreds = translate(partitionFilters)
-    val dataPreds = translate(dataFilters)
-    val bucketKeep = GraftFileIndex.bucketPruner(store, schema, dataPreds)
-    // dynamic-bucket point lookups prune through the durable hash index
-    val dynKeep: DataFileMeta => Boolean = source match {
-      case Left(snap) =>
-        GraftFileIndex.dynamicBuckets(spark, store, schema, snap.indexFiles, dataPreds)
-          .map(bs => (f: DataFileMeta) => bs.contains(f.bucket))
-          .getOrElse(_ => true)
-      case _ => _ => true
-    }
-    // cross-partition point lookups prune to the key's indexed partitions
-    val xpKeep: DataFileMeta => Boolean = source match {
-      case Left(snap) =>
-        GraftFileIndex.crossPartitionGroups(spark, store, schema,
-            snap.indexFiles, dataPreds)
-          .map(gs => (f: DataFileMeta) =>
-            gs.contains((graft.table.GraftTable.encodePartition(f.partition), f.bucket)))
-          .getOrElse(_ => true)
-      case _ => _ => true
-    }
-
-    // manifest-shard skipping: folded shards whose recorded partition
-    // range OR column-stat ranges can't match are never parsed. Stats
-    // shard tests reuse the compiled per-file evaluator over the shard's
-    // folded ColStats (min of mins / max of maxes / summed nulls) — a
-    // key-range plan at 10⁷ files read every shard (60+ s of manifest
-    // parse) before shard-level colStats existed.
-    val candidates = source match {
-      case Left(snap) if partPreds.nonEmpty || dataPreds.nonEmpty =>
-        val shardStats = dataPreds.map(p => Pruning.compileMight(p, typeOf))
-        store.liveFiles(snap, meta => {
-          val partOk = (meta.ptMin, meta.ptMax) match {
-            case (Some(lo), Some(hi)) =>
-              partPreds.forall(p => Pruning.shardMightMatch(p, schema.partitionKeys, lo, hi))
-            case _ => true
-          }
-          partOk && (meta.colStats.isEmpty ||
-            shardStats.forall(_(meta.colStats, meta.rowCount)))
-        })
-      case _ => allFiles
-    }
-
-    // predicate evaluation is compiled/memoized ONCE per plan: partition
-    // predicates run per DISTINCT partition tuple, stats predicates have
-    // types + literals pre-resolved — per-file interpretation measured
-    // 13.7 s (pruned) / 8.5 s (stats) on a 1M-file plan
-    val partKeep = Pruning.partitionKeep(partPreds, partitionValueNames, typeOf)
-    val statsKeep: DataFileMeta => Boolean =
-      if (dataPreds.isEmpty) _ => true
-      else {
-        val compiled = dataPreds.map(p => Pruning.compileMight(p, typeOf))
-        f => compiled.forall(_(f.stats, f.rowCount))
-      }
-    val selected = candidates.filter { f =>
-      partKeep(partitionOf(f)) &&
-      bucketKeep(f) && dynKeep(f) && xpKeep(f) && statsKeep(f) &&
-      GraftFileIndex.bloomMightMatch(store, schema, f, dataPreds)
-    }
-
-    selected.groupBy(f => (f.partition, f.bucket)).toSeq.map { case ((pv, bucket), fs) =>
-      PartitionDirectory(partitionInternalRow(pv, bucket), fs.map(toFileStatus).toArray)
-    }
-  }
-
-  /** Names of the partition-path columns in order (incl. synthetic bucket). */
-  private def partitionValueNames: Seq[String] =
-    if (schema.hasBucketDirs) schema.partitionKeys :+ GraftMeta.BucketCol
-    else schema.partitionKeys
-
-  private def partitionOf(f: DataFileMeta): Seq[String] =
-    if (schema.hasBucketDirs) f.partition :+ f.bucket.toString else f.partition
-
-  private def translate(exprs: Seq[Expression]): Seq[Filter] =
-    exprs.flatMap(e => org.apache.spark.sql.graft.SparkShims.translateFilter(e))
-
-  private def toFileStatus(f: DataFileMeta): FileStatus =
-    new FileStatus(f.size, false, 1, 128L * 1024 * 1024, 0L,
-      new Path(store.rootPath, f.path))
-
-  private def partitionInternalRow(values: Seq[String], bucket: Int): InternalRow = {
-    val all: Seq[Any] = partitionSchema.fields.toSeq.zipWithIndex.map { case (sf, i) =>
-      if (sf.name == GraftMeta.BucketCol) bucket
-      else GraftFileIndex.partitionValueToInternal(sf.dataType, values(i))
-    }
-    new GenericInternalRow(all.toArray)
-  }
-}
-
 object GraftFileIndex {
 
   /** Bloom-index file skipping: an equality on an indexed column whose
@@ -181,13 +44,6 @@ object GraftFileIndex {
       }
     }
   }
-
-  /** Primary-key point lookups prune to one bucket: if the filters pin every
-    * primary-key column with an equality, hash the literals exactly like the
-    * write path does (Murmur3, seed 42 — Spark's functions.hash).
-    */
-  def bucketFromFilters(schema: TableSchema, filters: Seq[Filter]): Option[Int] =
-    bucketsFromFilters(schema, filters).collect { case s if s.size == 1 => s.head }
 
   /** Per-file bucket-prune predicate that is safe across bucket-rescale
     * history: each file's bucket id is checked against literals hashed with

@@ -18,8 +18,9 @@ case class GraftOffset(snapshotId: Long) extends Offset {
   * PaimonMicroBatchStream.scala:32 + DataTableStreamScan.java:51):
   * per-snapshot delta follow-up, admission control by row count
   * (`read.max-rows-per-batch`), and bounded AvailableNow runs. Rows carry
-  * the table schema; use the DSv1 `format("graft")` source or the
-  * `audit_log` system table when row kinds are needed as columns.
+  * the table schema; use the `format("graft")` streaming source
+  * (`GraftSource`) or the `audit_log` system table when row kinds are
+  * needed as columns.
   */
 class GraftMicroBatchStream(
     spark: SparkSession,

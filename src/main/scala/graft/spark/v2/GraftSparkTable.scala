@@ -28,13 +28,18 @@ class GraftSparkTable(
     /** Operation-level ACL hook (reference: PrivilegedFileStoreTable checks
       * SELECT on newScan, INSERT on newWrite); throws AccessDenied.
       */
-    acl: String => Unit = _ => ()) extends Table
+    acl: String => Unit = _ => (),
+    /** Raw mode over these files: stored rows with the merge machinery
+      * columns, no merge (see [[GraftScan.raw]]).
+      */
+    rawFiles: Option[Seq[graft.core.DataFileMeta]] = None) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete with TruncatableTable
     with SupportsMetadataColumns with SupportsPartitionManagement {
 
   override def name(): String = ident.toString
 
-  override def schema(): StructType = table.schema.structType
+  override def schema(): StructType =
+    if (rawFiles.isDefined) table.rawSchema else table.schema.structType
 
   /** Exposed metadata columns (reference: PaimonMetadataColumn.scala:42-49):
     * `__file_path` (raw scans) and `__bucket` (all scans of PK tables).
@@ -58,7 +63,8 @@ class GraftSparkTable(
         org.apache.spark.sql.types.LongType
       override def isNullable: Boolean = false
     }
-    if (table.schema.hasBucketDirs) Array(filePath, rowIndex, bucket)
+    // a raw scan carries __bucket as a data column
+    if (table.schema.hasBucketDirs && rawFiles.isEmpty) Array(filePath, rowIndex, bucket)
     else Array(filePath, rowIndex)
   }
 
@@ -216,7 +222,7 @@ class GraftSparkTable(
     // reader-side override of the table's own options, same precedence as
     // the V1 GraftSource path
     new GraftScanBuilder(spark, table, snap,
-      readOptions = options.asScala.toMap)
+      readOptions = options.asScala.toMap, rawFiles = rawFiles)
   }
 
   // ---------------- writes (V1 fallback, reference SparkWrite.scala:30) ----

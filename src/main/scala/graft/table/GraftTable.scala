@@ -2,11 +2,9 @@ package graft.table
 
 import graft.GraftMeta._
 import graft.core._
-import graft.spark.GraftFileIndex
 import graft.spark.v2.GraftScan
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -26,7 +24,9 @@ import java.util.UUID
   * Spark-first execution: writes stage through Spark's native parquet writer
   * (vectorized, codegen'd, distributed — the "memtable" is Spark's
   * sort-within-partition), then a metadata-only commit registers the files.
-  * Reads go through [[GraftFileIndex]] + Spark's vectorized reader.
+  * Every read of data files goes through [[GraftScan]]: table reads as the
+  * DSv2 relation the catalog uses, internal reads of a file list in its raw
+  * mode ([[rawDF]]).
   */
 class GraftTable(val spark: SparkSession, val store: FileStore)
     extends RowLevelOps with MaintenanceOps with SystemTables with SchemaEvolution
@@ -56,101 +56,30 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
 
   // ================= reads =================
 
-  /** Raw file rows (no merge): data cols + partition cols (+ seq/kind/bucket
-    * for PK tables). Pruning happens lazily in the FileIndex when Catalyst
-    * pushes filters.
+  /** Columns of a raw read ([[rawDF]]): the table fields, then the merge
+    * machinery columns and `__bucket` on PK tables, or `__bucket` on
+    * bucketed append tables.
     */
-  def rawDF(files: Seq[DataFileMeta], s: TableSchema = schema): DataFrame = {
-    // `file.format.per.level` can mix formats within ONE schema version —
-    // each file self-describes via its extension, so group per format and
-    // union the relations (one group in the common uniform case)
-    val groups = files.groupBy(f =>
-      GraftTable.formatNameOfPath(f.path).getOrElse(s.fileFormat))
-    if (groups.size <= 1)
-      spark.baseRelationToDataFrame(
-        fsRelationFor(Right(files), s, groups.keys.headOption.getOrElse(s.fileFormat)))
-    else groups.toSeq.sortBy(_._1).map { case (fmt, fs) =>
-      spark.baseRelationToDataFrame(fsRelationFor(Right(fs), s, fmt))
-    }.reduce(_.unionByName(_))
+  def rawSchema: StructType = {
+    val extra =
+      if (schema.isPrimaryKeyed) Seq(seqField, posField, kindField, bucketField)
+      else if (schema.appendBucketed) Seq(bucketField)
+      else Nil
+    StructType(schema.structType.fields ++ extra)
   }
 
-  /** The DSv1 `BaseRelation` beneath [[rawDF]] — pruning-aware file scan
-    * over the given live files (callers must pass format-uniform files). */
-  def fsRelation(files: Seq[DataFileMeta], s: TableSchema = schema): HadoopFsRelation =
-    fsRelationFor(Right(files), s, s.fileFormat)
-
-  private def fsRelationFor(source: Either[Snapshot, Seq[DataFileMeta]],
-      s: TableSchema, fmtName: String): HadoopFsRelation = {
-    val index = new GraftFileIndex(spark, store, s, source, partitionSchema(s))
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = partitionSchema(s),
-      dataSchema = physicalDataSchema(s),
-      bucketSpec = None,
-      fileFormat = GraftTable.fileFormatFor(fmtName),
-      options = Map.empty)(spark)
-  }
-
-  /** Raw rows of a whole snapshot. When every manifest is on the current
-    * schema (known from snapshot metadata alone), planning is LAZY: no
-    * manifest is parsed until Catalyst pushes filters into the FileIndex,
-    * and folded shards outside the partition predicate are skipped
-    * entirely (reference: ManifestList partition-stats pre-filter).
+  /** Every stored row of `files`, unmerged: the raw mode of [[GraftScan]].
+    * `-D` rows stay, deletion vectors mask, rows align to the current
+    * schema by field id, and no read-time default is filled in. The columns
+    * are [[rawSchema]]; `__file_path` and `__row_index` resolve as metadata
+    * columns. Pushed filters prune the files as a table scan's do.
     */
-  def rawSnapshot(s: Snapshot, to: TableSchema = schema): DataFrame = {
-    val singleSchema =
-      s.manifestMeta.nonEmpty && s.manifestMeta.forall(_.schemaIds.forall(_ == to.id))
-    val noDvs = s.manifestMeta.nonEmpty && s.manifestMeta.forall(_.dvCount == 0)
-    // per-level formats mix file formats within the current schema, which
-    // the single-relation lazy path cannot express — fall back to the
-    // listed union (formats of OLDER schema versions are covered by the
-    // singleSchema check: their files fail it and take rawUnion anyway)
-    if (singleSchema && noDvs && to.fileFormatPerLevel.isEmpty)
-      spark.baseRelationToDataFrame(fsRelationFor(Left(s), to, to.fileFormat))
-    else rawUnion(store.liveFiles(s), to)
-  }
+  def rawDF(files: Seq[DataFileMeta]): DataFrame =
+    relationDF(new graft.spark.v2.GraftSparkTable(spark, this, ident, rawFiles = Some(files)))
 
-  /** Filter out DV-deleted row positions — an anti-join on (file, row
-    * index) against the broadcast deleted-position set (reference:
-    * ApplyDeletionVectorReader; the DSv2 reader applies bitmaps
-    * executor-side instead).
-    */
-  private def applyDvs(df: DataFrame, files: Seq[DataFileMeta]): DataFrame = {
-    val dvd = files.filter(_.dvPath.isDefined)
-    if (dvd.isEmpty) return df
-    import spark.implicits._
-    // metadata already knows the total masked-row count — pick the plan
-    // by size instead of guessing: small masks broadcast from the driver
-    // (one tiny build side, zero table shuffle); big masks expand on the
-    // EXECUTORS (the driver ships only (path, dvPath) pairs and reads no
-    // bitmap — a 10M-row mask never materializes driver-side)
-    val pos =
-      if (dvd.map(_.dvCount).sum <= 1000000L)
-        broadcast(dvd.flatMap { f =>
-          store.readDv(f.dvPath.get).toArray.toSeq.map(i => f.path -> i.toLong)
-        }.toDF("__dv_file", "__dv_idx"))
-      else {
-        val rootStr = store.rootPath.toString
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        spark.sparkContext
-          .parallelize(dvd.map(f => (f.path, f.dvPath.get)),
-            math.min(dvd.size, spark.sparkContext.defaultParallelism))
-          .flatMap { case (p, dv) =>
-            val path = new Path(rootStr, dv)
-            val fs = path.getFileSystem(conf.value)
-            val in = fs.open(path)
-            val bytes = try in.readAllBytes() finally in.close()
-            val bm = new org.roaringbitmap.RoaringBitmap()
-            bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-            bm.toArray.iterator.map(i => (p, i.toLong))
-          }.toDF("__dv_file", "__dv_idx")
-      }
-    df.join(pos,
-      GraftTable.relDataPath === col("__dv_file") &&
-        col("_metadata.row_index") === col("__dv_idx"),
-      "left_anti")
-  }
+  /** `__file_path` of each of `files`, as a raw read reports it. */
+  private[table] def byFilePath(files: Seq[DataFileMeta]): Map[String, DataFileMeta] =
+    files.map(f => GraftScan.filePath(location, f.path) -> f).toMap
 
   private def emptyDF: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema.structType)
@@ -173,70 +102,27 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       .find(_.commitKind == CommitKind.COMPACT)
       .orElse(store.latestSnapshot)
 
+  /** The table at `snapshot`, read through the DSv2 relation the catalog
+    * uses (usable without a registered catalog entry): pruning by filter
+    * pushdown, DV bitmaps and schema alignment per file, defaults, CBO
+    * statistics, and for PK tables the executor-side k-way merge per
+    * bucket section — zero table shuffle, with the read-optimized columnar
+    * handoff for fully-compacted state. `__file_path`/`__row_index` are
+    * metadata columns of raw (append and DV) reads.
+    */
   def toDF(snapshot: Option[Snapshot]): DataFrame = snapshot match {
     case None => emptyDF
-    case Some(s) if schema.isPrimaryKeyed =>
-      // PK (and DV) tables read through the DSv2 relation: the merge runs
-      // as the scan's executor-side k-way fold per bucket section — ZERO
-      // table shuffle — with bucket/stats pruning via filter pushdown,
-      // the read-optimized columnar handoff for fully-compacted state,
-      // DV bitmaps applied executor-side, and CBO statistics. Compaction
-      // merges through the same reader (GraftScan.compactionInput).
-      dsv2DF(s)
-    case Some(s) =>
-      // append tables keep the v1 lazy FileSourceScan relation — already
-      // vectorized and GraftFileIndex-pruned, with schema-evolution /
-      // per-level-format unions riding the same code
-      applyDefaults(rawSnapshot(s, schema)
-        .select(schema.fields.map(f => col(f.name)): _*))
+    case Some(s) => relationDF(new graft.spark.v2.GraftSparkTable(spark, this, ident, Some(s)))
   }
 
-  /** DSv2 relation over a pinned snapshot (the catalog read path, usable
-    * without a registered catalog entry).
-    */
-  private def dsv2DF(s: Snapshot): DataFrame = {
-    val tbl = new graft.spark.v2.GraftSparkTable(spark, this,
-      org.apache.spark.sql.connector.catalog.Identifier.of(
-        Array.empty[String], new Path(store.root).getName), Some(s))
+  private def ident =
+    org.apache.spark.sql.connector.catalog.Identifier.of(
+      Array.empty[String], new Path(store.root).getName)
+
+  private def relationDF(tbl: graft.spark.v2.GraftSparkTable): DataFrame =
     org.apache.spark.sql.graft.SparkShims.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(tbl, None, None))
-  }
-
-  /** Fill configured per-field default values for NULLs at read (reference:
-    * DefaultValueAssigner.java:48 — read-time, post-merge).
-    */
-  private[graft] def applyDefaults(df: DataFrame): DataFrame = {
-    val withDefaults = schema.fields.filter(f => schema.defaultValueOf(f.name).isDefined)
-    if (withDefaults.isEmpty) df
-    else df.select(schema.fields.map { f =>
-      schema.defaultValueOf(f.name) match {
-        case Some(d) => coalesce(col(f.name), lit(d).cast(f.sparkType)).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-  }
-
-  /** Read files written under possibly different schema versions, remapped to
-    * `to` by persistent field id — added columns null-filled, renames mapped,
-    * type changes cast (reference: SchemaEvolutionUtil.createIndexCastMapping
-    * :138 + createDataProjection:266). Single-schema tables take the fast
-    * path with no union overhead.
-    */
-  def rawUnion(files: Seq[DataFileMeta], to: TableSchema): DataFrame = {
-    val groups = files.groupBy(_.schemaId).toSeq.sortBy(_._1)
-    groups match {
-      case Nil => rawDF(Nil, to)
-      // DVs must apply on the raw relation (the _metadata pseudo-column
-      // does not survive projections)
-      case Seq((sid, fs)) if sid == to.id => applyDvs(rawDF(fs, to), fs)
-      case gs =>
-        gs.map { case (sid, fs) =>
-          val from = if (sid == to.id) to else store.readSchema(sid)
-          alignRaw(applyDvs(rawDF(fs, from), fs), from, to)
-        }.reduce(_.unionByName(_))
-    }
-  }
 
   /** hash(bucket-key) % n routing column for bucketed append tables
     * (reference: append-table HASH_FIXED RowKeyExtractor). Same Murmur3
@@ -245,48 +131,6 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
   private[table] def appendBucketExpr: Column =
     pmod(hash(schema.bucketKeys.map(col): _*), lit(schema.numBuckets))
 
-  /** Field-id remap of one column, recursing into struct children when
-    * both schema versions carry nested field ids (reference:
-    * SchemaEvolutionUtil.createDataProjection:266 — nested RowTypes are
-    * projected by child id, so renames/adds/retypes INSIDE structs evolve
-    * like top-level columns). Structs without nested ids (pre-nested-id
-    * tables) fall back to a whole-column cast.
-    */
-  private def alignExpr(src: Column, from: graft.core.Field,
-      to: graft.core.Field): Column = {
-    if (from.nested.isEmpty || to.nested.isEmpty) return src.cast(to.sparkType)
-    val byId = from.nested.map(c => c.id -> c).toMap
-    val children = to.nested.map { tc =>
-      byId.get(tc.id) match {
-        case Some(fc) => alignExpr(src.getField(fc.name), fc, tc).as(tc.name)
-        case None => lit(null).cast(tc.sparkType).as(tc.name)
-      }
-    }
-    // struct(...) of a null row would yield a non-null struct of nulls —
-    // preserve top-level struct nullity explicitly
-    when(src.isNull, lit(null).cast(to.sparkType))
-      .otherwise(struct(children: _*))
-  }
-
-  /** Field-id projection of a raw frame from one schema version to another,
-    * preserving metadata columns.
-    */
-  private def alignRaw(df: DataFrame, from: TableSchema, to: TableSchema): DataFrame = {
-    if (from.id == to.id) return df
-    val byId = from.fields.map(f => f.id -> f).toMap
-    val dataCols = to.fields.map { f =>
-      byId.get(f.id) match {
-        case Some(old) => alignExpr(col(old.name), old, f).as(f.name)
-        case None => lit(null).cast(f.sparkType).as(f.name)
-      }
-    }
-    val metaCols =
-      if (to.isPrimaryKeyed) Seq(col(SeqCol), col(PosCol), col(KindCol), col(BucketCol))
-      else if (to.appendBucketed) Seq(col(BucketCol))
-      else Nil
-    df.select(dataCols ++ metaCols: _*)
-  }
-
   /** Read-optimized view: only fully-compacted (max level) files, no merge
     * (reference: table/system/ReadOptimizedTable.java:53).
     */
@@ -294,7 +138,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     case None => emptyDF
     case Some(s) =>
       val files = store.liveFiles(s).filter(_.level >= GraftTable.MaxLevel)
-      rawUnion(files, schema).select(schema.fields.map(f => col(f.name)): _*)
+      rawDF(files).select(schema.fields.map(f => col(f.name)): _*)
   }
 
   /** Point lookup: pk → row of the latest snapshot, read on the driver
@@ -342,7 +186,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     val ids = (store.snapshotIds ++ store.changelogIds).distinct.sorted
       .filter(id => id > fromExclusive && id <= toInclusive)
     val files = ids.flatMap(id => changelogOf(store.snapshotOrChangelog(id))._2)
-    withChangelogCols(rawUnion(files, schema))
+    withChangelogCols(rawDF(files))
   }
 
   /** The changelog of snapshot `s`: the manifests and the files a
@@ -454,7 +298,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     */
   def auditLog: DataFrame = store.latestSnapshot match {
     case None => withChangelogCols(rawDF(Nil))
-    case Some(s) => withChangelogCols(rawUnion(store.liveFiles(s), schema))
+    case Some(s) => withChangelogCols(rawDF(store.liveFiles(s)))
   }
 
   private def withChangelogCols(raw: DataFrame): DataFrame = {
@@ -827,32 +671,17 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     // keys of the new batch, read back from the just-staged L0 files (one
     // cheap columnar scan of the pk columns; ends in a distinct-shuffle so
     // AQE sizes the semi-join and broadcast-converts small batches)
-    val newKeys = rawDF(newFiles, schema).select(keyCols.map(col): _*).distinct()
-    // (partition+pk, file, row-index) of the prior state, one frame per
-    // schema version: the metadata pseudo-columns must materialize directly
-    // on each raw scan (they do not survive alignment projections or
-    // joins), and key columns remap by field id. Already-masked positions
-    // may re-match — OR-ing them again is idempotent, so prior DVs need no
-    // re-application here. `_metadata.row_index` is parquet's stored row
-    // position, valid even with predicate pushdown.
-    val oldPositions = old.groupBy(_.schemaId).toSeq.sortBy(_._1).map {
-      case (sid, fs) =>
-        val from = if (sid == schema.id) schema else store.readSchema(sid)
-        val byId = from.fields.map(f => f.id -> f).toMap
-        val keySel = keyCols.map { n =>
-          val cur = schema.fieldByName(n)
-          val oldF = byId.getOrElse(cur.id, throw new IllegalStateException(
-            s"key column $n (id ${cur.id}) missing from schema $sid"))
-          col(oldF.name).cast(cur.sparkType).as(n)
-        }
-        rawDF(fs, from).select(keySel :+
-          GraftTable.relDataPath.as("__f") :+
-          col("_metadata.row_index").cast("long").as("__i"): _*)
-    }.reduce(_.unionByName(_))
+    val newKeys = rawDF(newFiles).select(keyCols.map(col): _*).distinct()
+    // (partition+pk, file, row position) of the prior state, every schema
+    // version aligned by field id in one read. The scan masks prior DVs,
+    // so already-masked positions do not re-match.
+    val oldPositions = rawDF(old).select(keyCols.map(col) :+
+      col(graft.spark.v2.GraftSparkTable.FilePathCol).as("__f") :+
+      col(graft.spark.v2.GraftSparkTable.RowIndexCol).as("__i"): _*)
     val hits = oldPositions
       .join(newKeys, keyCols)
       .groupBy("__f").agg(graft.functions.BitmapAgg.collect(col("__i")).as("__bm"))
-    dvSidecarEntries(hits, old.map(f => f.path -> f).toMap)
+    dvSidecarEntries(hits, byFilePath(old))
   }
 
   /** `changelog-producer = lookup`: per-COMMIT -U/+U/-D/+I changelog by
@@ -903,7 +732,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       bucketFiles: Seq[DataFileMeta], indexDirs: Seq[String]): Seq[DataFileMeta] = {
     if (!schema.globalIndexEnabled || indexDirs.isEmpty || bucketFiles.isEmpty)
       return bucketFiles
-    val touched = rawDF(newFiles, schema)
+    val touched = rawDF(newFiles)
       .select(xxhash64(schema.primaryKeys.map(col): _*).as("__kh")).distinct()
     val idx = spark.read.parquet(
       indexDirs.map(d => new Path(store.rootPath, d).toString): _*)
@@ -924,17 +753,24 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     */
   private[graft] def globalIndexDelta(newFiles: Seq[DataFileMeta]): Seq[String] = {
     if (!schema.globalIndexEnabled || newFiles.isEmpty) return Nil
-    val fileMap = spark.createDataFrame(newFiles.map(f =>
-      (f.path, GraftTable.encodePartition(f.partition), f.bucket)))
+    val rel = s"index/global-${UUID.randomUUID()}"
+    globalIndexRows(newFiles).sortWithinPartitions("__kh")
+      .write.parquet(new Path(store.rootPath, rel).toString)
+    Seq(rel)
+  }
+
+  /** Distinct (`__kh` = xxhash64(pk), `__pt`, `__bucket`) global-index rows
+    * of every row of `files`, in one raw read.
+    */
+  private[table] def globalIndexRows(files: Seq[DataFileMeta]): DataFrame = {
+    val fileMap = spark.createDataFrame(files.map(f =>
+      (GraftScan.filePath(location, f.path), GraftTable.encodePartition(f.partition), f.bucket)))
       .toDF("__f", "__pt", BucketCol)
-    val delta = rawDF(newFiles, schema)
+    rawDF(files)
       .select(xxhash64(schema.primaryKeys.map(col): _*).as("__kh"),
-        GraftTable.relDataPath.as("__f"))
+        col(graft.spark.v2.GraftSparkTable.FilePathCol).as("__f"))
       .join(broadcast(fileMap), "__f")
       .select(col("__kh"), col("__pt"), col(BucketCol)).distinct()
-    val rel = s"index/global-${UUID.randomUUID()}"
-    delta.sortWithinPartitions("__kh").write.parquet(new Path(store.rootPath, rel).toString)
-    Seq(rel)
   }
 
   /** Dynamic-bucket (`bucket = -1`) key routing: buckets grow with the data
@@ -1409,10 +1245,6 @@ object GraftTable {
       case _ => new ParquetFileFormat
     }
 
-  /** File-format instance for a schema version's data files. */
-  def fileFormatOf(s: TableSchema): org.apache.spark.sql.execution.datasources.FileFormat =
-    fileFormatFor(s.fileFormat)
-
   /** Format of a data file from its extension (Spark writers always append
     * one, including through compression suffixes like `.snappy.parquet`).
     * None for unknown extensions — callers fall back to the file's SCHEMA
@@ -1490,14 +1322,6 @@ object GraftTable {
         length(c).cast("string"))))
     if (isChar) rpad(fit, n, " ") else fit
   }
-
-  /** Table-relative path of `_metadata.file_path` ("data/<dirs>/<file>").
-    * Spark writes one identically-named part file per output directory in a
-    * single job, so the FILENAME alone collides across buckets/partitions —
-    * bitmap keys must carry the directory path.
-    */
-  def relDataPath: Column =
-    concat(lit("data/"), substring_index(col("_metadata.file_path"), "/data/", -1))
 
   /** Canonical string form of a partition-value tuple for global-index
     * rows. Only ever compared against itself (never parsed back), so any

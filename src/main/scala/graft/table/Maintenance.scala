@@ -100,7 +100,7 @@ trait MaintenanceOps { self: GraftTable =>
     */
   private def retractFree(files: Seq[DataFileMeta]): Boolean =
     schema.mergeEngine != "aggregation" || files.isEmpty ||
-      rawUnion(files, schema)
+      rawDF(files)
         .filter(col(KindCol) =!= lit(KindInsert))
         .limit(1).isEmpty
 
@@ -187,25 +187,7 @@ trait MaintenanceOps { self: GraftTable =>
     if (live.isEmpty)
       return commitFiles(Nil, CommitKind.COMPACT,
         consumedIndexFiles = snap.indexFiles)
-    val keyFrames = live.groupBy(_.schemaId).toSeq.sortBy(_._1).map {
-      case (sid, fs) =>
-        val from = if (sid == schema.id) schema else store.readSchema(sid)
-        val byId = from.fields.map(f => f.id -> f).toMap
-        val keySel = schema.primaryKeys.map { n =>
-          val cur = schema.fieldByName(n)
-          val oldF = byId.getOrElse(cur.id, throw new IllegalStateException(
-            s"key column $n (id ${cur.id}) missing from schema $sid"))
-          col(oldF.name).cast(cur.sparkType).as(n)
-        }
-        rawDF(fs, from).select(keySel :+ GraftTable.relDataPath.as("__f"): _*)
-    }
-    val fileMap = spark.createDataFrame(live.map(f =>
-      (f.path, GraftTable.encodePartition(f.partition), f.bucket)))
-      .toDF("__f", "__pt", graft.GraftMeta.BucketCol)
-    val delta = keyFrames.reduce(_.unionByName(_))
-      .select(xxhash64(schema.primaryKeys.map(col): _*).as("__kh"), col("__f"))
-      .join(broadcast(fileMap), "__f")
-      .select(col("__kh"), col("__pt"), col(graft.GraftMeta.BucketCol)).distinct()
+    val delta = globalIndexRows(live)
     val rel = s"index/fold-${java.util.UUID.randomUUID()}"
     GraftTable.byKeyHash(delta, spark.sparkContext.defaultParallelism)
       .write.parquet(new Path(store.rootPath, rel).toString)
@@ -351,7 +333,7 @@ trait MaintenanceOps { self: GraftTable =>
     if (small.size < 2) return store.latestSnapshot.get
     val totalBytes = small.map(_.size).sum
     val target = math.max(1, (totalBytes / (smallFileThreshold * 2)).toInt)
-    val df = rawUnion(small, schema).select(schema.fields.map(f => col(f.name)): _*)
+    val df = rawDF(small).select(schema.fields.map(f => col(f.name)): _*)
     // bucketed append tables compact per (partition, bucket) so the merged
     // files keep the bucket layout (stageWrite re-derives the column)
     val prepared =
@@ -378,7 +360,7 @@ trait MaintenanceOps { self: GraftTable =>
     require(cols.nonEmpty)
     val live = store.latestSnapshot.map(store.liveFiles).getOrElse(Nil)
     if (live.isEmpty) return commitFiles(Nil, CommitKind.COMPACT)
-    val df = rawUnion(live, schema).select(schema.fields.map(f => col(f.name)): _*)
+    val df = rawDF(live).select(schema.fields.map(f => col(f.name)): _*)
     // bucketed append tables cluster WITHIN each bucket: bucket dirs are
     // the join layout and must survive the rewrite, so the shuffle keys on
     // (partition, bucket) and the sort key orders rows inside each bucket

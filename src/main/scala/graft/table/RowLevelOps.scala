@@ -2,6 +2,8 @@ package graft.table
 
 import graft.GraftMeta._
 import graft.core._
+import graft.spark.v2.GraftScan
+import graft.spark.v2.GraftSparkTable.{FilePathCol, RowIndexCol}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -51,15 +53,14 @@ trait RowLevelOps { self: GraftTable =>
     val snapOpt = store.latestSnapshot
     if (snapOpt.isEmpty) return commitFiles(Nil, CommitKind.APPEND)
     val live = store.liveFiles(snapOpt.get)
-    // rawUnion applies existing DVs, so already-deleted rows never re-match.
-    // Positions fold into per-file RoaringBitmap blobs AND sidecars are
-    // written ON THE EXECUTORS — the driver collects O(files) small
-    // (path, dvPath, count) tuples, never bitmap bytes or matched rows.
-    val hits = rawUnion(live, schema).filter(cond)
-      .select(GraftTable.relDataPath.as("__f"),
-        col("_metadata.row_index").cast("long").as("__i"))
+    // the raw read applies existing DVs, so already-deleted rows never
+    // re-match. Positions fold into per-file RoaringBitmap blobs AND
+    // sidecars are written ON THE EXECUTORS — the driver collects O(files)
+    // small (path, dvPath, count) tuples, never bitmap bytes or matched rows.
+    val hits = rawDF(live).filter(cond)
+      .select(col(FilePathCol).as("__f"), col(RowIndexCol).as("__i"))
       .groupBy("__f").agg(graft.functions.BitmapAgg.collect(col("__i")).as("__bm"))
-    val entries = dvSidecarEntries(hits, live.map(f => f.path -> f).toMap)
+    val entries = dvSidecarEntries(hits, byFilePath(live))
     if (entries.isEmpty) return snapOpt.get
     // COMPACT kind: a DV rewrite reorganizes existing rows — input-producer
     // delta scans must not re-emit the re-ADDed file's survivors as +I
@@ -163,28 +164,19 @@ trait RowLevelOps { self: GraftTable =>
   }
 
   /** Copy-on-write: rewrite only the files containing rows matching cond.
-    * Candidate files are narrowed by manifest pruning (the filter pushes into
-    * the FileIndex), then pinned exactly via `_metadata.file_path`.
+    * Candidate files are narrowed by the raw scan's pruning (the filter is
+    * pushed into it), then pinned exactly via `__file_path`.
     */
   private def rewriteTouched(cond: Column)(transform: DataFrame => DataFrame): Snapshot = {
     val snapOpt = store.latestSnapshot
     if (snapOpt.isEmpty) return commitFiles(Nil, CommitKind.APPEND)
     val live = store.liveFiles(snapOpt.get)
-    val raw = rawUnion(live, schema)
-    val touchedPaths = raw.filter(cond)
-      .select(col("_metadata.file_path")).distinct()
+    val touchedPaths = rawDF(live).filter(cond)
+      .select(col(FilePathCol)).distinct()
       .collect().map(_.getString(0)).toSet
     if (touchedPaths.isEmpty) return snapOpt.get
-    // index the scanned paths by base name before matching — suffix-scanning
-    // every touched path per live file is O(live × touched) driver string
-    // work, ~10¹⁰ ops at 10⁵ files. Names are near-unique (job-UUID'd), so
-    // each live file checks ~1 candidate; the endsWith keeps correctness if
-    // two directories ever hold the same name.
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val byName = touchedPaths.groupBy(base)
-    val touched = live.filter(f => byName.getOrElse(base(f.path), Set.empty)
-      .exists(p => p.endsWith("/" + f.path)))
-    val rewritten = transform(rawUnion(touched, schema))
+    val touched = live.filter(f => touchedPaths(GraftScan.filePath(location, f.path)))
+    val rewritten = transform(rawDF(touched))
       .select(schema.fields.map(f => col(f.name)): _*)
     val newFiles = stageWrite(rewritten, level = 0, seq = store.latestSnapshotId.getOrElse(0L) + 1)
     // COMPACT kind, like the DV path: a COW rewrite reorganizes existing

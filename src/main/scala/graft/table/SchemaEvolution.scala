@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DataType
   * schema/SchemaChange.java:36-512 applied via SchemaManager.commitChanges
   * :76,179). Each change commits a new numbered schema file; data files keep
   * their original schemaId and reads remap by persistent field id
-  * (see GraftTable.rawUnion / alignRaw).
+  * (see GraftScan's per-schema read plans and GraftScan.alignFieldExpr).
   */
 trait SchemaEvolution { self: GraftTable =>
 

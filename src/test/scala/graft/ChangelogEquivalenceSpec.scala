@@ -138,7 +138,7 @@ class ChangelogEquivalenceSpec extends SparkSpec {
         val s = t.store.readSnapshot(id)
         val prev = if (id > 1) Some(t.store.readSnapshot(id - 1)) else None
         val fields = t.schema.fields.map(_.name)
-        val actual = canon(t.rawUnion(t.changelogOf(s)._2, t.schema), fields)
+        val actual = canon(ReferenceRawRead.rawUnion(t, t.changelogOf(s)._2, t.schema), fields)
         val expected = reference(t, prev, s, producer).map(canon(_, fields)).getOrElse(Nil)
         assert(actual == expected, s"$what: changelog of snapshot $id (${s.commitKind}) " +
           s"differs\n  produced: ${actual.diff(expected)}\n  reference: ${expected.diff(actual)}")

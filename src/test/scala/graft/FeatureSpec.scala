@@ -274,7 +274,7 @@ class FeatureSpec extends SparkSpec {
     t.upsert(df.filter(col("k") <= 300))
     def bucketsOf(): Map[Long, Long] = {
       val snap = t.store.latestSnapshot.get
-      t.rawSnapshot(snap).select(col("k"), col("__bucket"))
+      t.rawDF(t.store.liveFiles(snap)).select(col("k"), col("__bucket"))
         .collect().groupBy(_.getLong(0)).map { case (k, rs) =>
           k -> rs.map(_.getInt(1).toLong).max }
     }
@@ -557,23 +557,27 @@ class FeatureSpec extends SparkSpec {
 
   test("source.split.target-size / open-file-cost shape raw-scan splits") {
     import spark.implicits._
-    val df = Seq.tabulate(100)(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1)
-    def splits(opts: Map[String, String]): Array[_] = {
+    val df = Seq.tabulate(100)(i => (i.toLong, s"v$i")).toDF("k", "v")
+    def splits(opts: Map[String, String], files: Int): Int = {
       val t = GraftTable.create(spark, tmpTable(), df.schema, options = opts)
-      (1 to 8).foreach(_ => t.append(df)) // 8 small files
+      // `files` 700-byte files in one commit: planning never opens them
+      t.store.commit((0 until files).map(i => graft.core.ManifestEntry(
+        graft.core.ManifestEntry.ADD, graft.core.DataFileMeta(f"data/f-$i%03d.parquet", 700,
+          10, Nil, 0, 0, 1, 1, t.schema.id, Map.empty))), "APPEND")
       new graft.spark.v2.GraftScan(spark, t, None, t.schema.structType, Nil, None)
-        .planInputPartitions()
+        .planInputPartitions().length
     }
-    // defaults: 8 tiny files fit one 128mb split
-    assert(splits(Map("write-only" -> "true")).length == 1)
+    val cores = spark.sparkContext.defaultParallelism
+    // defaults: the split size shrinks to spread tiny files over the cores
+    // (Spark's FilePartition.maxSplitBytes rule) but never below the
+    // open-file-cost, so 2 files of 4mb weight share each of `cores` splits
+    assert(splits(Map.empty, 2 * cores) == cores)
     // tiny target: one split per file
-    assert(splits(Map("write-only" -> "true",
-      "source.split.target-size" -> "1b")).length == 8)
+    assert(splits(Map("source.split.target-size" -> "1b"), 8) == 8)
     // open-file-cost dominates tiny files: 4 files of weight>=32kb per 128kb
     // split even though their bytes would all fit in one
-    assert(splits(Map("write-only" -> "true",
-      "source.split.target-size" -> "128kb",
-      "source.split.open-file-cost" -> "32kb")).length == 2)
+    assert(splits(Map("source.split.target-size" -> "128kb",
+      "source.split.open-file-cost" -> "32kb"), 8 * cores) == 2 * cores)
   }
 
   test("scan.plan-sort-partition orders raw splits by partition value") {

@@ -290,9 +290,28 @@ class MaintenanceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // per-file numeric stats landed → range pruning works
     assert(files.forall(_.stats.get("id").exists(_.min.isDefined)))
     // partition pruning on the discovered key
-    val plan = t.toDF.filter(col("parity") === "even").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(500))
-    assert(t.toDF.filter(col("parity") === "even").count() == 50)
+    val even = t.toDF.filter(col("parity") === "even")
+    val plan = even.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftScan") && plan.contains("parity"), plan.take(500))
+    val (skipped, read) = scanFileCounts(even)
+    assert(skipped >= 1 && read >= 1, s"skipped=$skipped read=$read")
+    assert(even.count() == 50)
+    // the rows read through the catalog: migrated files keep their
+    // absolute source paths, which the scan resolves as they are
+    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-wh").toString
+    spark.conf.set("spark.sql.catalog.gmig", classOf[graft.spark.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gmig.warehouse", wh)
+    val viaCatalog = graft.table.Migrate.parquetTable(spark, srcDir, s"$wh/db/mig")
+    assert(viaCatalog.store.liveFiles(viaCatalog.store.latestSnapshot.get)
+      .forall(_.path.startsWith("/")))
+    val rows = spark.sql("SELECT id, score, name, parity FROM gmig.db.mig WHERE id <= 10")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2), r.getString(3)))
+      .sortBy(_._1).toSeq
+    assert(rows == (1 to 10).map(i =>
+      (i.toLong, i * 1.5, s"r$i", if (i % 2 == 0) "even" else "odd")))
+    val paths = spark.sql("SELECT DISTINCT __file_path FROM gmig.db.mig")
+      .collect().map(_.getString(0)).toSet
+    assert(paths.nonEmpty && paths.forall(_.contains("-src")), paths.toString)
     // a small-file compaction re-homes data under the table root
     t.compactSmallFiles()
     val after = t.store.liveFiles(t.store.latestSnapshot.get)

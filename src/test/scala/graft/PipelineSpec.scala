@@ -385,7 +385,7 @@ class PipelineSpec extends SparkSpec {
     // cells — without it the whole 100-TB index is scanned regardless of
     // probes (dynamic pruning does NOT fire here: the probe side has no
     // selective predicate)
-    assert("(?i)partitionfilters:.*ivf_cluster#\\d+ in \\(".r
+    assert("GraftScan[^\n]*filters=[^\n]*In\\(ivf_cluster, \\[".r
       .findFirstIn(plan).isDefined,
       s"index scan must be pruned to the probed cells:\n$plan")
     // the rank filter must become a map-side per-query group limit — at
@@ -581,12 +581,14 @@ class PipelineSpec extends SparkSpec {
     val viaIndex = VectorOps.ivfIndexTopK(idx, q, 25, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaIndex == exact, "index probes must recover the separable top-k")
-    // the probe filter lands in PartitionFilters of the scan — pruned at
-    // file-listing time by GraftFileIndex, not filtered row-by-row
+    // the probe filter is pushed into the scan — pruned at planning time
+    // by GraftScan, not filtered row-by-row
     val probed = idx.toDF.filter(col("ivf_cluster") === 0)
     val scanPlan = probed.queryExecution.executedPlan.toString
-    assert(scanPlan.contains("PartitionFilters") && scanPlan.contains("ivf_cluster"),
+    assert(scanPlan.contains("GraftScan") && scanPlan.contains("ivf_cluster"),
       s"expected a partition-pruned scan, got:\n$scanPlan")
+    val (skipped, read) = scanFileCounts(probed)
+    assert(skipped >= 1 && read >= 1, s"skipped=$skipped read=$read")
   }
 
   test("empty inputs: dedup, jaccard join, clustering, and split bucket degrade to empty") {

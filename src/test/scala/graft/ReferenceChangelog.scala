@@ -28,7 +28,7 @@ object ReferenceChangelog {
       seq: Long): DataFrame = {
     def mergedState(fs: Seq[DataFileMeta]) =
       GraftScan.compactionInput(t, fs, GraftTable.MaxLevel)
-    val touchedKeys = t.rawUnion(newFiles, t.schema)
+    val touchedKeys = ReferenceRawRead.rawUnion(t, newFiles, t.schema)
       .select(t.schema.primaryKeys.map(col): _*)
     diff(t, mergedState(oldFiles), mergedState(oldFiles ++ newFiles), seq, Some(touchedKeys))
   }
@@ -40,10 +40,11 @@ object ReferenceChangelog {
     */
   def fullCompaction(t: GraftTable, touched: Seq[DataFileMeta], written: Seq[DataFileMeta],
       seq: Long): DataFrame = {
-    val oldTop = t.rawUnion(touched.filter(_.level >= GraftTable.MaxLevel), t.schema)
-    val touchedKeys = t.rawUnion(touched.filter(_.level < GraftTable.MaxLevel), t.schema)
+    val (top, below) = touched.partition(_.level >= GraftTable.MaxLevel)
+    val oldTop = ReferenceRawRead.rawUnion(t, top, t.schema)
+    val touchedKeys = ReferenceRawRead.rawUnion(t, below, t.schema)
       .select(t.schema.primaryKeys.map(col): _*)
-    diff(t, oldTop, t.rawUnion(written, t.schema), seq, Some(touchedKeys))
+    diff(t, oldTop, ReferenceRawRead.rawUnion(t, written, t.schema), seq, Some(touchedKeys))
   }
 
   /** Compute the per-key diff of two merged states: +I for new keys, -U/+U

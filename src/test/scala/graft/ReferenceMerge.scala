@@ -294,8 +294,8 @@ object ReferenceMerge {
     */
   def read(t: GraftTable, s: Snapshot): DataFrame = {
     val sch = t.schema
-    val raw = t.rawSnapshot(s, sch)
-    t.applyDefaults(
+    val raw = ReferenceRawRead.rawSnapshot(t, s, sch)
+    ReferenceRawRead.applyDefaults(t,
       if (sch.deletionVectors)
         raw.filter(col(KindCol) =!= lit(KindDelete))
           .select(sch.fields.map(f => col(f.name)): _*)

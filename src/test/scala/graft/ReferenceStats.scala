@@ -78,7 +78,7 @@ object ReferenceStats {
       Seq(min(statC).as(s"__mn$i"), max(statC).as(s"__mx$i"),
         sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nc$i"))
     }
-    staged.groupBy(GraftTable.relDataPath.as("__path"))
+    staged.groupBy(ReferenceRawRead.relDataPath.as("__path"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq.map { row =>
         val mins = cols.zipWithIndex.flatMap { case (f, i) =>

@@ -279,6 +279,27 @@ class SqlCatalogSpec extends SparkSpec {
     assert(scan2.planInputPartitions().length == all)
   }
 
+  test("runtime filtering: a join on one of two partition keys after the other was pruned") {
+    import spark.implicits._
+    spark.sql(
+      """CREATE TABLE graft.db.dpp2 (id BIGINT, a STRING, b STRING, v DOUBLE)
+        |USING graft PARTITIONED BY (a, b)""".stripMargin)
+    spark.sql("INSERT INTO graft.db.dpp2 SELECT id, CAST(id % 4 AS STRING), " +
+      "CAST(id % 3 AS STRING), id * 1.5 FROM range(120)")
+    Seq(("1", "x"), ("2", "y")).toDF("a", "tag").createOrReplaceTempView("dpp2_dim")
+    // the scan keeps only (id, a): Spark resolves the declared runtime
+    // filter attributes against that output
+    val q = spark.sql(
+      """SELECT f.id, f.a FROM graft.db.dpp2 f JOIN dpp2_dim d ON f.a = d.a
+        |WHERE d.tag = 'x'""".stripMargin)
+    assert(q.collect().map(_.getLong(0)).sorted.toSeq == (0L until 120L).filter(_ % 4 == 1))
+    val t = graft.table.GraftTable.load(spark, s"$wh/db/dpp2")
+    val narrow = new graft.spark.v2.GraftScan(spark, t, None,
+      org.apache.spark.sql.types.StructType(Seq(t.schema.structType("id"), t.schema.structType("a"))),
+      Nil, None)
+    assert(narrow.filterAttributes().map(_.describe()).toSeq == Seq("a"))
+  }
+
   test("pipeline primitives reach SQL-only users through injected functions") {
     import spark.implicits._
     Seq((1L, "the quick brown fox jumps over the lazy dog"),

@@ -119,14 +119,8 @@ class TableSpec extends SparkSpec {
     val snap = t.store.latestSnapshot.get
     val files = t.store.liveFiles(snap)
     assert(files.size >= 2)
-    val idx = new graft.spark.GraftFileIndex(spark, t.store, t.schema, files, t.partitionSchema())
-    import org.apache.spark.sql.catalyst.dsl.expressions._
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val expr = org.apache.spark.sql.catalyst.expressions.LessThan(
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        "l_orderkey", org.apache.spark.sql.types.LongType)(), Literal(500L))
-    val listed = idx.listFiles(Nil, Seq(expr)).flatMap(_.files)
-    assert(listed.size < files.size, "stats pruning should drop the >=1000 file(s)")
+    val (skipped, listed) = scanFileCounts(t.toDF.filter(col("l_orderkey") < 500))
+    assert(skipped >= 1 && listed < files.size, "stats pruning should drop the >=1000 file(s)")
     // and correctness preserved
     assert(t.toDF.filter(col("l_orderkey") < 500).count() ==
       sf("lineitem").filter(col("l_orderkey") < 500).count())
@@ -201,5 +195,48 @@ class TableSpec extends SparkSpec {
     assert(t.incrementalBetweenTimestamps(ts1, ts2).count() == 50)
     assert(t.incrementalBetweenTimestamps(0L, ts1).count() == 200)
     assert(t.incrementalBetweenTimestamps(ts2, ts2 + 1000).isEmpty)
+  }
+
+  /** Rows as sorted strings: a multiset compare of two frames. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("format(graft) batch reads equal toDF: append and pk, time travel, read-optimized") {
+    val li = sf("lineitem").select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
+    val a = GraftTable.create(spark, tmpTable(), li.schema, partitionKeys = Seq("l_returnflag"))
+    a.append(li.filter(col("l_orderkey") < 2000))
+    a.append(li.filter(col("l_orderkey") >= 2000))
+    def load(path: String, opts: (String, String)*) =
+      spark.read.format("graft").options(opts.toMap).load(path)
+    assert(load(a.location).columns.toSeq == a.toDF.columns.toSeq)
+    assert(rowsOf(load(a.location)) == rowsOf(a.toDF))
+    // a pruning filter reaches the scan and reads the same rows
+    val pruned = load(a.location).filter(col("l_returnflag") === "R" && col("l_orderkey") < 500)
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("l_returnflag"), plan)
+    assert(rowsOf(pruned) ==
+      rowsOf(a.toDF.filter(col("l_returnflag") === "R" && col("l_orderkey") < 500)))
+    assert(rowsOf(load(a.location, "scan.snapshot-id" -> "1")) == rowsOf(a.toDF(1L)))
+
+    val orders = sf("orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    val pk = GraftTable.create(spark, tmpTable(), orders.schema,
+      primaryKeys = Seq("o_orderkey"), options = Map("bucket" -> "2", "write-only" -> "true"))
+    pk.upsert(orders)
+    pk.store.createTag("base", 1L)
+    pk.compact()
+    pk.upsert(orders.filter(col("o_orderkey") % 7 === 0).withColumn("o_totalprice", lit(1.0)))
+    pk.upsert(orders.filter(col("o_orderkey") % 11 === 0),
+      kinds = Some(lit(GraftMeta.KindDelete)))
+    // merged: updates win, deletes vanish
+    assert(rowsOf(load(pk.location)) == rowsOf(pk.toDF))
+    assert(load(pk.location).count() < orders.count())
+    assert(rowsOf(load(pk.location).filter(col("o_orderkey") === 7)) ==
+      rowsOf(pk.toDF.filter(col("o_orderkey") === 7)))
+    assert(rowsOf(load(pk.location, "scan.tag-name" -> "base")) == rowsOf(pk.toDFAtTag("base")))
+    assert(rowsOf(load(pk.location, "scan.snapshot-id" -> "2")) == rowsOf(pk.toDF(2L)))
+    val ro = load(pk.location, "read-optimized" -> "true")
+    assert(ro.columns.toSeq == pk.schema.fields.map(_.name))
+    assert(rowsOf(ro) == rowsOf(pk.readOptimized))
+    assert(ro.count() == orders.count())
   }
 }
