@@ -1,25 +1,26 @@
 package graft.spark
 
-import graft.core.Snapshot
-import graft.spark.v2.GraftScan
+import graft.spark.v2.GraftSparkTable
 import graft.table.GraftTable
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `format("graft")` integration:
   *
-  *  - batch read: `spark.read.format("graft").load(path)` — a
-  *    [[GraftRelation]] that plans a [[graft.spark.v2.GraftScan]] with the
-  *    pushed columns and filters, so it reads what `GraftTable.toDF` reads:
-  *    merged for primary-key tables, pruned, DV-masked, schema-aligned.
-  *    Options `scan.snapshot-id` / `scan.tag-name` time-travel;
-  *    `read-optimized=true` reads the fully-compacted files only, as
-  *    `GraftTable.readOptimized` does.
+  *  - batch read: `spark.read.format("graft").load(path)` resolves, as a
+  *    [[org.apache.spark.sql.connector.catalog.TableProvider]], to the
+  *    [[graft.spark.v2.GraftSparkTable]] relation `GraftTable.toDF` reads:
+  *    merged for primary-key tables, pruned, DV-masked, schema-aligned,
+  *    with statistics and columnar reads. Options `scan.snapshot-id` /
+  *    `scan.tag-name` time-travel; `read-optimized=true` reads the
+  *    fully-compacted files only, as `GraftTable.readOptimized` does.
   *  - batch write: `df.write.format("graft").option("primary-keys", ...)
   *    .save(path)` — creates the table on first write.
   *  - streaming read: snapshot-delta microbatches (offset = snapshot id),
@@ -27,8 +28,11 @@ import org.apache.spark.sql.types.StructType
   *    .java:51).
   *  - streaming write: idempotent per-batch commits keyed by batchId
   *    (reference: FileStoreCommitImpl.filterCommitted:202-207).
+  *
+  * The table this provider hands Spark supports batch reads only, so Spark
+  * keeps writes and streams on the V1 source and sink below.
   */
-class GraftDataSource extends RelationProvider with SchemaRelationProvider
+class GraftDataSource extends TableProvider with RelationProvider
     with CreatableRelationProvider
     with StreamSourceProvider with StreamSinkProvider with DataSourceRegister {
 
@@ -38,38 +42,50 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     parameters.getOrElse("path",
       throw new IllegalArgumentException("graft: 'path' must be specified"))
 
-  /** With a user-specified schema: serve the real table when it exists;
-    * otherwise a metadata-only placeholder. Spark's V1
-    * `CreateDataSourceTableCommand` (the path `CREATE TABLE ... USING graft`
-    * takes in a session catalog) resolves the relation just to validate the
-    * schema BEFORE any data exists — [[graft.spark.v2.GraftSessionCatalog]]
-    * materializes the actual layout on first access.
-    */
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String], userSchema: StructType): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val path = pathOf(parameters)
-    if (GraftTable.exists(spark, path)) createRelation(sqlContext, parameters)
-    else new BaseRelation {
-      override def sqlContext: SQLContext = spark.sqlContext
-      override def schema: StructType = userSchema
-    }
-  }
-
   // ---------------- batch read ----------------
 
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val table = GraftTable.load(spark, pathOf(parameters))
-    val snapshot = parameters.get("scan.snapshot-id") match {
-      case Some(id) => Some(table.store.readSnapshot(id.toLong))
-      case None => parameters.get("scan.tag-name") match {
-        case Some(tag) => Some(table.store.readTag(tag))
-        case None => table.store.latestSnapshot
-      }
+  private def existing(options: java.util.Map[String, String]): Option[GraftTable] = {
+    val spark = SparkSession.active
+    Option(options.get("path")).filter(GraftTable.exists(spark, _))
+      .map(GraftTable.load(spark, _))
+  }
+
+  // the table keeps its own schema; Spark's inferred or given one is not used
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    existing(options).map(_.schema.structType).getOrElse(new StructType())
+
+  /** The table at `path`. A path with no table yet (the first write of a
+    * batch or stream) gets a table without capabilities, which sends Spark
+    * to the V1 write, stream or read fallback.
+    */
+  override def getTable(given: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    existing(properties) match {
+      case Some(t) =>
+        new GraftSparkTable(t.spark, t, Identifier.of(Array.empty[String],
+          new org.apache.hadoop.fs.Path(t.location).getName), readOnly = true)
+      case None =>
+        val path = String.valueOf(properties.get("path"))
+        new Table {
+          override def name(): String = path
+          override def schema(): StructType = given
+          override def capabilities(): java.util.Set[TableCapability] =
+            java.util.Collections.emptySet()
+        }
     }
-    new GraftRelation(table, snapshot, parameters.get("read-optimized").exists(_.toBoolean))
+
+  /** Reached only when no table exists at the path (an existing table reads
+    * through [[getTable]]): fails naming the path.
+    */
+  override def createRelation(sqlContext: SQLContext,
+      parameters: Map[String, String]): BaseRelation =
+    schemaOnly(GraftTable.load(sqlContext.sparkSession, pathOf(parameters)))
+
+  private def schemaOnly(table: GraftTable): BaseRelation = new BaseRelation {
+    override def sqlContext: SQLContext = table.spark.sqlContext
+    override def schema: StructType = table.schema.structType
   }
 
   // ---------------- batch write ----------------
@@ -100,7 +116,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       case SaveMode.Ignore if exists => ()
       case _ => table.write(data)
     }
-    new GraftRelation(table, table.store.latestSnapshot, readOptimized = false)
+    schemaOnly(table)
   }
 
   // ---------------- streaming read ----------------
@@ -121,37 +137,6 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
   override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
       partitionColumns: Seq[String], outputMode: OutputMode): Sink =
     new GraftSink(sqlContext.sparkSession, pathOf(parameters), parameters)
-}
-
-/** The batch relation of `format("graft")`: each scan is a
-  * [[graft.spark.v2.GraftScan]] of `snapshot` over the required columns and
-  * pushed filters, read by the scan's own reader in Spark tasks. The scan
-  * prunes files only, so Spark re-applies every filter above it.
-  */
-class GraftRelation(val table: GraftTable, snapshot: Option[Snapshot],
-    readOptimized: Boolean) extends BaseRelation with PrunedFilteredScan {
-
-  override def sqlContext: SQLContext = table.spark.sqlContext
-
-  override def schema: StructType = table.schema.structType
-
-  // the reader emits Catalyst rows
-  override def needConversion: Boolean = false
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[Row] = {
-    val required = StructType(requiredColumns.map(schema(_)))
-    val rows = snapshot match {
-      case None => table.spark.sparkContext.emptyRDD[InternalRow]
-      case Some(s) if readOptimized =>
-        new GraftScan(table.spark, table, None, required, filters.toSeq, None,
-          filesOverride = Some(table.store.liveFiles(s).filter(_.level >= GraftTable.MaxLevel)),
-          raw = true).rowsRDD
-      case Some(s) =>
-        new GraftScan(table.spark, table, Some(s), required, filters.toSeq, None).rowsRDD
-    }
-    rows.asInstanceOf[org.apache.spark.rdd.RDD[Row]]
-  }
 }
 
 /** Microbatch source over the snapshot chain: each batch is the raw delta of

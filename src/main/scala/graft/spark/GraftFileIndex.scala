@@ -28,7 +28,7 @@ object GraftFileIndex {
     * only top-level AND-ed equalities consult the index.
     */
   def bloomMightMatch(store: FileStore, schema: TableSchema,
-      f: DataFileMeta, filters: Seq[Filter]): Boolean = {
+      f: DataFileMeta, filters: Seq[Filter], names: StoredNames): Boolean = {
     if (f.blooms.isEmpty) return true
     def eqs(fl: Filter): Seq[(String, Any)] = fl match {
       case SEqualTo(c, v) if v != null => Seq(c -> v)
@@ -36,13 +36,48 @@ object GraftFileIndex {
       case _ => Nil
     }
     filters.flatMap(eqs).forall { case (c, v) =>
-      (f.blooms.get(c), schema.fields.find(_.name == c)) match {
+      (names.of(f).get(c).flatMap(f.blooms.get), schema.fields.find(_.name == c)) match {
         case (Some(p), Some(field)) =>
           store.readBloom(p).mightContainLong(
             org.apache.spark.sql.graft.SparkShims.xxhash64Literal(field.sparkType, v))
         case _ => true
       }
     }
+  }
+
+  /** Stats and bloom sidecars are keyed by the column names of the schema a
+    * file was written under, so after a rename a name can stand for another
+    * field (rename `v` to `w`, then add a new `v`). `apply(ids)` maps each
+    * current top-level column to the name that holds the same field id, with
+    * the same type, in every schema of `ids`; a column outside the map has
+    * no usable stats there and pruning keeps the file or shard. One schema
+    * read per distinct old schema id; the current schema maps to itself.
+    */
+  final class StoredNames(store: FileStore, current: TableSchema) {
+    private val identity = current.fields.map(f => f.name -> f.name).toMap
+    private val byIds = scala.collection.mutable.Map.empty[Set[Long], Map[String, String]]
+    private val schemas = scala.collection.mutable.Map(current.id -> current)
+
+    def apply(ids: Set[Long]): Map[String, String] =
+      if (ids == Set(current.id)) identity
+      else byIds.getOrElseUpdate(ids, {
+        val olds = ids.toSeq.map(id => schemas.getOrElseUpdate(id, store.readSchema(id)))
+        current.fields.flatMap { f =>
+          olds.map(_.fields.find(o => o.id == f.id && o.sparkType == f.sparkType)
+            .map(_.name)).distinct match {
+            case Seq(Some(n)) => Some(f.name -> n)
+            case _ => None
+          }
+        }.toMap
+      })
+
+    def of(f: DataFileMeta): Map[String, String] =
+      if (f.schemaId == current.id) identity else apply(Set(f.schemaId))
+
+    /** `stats` of a file or shard written under `ids`, by current name. */
+    def stats(ids: Set[Long], stats: Map[String, ColStats]): Map[String, ColStats] =
+      if (ids == Set(current.id)) stats
+      else apply(ids).flatMap { case (c, n) => stats.get(n).map(c -> _) }
   }
 
   /** Per-file bucket-prune predicate that is safe across bucket-rescale

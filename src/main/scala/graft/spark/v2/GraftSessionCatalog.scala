@@ -40,10 +40,9 @@ class GraftSessionCatalog extends DelegatingCatalogExtension {
     if (provider.exists(_.equalsIgnoreCase("graft"))) {
       val loc = locationOf(t).getOrElse(
         throw new IllegalStateException(s"graft table $ident has no location"))
-      // `CREATE TABLE ... USING graft` routes through Spark's V1 create
-      // command (graft registers a V1 DataSource name), which records the
-      // metastore entry but cannot lay the table down — materialize the
-      // graft layout from that entry on first access
+      // `CREATE TABLE ... USING graft` records the metastore entry through
+      // the delegate session catalog, which cannot lay the table down —
+      // materialize the graft layout from that entry on first access
       if (!GraftTable.exists(spark, loc)) materialize(t, loc)
       GraftSparkTable(spark, GraftTable.load(spark, loc), ident)
     } else t

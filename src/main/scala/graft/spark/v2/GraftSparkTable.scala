@@ -32,7 +32,11 @@ class GraftSparkTable(
     /** Raw mode over these files: stored rows with the merge machinery
       * columns, no merge (see [[GraftScan.raw]]).
       */
-    rawFiles: Option[Seq[graft.core.DataFileMeta]] = None) extends Table
+    rawFiles: Option[Seq[graft.core.DataFileMeta]] = None,
+    /** Batch reads only: the table `format("graft")` resolves to, whose
+      * writes and streams stay on the V1 source and sink.
+      */
+    readOnly: Boolean = false) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete with TruncatableTable
     with SupportsMetadataColumns with SupportsPartitionManagement {
 
@@ -73,21 +77,23 @@ class GraftSparkTable(
   // eager command over GraftTable.overwrite(dynamic = true) (the
   // reference's PaimonDynamicPartitionOverwriteCommand workaround). Static
   // INSERT OVERWRITE [PARTITION (...)] rides OVERWRITE_BY_FILTER.
-  override def capabilities(): JSet[TableCapability] = Set(
-    TableCapability.BATCH_READ,
-    TableCapability.MICRO_BATCH_READ,
-    TableCapability.BATCH_WRITE,
-    TableCapability.V1_BATCH_WRITE,
-    TableCapability.STREAMING_WRITE,
-    TableCapability.OVERWRITE_BY_FILTER,
-    TableCapability.OVERWRITE_DYNAMIC,
-    TableCapability.TRUNCATE,
-    // MERGE INTO ... WITH SCHEMA EVOLUTION: Spark's analyzer
-    // (ResolveMergeIntoSchemaEvolution) diffs source vs target schemas,
-    // applies the AddColumn/UpdateColumnType changes through
-    // GraftCatalog.alterTable (one atomic schema commit), and reloads the
-    // relation — the merge then runs against the evolved table
-    TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
+  override def capabilities(): JSet[TableCapability] =
+    if (readOnly) Set(TableCapability.BATCH_READ).asJava
+    else Set(
+      TableCapability.BATCH_READ,
+      TableCapability.MICRO_BATCH_READ,
+      TableCapability.BATCH_WRITE,
+      TableCapability.V1_BATCH_WRITE,
+      TableCapability.STREAMING_WRITE,
+      TableCapability.OVERWRITE_BY_FILTER,
+      TableCapability.OVERWRITE_DYNAMIC,
+      TableCapability.TRUNCATE,
+      // MERGE INTO ... WITH SCHEMA EVOLUTION: Spark's analyzer
+      // (ResolveMergeIntoSchemaEvolution) diffs source vs target schemas,
+      // applies the AddColumn/UpdateColumnType changes through
+      // GraftCatalog.alterTable (one atomic schema commit), and reloads the
+      // relation — the merge then runs against the evolved table
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
 
   override def partitioning(): Array[Transform] =
     table.schema.partitionKeys.map(Expressions.identity).toArray
@@ -221,8 +227,14 @@ class GraftSparkTable(
     // scan.timestamp-millis / consumer-id / read.max-rows-per-batch) — a
     // reader-side override of the table's own options, same precedence as
     // the V1 GraftSource path
+    // read-optimized: the fully-compacted files only, read raw (reference:
+    // table/system/ReadOptimizedTable.java:53)
+    val files = rawFiles.orElse(
+      Option(options.get("read-optimized")).filter(_.toBoolean).map(_ =>
+        snap.orElse(table.store.latestSnapshot).toSeq.flatMap(table.store.liveFiles)
+          .filter(_.level >= GraftTable.MaxLevel)))
     new GraftScanBuilder(spark, table, snap,
-      readOptions = options.asScala.toMap, rawFiles = rawFiles)
+      readOptions = options.asScala.toMap, rawFiles = files)
   }
 
   // ---------------- writes (V1 fallback, reference SparkWrite.scala:30) ----

@@ -110,7 +110,8 @@ class FeatureSpec extends SparkSpec {
     // an even key must be bloom-excluded from the odd file
     import org.apache.spark.sql.sources.EqualTo
     val keep = live.filter(f => graft.spark.GraftFileIndex.bloomMightMatch(
-      t.store, t.schema, f, Seq(EqualTo("l_orderkey", 8L))))
+      t.store, t.schema, f, Seq(EqualTo("l_orderkey", 8L)),
+      new graft.spark.GraftFileIndex.StoredNames(t.store, t.schema)))
     assert(keep.size == 1, s"bloom should prune to one file, kept ${keep.size}")
     // answers unchanged
     val exp = li.filter(col("l_orderkey") === 8).count()

@@ -62,6 +62,35 @@ class RawReadEquivalenceSpec extends SparkSpec {
     assert(check(pk) == 51)
   }
 
+  test("schema evolution: a renamed column's old name reused prunes by field id") {
+    import spark.implicits._
+    Seq(Map.empty[String, String], Map("deletion-vectors.enabled" -> "true")).foreach { dv =>
+      val t = GraftTable.create(spark, tmpTable(), Seq((1L, "a")).toDF("id", "v").schema,
+        options = dv + ("file-index.bloom.columns" -> "v"))
+      // enough commits to fold the old files into add-only shards
+      (0 until 18).foreach(i =>
+        t.append((1L to 3L).map(j => (i * 3 + j, s"v${i * 3 + j}")).toDF("id", "v")))
+      t.renameColumn("v", "w")
+      t.addColumn("v", StringType)
+      t.append(Seq((100L, "w100", "x"), (101L, "w101", null)).toDF("id", "w", "v"))
+      val snap = t.store.latestSnapshot.get
+      // the old files' stats and blooms still say `v`: the field now named `w`
+      assert(snap.manifestMeta.exists(m => m.addOnly && m.colStats.contains("v")))
+      val live = t.store.liveFiles(snap)
+      assert(live.filter(_.schemaId != t.schema.id).forall(_.blooms.contains("v")))
+      val cols = Seq("id", "w", "v")
+      Seq(col("v").isNull, col("v").isNotNull, col("v") === "x", col("v") === "v7",
+          col("w") === "v7", col("w") > "v50").foreach { f =>
+        assert(canon(t.toDF.filter(f), cols) ==
+          canon(ReferenceRawRead.rawUnion(t, live, t.schema).filter(f), cols), s"$dv $f")
+      }
+      assert(t.toDF.filter(col("v").isNull).count() == 55)
+      assert(check(t, Some(col("v").isNull)) == 55)
+      t.delete(col("v").isNull)
+      assert(canon(t.toDF, cols) == Seq("[100,w100,x]"), dv.toString)
+    }
+  }
+
   test("schema evolution: nested struct children added and renamed") {
     import spark.implicits._
     val t = GraftTable.create(spark, tmpTable(), StructType(Seq(

@@ -255,7 +255,8 @@ class ReferenceFileIndex(
     val selected = candidates.filter { f =>
       partKeep(partitionOf(f)) &&
       bucketKeep(f) && dynKeep(f) && xpKeep(f) && statsKeep(f) &&
-      GraftFileIndex.bloomMightMatch(store, schema, f, dataPreds)
+      GraftFileIndex.bloomMightMatch(store, schema, f, dataPreds,
+        new GraftFileIndex.StoredNames(store, schema))
     }
     selected.groupBy(f => (f.partition, f.bucket)).toSeq.map { case ((pv, bucket), fs) =>
       PartitionDirectory(partitionInternalRow(pv, bucket), fs.map(toFileStatus).toArray)

@@ -213,7 +213,7 @@ class TableSpec extends SparkSpec {
     // a pruning filter reaches the scan and reads the same rows
     val pruned = load(a.location).filter(col("l_returnflag") === "R" && col("l_orderkey") < 500)
     val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("l_returnflag"), plan)
+    assert(plan.contains("GraftScan") && plan.contains("EqualTo(l_returnflag,R)"), plan)
     assert(rowsOf(pruned) ==
       rowsOf(a.toDF.filter(col("l_returnflag") === "R" && col("l_orderkey") < 500)))
     assert(rowsOf(load(a.location, "scan.snapshot-id" -> "1")) == rowsOf(a.toDF(1L)))
@@ -238,5 +238,18 @@ class TableSpec extends SparkSpec {
     assert(ro.columns.toSeq == pk.schema.fields.map(_.name))
     assert(rowsOf(ro) == rowsOf(pk.readOptimized))
     assert(ro.count() == orders.count())
+
+    // the same DSv2 relation as toDF: its statistics let the planner
+    // broadcast a small table (no size estimate would sort-merge both)
+    val join = load(a.location).join(load(pk.location), col("l_orderkey") === col("o_orderkey"))
+    val physical = join.queryExecution.sparkPlan.toString
+    assert(physical.contains("BroadcastHashJoin") && physical.contains("GraftScan"), physical)
+    assert(join.count() == a.toDF.join(pk.toDF, col("l_orderkey") === col("o_orderkey")).count())
+
+    // writes stay on the V1 sink: the first creates the table, the next appends
+    val w = tmpTable()
+    li.limit(10).write.format("graft").mode("append").save(w)
+    li.limit(10).write.format("graft").mode("append").save(w)
+    assert(load(w).count() == 20)
   }
 }
