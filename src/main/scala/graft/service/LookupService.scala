@@ -4,7 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.core.{Snapshot, TableSchema}
 import graft.spark.v2.GraftScan
 import graft.table.GraftTable
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, CreateNamedStruct, Literal, StructsToJson}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, CreateNamedStruct, Expression, Literal, StructsToJson}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -69,6 +69,8 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
     pinned = latestPin
     pinEra.incrementAndGet()
     cache.clear()
+    rowJson = None
+    table.refresh()
   }
 
   private val refresher: Option[java.util.concurrent.ScheduledExecutorService] =
@@ -210,13 +212,23 @@ class LookupServer(table: GraftTable, host: String = "127.0.0.1",
     val rows = GraftScan.pointRead(table, snap, schema, keys.map(_.zip(pkFields).map {
       case (v, f) => Cast(Literal(v), f.sparkType, tz).eval()
     }))
-    val json = StructsToJson(Map.empty, CreateNamedStruct(out.fields.toSeq.zipWithIndex.flatMap {
-      case (f, i) => Seq(Literal(f.name), BoundReference(i, f.dataType, f.nullable))
-    }), tz).replacement
+    val json = rowJson.filter(_._1 == (schema.id, tz)).map(_._2).getOrElse {
+      val e = StructsToJson(Map.empty, CreateNamedStruct(out.fields.toSeq.zipWithIndex.flatMap {
+        case (f, i) => Seq(Literal(f.name), BoundReference(i, f.dataType, f.nullable))
+      }), tz).replacement
+      rowJson = Some((schema.id, tz) -> e)
+      e
+    }
     val pkIdx = pks.map(out.fieldIndex)
-    rows.map(r => pkIdx.map(i => String.valueOf(r.get(i, out(i).dataType))) ->
-      json.eval(r).toString).toMap
+    // the evaluator reuses its JSON writer: handler threads take turns
+    json.synchronized(rows.map(r => pkIdx.map(i => String.valueOf(r.get(i, out(i).dataType))) ->
+      json.eval(r).toString).toMap)
   }
+
+  /** The `to_json(struct(*))` evaluator of `readMisses`, for the schema id
+    * and time zone it was built for.
+    */
+  @volatile private var rowJson: Option[((Long, Option[String]), Expression)] = None
 
   def start(): LookupServer = {
     // a real pool, not the calling thread: concurrent probes from many

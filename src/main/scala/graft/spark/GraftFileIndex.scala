@@ -2,11 +2,12 @@ package graft.spark
 
 import graft.GraftMeta
 import graft.core._
+import graft.spark.v2.{FactoryRead, ReadShapes}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
-import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEqualTo, Filter, In => SIn}
+import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEqualTo, Filter, In => SIn, Or => SOr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -147,11 +148,12 @@ object GraftFileIndex {
     * Some(empty) = key provably absent.
     */
   def dynamicBuckets(spark: SparkSession, store: FileStore, schema: TableSchema,
-      indexFiles: Seq[String], filters: Seq[Filter]): Option[Set[Int]] = {
+      indexFiles: Seq[String], filters: Seq[Filter],
+      shapes: ReadShapes = new ReadShapes(1)): Option[Set[Int]] = {
     if (!schema.dynamicBucket || indexFiles.isEmpty) return None
     pkHashFromFilters(schema, filters).map { h =>
       indexProbe(spark, store, indexFiles, Literal(h),
-        StructType(Seq(StructField(GraftMeta.BucketCol, IntegerType))))
+        StructType(Seq(StructField(GraftMeta.BucketCol, IntegerType))), shapes)
         .map(_.getInt(1)).toSet // O(hash collisions) rows
     }
   }
@@ -162,22 +164,24 @@ object GraftFileIndex {
     * equality skips, by their parquet stats, the row groups and pages whose
     * `__kh` range excludes the hash; index files are written sorted by
     * `__kh` for it, folds also range-partitioned
-    * ([[graft.table.GraftTable.byKeyHash]]).
+    * ([[graft.table.GraftTable.byKeyHash]]). The reader's Hadoop conf is
+    * the read shape's broadcast in `shapes`: a table handle's repeated
+    * probes broadcast nothing.
     */
   private def indexProbe(spark: SparkSession, store: FileStore, indexDirs: Seq[String],
-      kh: Literal, cols: StructType): Seq[InternalRow] = {
+      kh: Literal, cols: StructType, shapes: ReadShapes): Seq[InternalRow] = {
     val schema = StructType(StructField("__kh", kh.dataType) +: cols.fields)
-    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
-        Seq(SEqualTo("__kh", kh.value)),
-        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConf())
+    val sqlConf = spark.sessionState.conf
+    val read = FactoryRead("parquet",
+      shapes.conf(spark, "parquet", schema, sqlConf.getAllConfs),
+      schema, schema, new StructType(), Array(SEqualTo("__kh", kh.value)), batched = false)
     indexDirs.flatMap(d => store.fs.listStatus(new Path(store.rootPath, d)).toSeq)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .flatMap { st =>
-        val rows = read(org.apache.spark.sql.graft.SparkShims.partitionedFile(
-          InternalRow.empty, st.getPath.toString, 0, st.getLen))
+        val rows = read.open(org.apache.spark.sql.graft.SparkShims.partitionedFile(
+          InternalRow.empty, st.getPath.toString, 0, st.getLen), sqlConf)
+          .asInstanceOf[Iterator[InternalRow]]
         try rows.filter(_.get(0, kh.dataType) == kh.value).map(_.copy()).toVector
         finally rows match {
           case c: AutoCloseable => c.close()
@@ -214,12 +218,12 @@ object GraftFileIndex {
     * None = not a pinned lookup, index disabled, or no index yet.
     */
   def crossPartitionGroups(spark: SparkSession, store: FileStore,
-      schema: TableSchema, indexFiles: Seq[String],
-      filters: Seq[Filter]): Option[Set[(String, Int)]] = {
+      schema: TableSchema, indexFiles: Seq[String], filters: Seq[Filter],
+      shapes: ReadShapes = new ReadShapes(1)): Option[Set[(String, Int)]] = {
     if (!schema.globalIndexEnabled || indexFiles.isEmpty) return None
     pkXxHashFromFilters(schema, filters).map { h =>
       indexProbe(spark, store, indexFiles, Literal(h), StructType(Seq(
-        StructField("__pt", StringType), StructField(GraftMeta.BucketCol, IntegerType))))
+        StructField("__pt", StringType), StructField(GraftMeta.BucketCol, IntegerType))), shapes)
         .map(r => (r.getUTF8String(1).toString, r.getInt(2))).toSet // O(collisions)
     }
   }
@@ -227,8 +231,9 @@ object GraftFileIndex {
   /** The set of buckets a pk-constraining predicate can touch: full-pk
     * equality pins one bucket; a single-column pk additionally prunes
     * through `IN` lists (each listed key hashes to its bucket — a
-    * multi-key lookup on a 100-TB table reads at most |list| buckets).
-    * None = no pk constraint (all buckets).
+    * multi-key lookup on a 100-TB table reads at most |list| buckets), and
+    * an OR of bounded sides (a composite-key batch lookup) touches the
+    * union of their buckets. None = no pk constraint (all buckets).
     */
   def bucketsFromFilters(schema: TableSchema, filters: Seq[Filter]): Option[Set[Int]] = {
     if (!schema.hasBucketDirs) return None
@@ -248,24 +253,27 @@ object GraftFileIndex {
       ((h % n) + n) % n
     }
 
-    // routing hashes schema.bucketKeys (full pk unless 'bucket-key'
-    // narrows it) — pruning needs exactly those columns pinned
-    val pinned = pinnedEqs(filters)
-    if (schema.bucketKeys.forall(pinned.contains))
-      return Some(Set(bucketOf(schema.bucketKeys.map(k => k -> pinned(k)))))
-
-    // single-column bucket key: any AND-ed IN list bounds the touched
-    // buckets (null list entries match nothing, so dropping them is exact)
-    if (schema.bucketKeys.length == 1) {
-      val bk = schema.bucketKeys.head
-      def inList(f: Filter): Option[Seq[Any]] = f match {
-        case SIn(c, vs) if c == bk => Some(vs.toSeq.filter(_ != null))
-        case SAnd(l, r) => inList(l).orElse(inList(r))
+    // the buckets AND-ed `conjuncts` can touch
+    def bounded(conjuncts: Seq[Filter]): Option[Set[Int]] = {
+      // routing hashes schema.bucketKeys (full pk unless 'bucket-key'
+      // narrows it) — pruning needs exactly those columns pinned
+      val pinned = pinnedEqs(conjuncts)
+      if (schema.bucketKeys.forall(pinned.contains))
+        return Some(Set(bucketOf(schema.bucketKeys.map(k => k -> pinned(k)))))
+      // single-column bucket key: any AND-ed IN list bounds the touched
+      // buckets (null list entries match nothing, so dropping them is
+      // exact); an OR bounds them when both sides do, as the union — the
+      // shape of a composite-key batch lookup
+      def bound(f: Filter): Option[Set[Int]] = f match {
+        case SIn(c, vs) if schema.bucketKeys == Seq(c) =>
+          Some(vs.toSeq.filter(_ != null).map(v => bucketOf(Seq(c -> v))).toSet)
+        case SAnd(l, r) => bound(l).orElse(bound(r))
+        case SOr(l, r) => for (a <- bounded(Seq(l)); b <- bounded(Seq(r))) yield a ++ b
         case _ => None
       }
-      filters.flatMap(inList(_)).headOption
-        .map(vs => vs.map(v => bucketOf(Seq(bk -> v))).toSet)
-    } else None
+      conjuncts.iterator.flatMap(bound).nextOption()
+    }
+    bounded(filters)
   }
 
   /** Spark partition-path string → Catalyst internal value. */

@@ -5,12 +5,12 @@ import graft.core._
 import graft.merge.{ChangelogMergeRows, RowMerger, SortMergeRows}
 import graft.spark.GraftFileIndex
 import graft.table.GraftTable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, CreateNamedStruct, Expression, GenericInternalRow, GetStructField, If, IsNull, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -127,7 +127,12 @@ class GraftScan(
       * may be requested as data columns ([[GraftTable.rawSchema]]); every
       * pushed filter prunes files, also on a given file list.
       */
-    raw: Boolean = false)
+    raw: Boolean = false,
+    /** A point read's wanted primary keys, normalized as
+      * [[KeyFilter.norm]] does: the reader drops every other key's rows
+      * before the merge (see [[GraftScan.pointRead]]).
+      */
+    pointKeys: Option[Set[Seq[Any]]] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
@@ -419,7 +424,7 @@ class GraftScan(
       // dynamic-bucket point lookups prune through the durable hash index
       val dynKeep: DataFileMeta => Boolean =
         GraftFileIndex.dynamicBuckets(
-            table.spark, table.store, schema, indexFiles, filters)
+            table.spark, table.store, schema, indexFiles, filters, table.readShapes)
           .map(bs => (f: DataFileMeta) => bs.contains(f.bucket))
           .getOrElse(_ => true)
       // cross-partition point lookups prune to the key's indexed
@@ -427,7 +432,7 @@ class GraftScan(
       // pre-merge even though value/partition predicates are not)
       val xpKeep: DataFileMeta => Boolean =
         GraftFileIndex.crossPartitionGroups(
-            table.spark, table.store, schema, indexFiles, filters)
+            table.spark, table.store, schema, indexFiles, filters, table.readShapes)
           .map(gs => (f: DataFileMeta) =>
             gs.contains((graft.table.GraftTable.encodePartition(f.partition), f.bucket)))
           .getOrElse(_ => true)
@@ -638,9 +643,10 @@ class GraftScan(
       sec.size == 1 && sec.head.level >= GraftTable.MaxLevel)
 
   /** Built once per scan: physical planning asks for the factory more than
-    * once, and each build broadcasts the format reader's Hadoop conf. The
-    * plans cover the statically pruned files; runtime filtering only
-    * shrinks that set.
+    * once. The format readers' Hadoop confs come from the table handle's
+    * per-shape broadcasts ([[ReadShapes]]), so a scan of a shape the handle
+    * has read before broadcasts nothing. The plans cover the statically
+    * pruned files; runtime filtering only shrinks that set.
     */
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
@@ -698,7 +704,9 @@ class GraftScan(
     val planKeys = prunedFiles
       .map(f => (f.schemaId, f.dvPath.isDefined, GraftTable.formatNameOfPath(f.path)))
       .distinct.sorted
-    val hadoopConf = spark.sessionState.newHadoopConf()
+    // the session's SQL conf, as of this scan: part of each read shape, and
+    // what the readers are built with (also inside tasks)
+    val sqlConfs = spark.sessionState.conf.getAllConfs
     val plans: Map[(Long, Boolean, Option[String]), SchemaReadPlan] =
       planKeys.map { case (sid, hasDv, fmtName) =>
       val fileSchema = if (sid == schema.id) schema else table.store.readSchema(sid)
@@ -741,22 +749,27 @@ class GraftScan(
         else filters
       val supportsBatch = fmt.supportBatch(spark,
         StructType(readSchemaForFile.fields ++ partitionSchema.fields))
-      val readFunc = fmt.buildReaderWithPartitionValues(
-        sparkSession = spark,
-        dataSchema = StructType(fileSchema.fields
-          .filterNot(f => fileSchema.partitionKeys.contains(f.name))
-          .map(_.toStructField) ++
-          (if (fileSchema.isPrimaryKeyed)
-            Seq(GraftMeta.seqField, GraftMeta.posField, GraftMeta.kindField)
-          else Nil)),
-        partitionSchema = partitionSchema,
-        requiredSchema = readSchemaForFile,
-        filters = safeFilters,
-        options = Map(org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH -> supportsBatch.toString),
-        // fresh conf per plan: buildReader mutates it with the read schema,
-        // and local-mode broadcasts share the object by reference
-        hadoopConf = new org.apache.hadoop.conf.Configuration(hadoopConf))
+      val dataSchema = StructType(fileSchema.fields
+        .filterNot(f => fileSchema.partitionKeys.contains(f.name))
+        .map(_.toStructField) ++
+        (if (fileSchema.isPrimaryKeyed)
+          Seq(GraftMeta.seqField, GraftMeta.posField, GraftMeta.kindField)
+        else Nil))
+      val read: FileRead = fmt match {
+        case _: graft.formats.GraftAvroFileFormat =>
+          FormatRead(fmt.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema,
+            readSchemaForFile, safeFilters, Map(org.apache.spark.sql.execution.datasources
+              .FileFormat.OPTION_RETURNING_BATCH -> supportsBatch.toString),
+            spark.sessionState.newHadoopConf()))
+        case _ =>
+          val name = if (fmt.isInstanceOf[graft.formats.GraftOrcFileFormat]) "orc" else "parquet"
+          // ORC's own search arguments misjudge some filters
+          val pushed =
+            if (name == "parquet") safeFilters
+            else safeFilters.filter(graft.formats.GraftOrcFileFormat.orcDecides(dataSchema, _))
+          FactoryRead(name, table.readShapes.conf(spark, name, readSchemaForFile, sqlConfs),
+            dataSchema, readSchemaForFile, partitionSchema, pushed.toArray, supportsBatch)
+      }
       // align (readSchemaForFile ++ partitionSchema) → rowSchema (the
       // per-file path column, when present, is appended by the reader)
       val inSchema = StructType(readSchemaForFile.fields ++ partitionSchema.fields)
@@ -789,7 +802,7 @@ class GraftScan(
           case (BoundReference(j, _, _), i) => j == i
           case _ => false
         }
-      (sid, hasDv, fmtName) -> SchemaReadPlan(readFunc, align, supportsBatch, identityAlign)
+      (sid, hasDv, fmtName) -> SchemaReadPlan(read, align, supportsBatch, identityAlign)
     }.toMap
 
     val merger =
@@ -838,15 +851,16 @@ class GraftScan(
       val i = rowSchema.fieldIndex(tf)
       RecordExpiry(i, rowSchema(i).dataType, tf, nowSec - sec)
     }
-    // deletion-vector files are read with the session's Hadoop conf; only
-    // a scan that has any carries it, and without a broadcast, so a
-    // driver-side point lookup starts no Spark work
-    val dvConf =
-      if (planKeys.exists(_._2)) Some(new SerializableConfiguration(hadoopConf))
-      else None
+    // deletion-vector files are read with the Hadoop conf of a DV file's
+    // plan (a shared broadcast), or for Avro with the plain session conf
+    val dvConf = plans.collectFirst { case ((_, true, _), p) => p.read }.map {
+      case r: FactoryRead => r.conf
+      case _ => table.readShapes.conf(spark, "hadoop", new StructType(), sqlConfs)
+    }
+    val keyFilter = pointKeys.map(KeyFilter(schema.primaryKeys.map(rowSchema.fieldIndex), _))
     new GraftReaderFactory(table.location, partitionSchema, rowSchema,
-      plans, merger, outIdx, defaultsExprs, dvConf,
-      dropKindIdx, columnar, expiry, changelog)
+      plans, merger, outIdx, defaultsExprs, dvConf, sqlConfs, spark.sessionState.conf,
+      dropKindIdx, columnar, expiry, changelog, keyFilter)
   }
 
   /** The planned rows outside a DSv2 relation: one Spark task per planned
@@ -892,10 +906,27 @@ case class ChangelogPass(preImage: Set[String], storedPreImage: Boolean, seq: Lo
 
 /** Serializable per-schema-version read plan. */
 case class SchemaReadPlan(
-    readFunc: PartitionedFile => Iterator[InternalRow],
+    read: FileRead,
     align: Seq[Expression],
     batched: Boolean,
     identityAlign: Boolean = false) extends Serializable
+
+/** The primary keys a point read wants, at `cols` of the reader's row
+  * schema, each normalized by [[KeyFilter.norm]].
+  */
+case class KeyFilter(cols: Seq[Int], keys: Set[Seq[Any]])
+
+object KeyFilter {
+  /** A key value as Spark's equality compares it: -0.0 = 0.0, binary by
+    * content.
+    */
+  def norm(v: Any): Any = v match {
+    case d: Double if d == 0.0d => 0.0d
+    case f: Float if f == 0.0f => 0.0f
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case other => other
+  }
+}
 
 case class GraftFileInfo(
     path: String, length: Long, partition: Seq[String], bucket: Int,
@@ -919,12 +950,24 @@ class GraftReaderFactory(
     merger: Option[RowMerger],
     outIdx: Seq[Int],
     defaultsExprs: Option[Seq[Expression]],
-    dvConf: Option[SerializableConfiguration],
+    dvConf: Option[Broadcast[SerializableConfiguration]],
+    sqlConfs: Map[String, String],
+    /** The session's live conf, for reads in the planning JVM's own
+      * factory instance; a deserialized factory rebuilds it from `sqlConfs`.
+      */
+    @transient sessionConf: SQLConf,
     dropKindIdx: Option[Int] = None,
     columnar: Boolean = false,
     expiry: Option[RecordExpiry] = None,
-    changelog: Option[ChangelogPass] = None)
+    changelog: Option[ChangelogPass] = None,
+    /** Point read: rows of other keys are dropped as read, before the
+      * merge, evaluating the key through each file's alignment.
+      */
+    keyFilter: Option[KeyFilter] = None)
     extends PartitionReaderFactory {
+
+  @transient private lazy val sqlConf: SQLConf =
+    Option(sessionConf).getOrElse(FileReads.sqlConf(sqlConfs))
 
   // scan-level, not per-partition: Spark requires every partition of a
   // scan to agree (mixed row/columnar readers fail the physical plan)
@@ -972,6 +1015,14 @@ class GraftReaderFactory(
       val proj = UnsafeProjection.create(plan.align.toArray)
       val hasPath = rowSchema.fieldNames.contains(GraftSparkTable.FilePathCol)
       val hasIdx = rowSchema.fieldNames.contains(GraftSparkTable.RowIndexCol)
+      // a point read's key test on the raw file row, through the file's
+      // alignment to the read schema
+      val wanted: InternalRow => Boolean = keyFilter match {
+        case Some(KeyFilter(cols, keys)) =>
+          val exprs = cols.map(plan.align).toArray
+          r => keys.contains(exprs.iterator.map(e => KeyFilter.norm(e.eval(r))).toSeq)
+        case None => _ => true
+      }
       if (!hasIdx) {
         // apply the deletion bitmap by raw row position (the plan was built
         // without filter pushdown when DVs are present, so the iterator index
@@ -982,7 +1033,8 @@ class GraftReaderFactory(
             raw.zipWithIndex.collect { case (r, i) if !bm.contains(i) => r }
           case None => raw
         }
-        val projected = undeleted.map(proj)
+        val projected =
+          (if (keyFilter.isEmpty) undeleted else undeleted.filter(wanted)).map(proj)
         // a changelog pass sees expired rows: its fold applies the expiry
         val aligned = expiry.filter(_ => changelog.isEmpty)
           .fold(projected)(e => projected.filter(e.keep))
@@ -1000,7 +1052,9 @@ class GraftReaderFactory(
         // shared meta row is safe: the downstream output projection copies
         // each row before the next advance.
         val bm = f.dvPath.map(readDv)
-        val indexed = raw.zipWithIndex.filter { case (_, i) => bm.forall(!_.contains(i)) }
+        val indexed = raw.zipWithIndex.filter { case (r, i) =>
+          bm.forall(!_.contains(i)) && wanted(r)
+        }
         val metaVals = new Array[Any](if (hasPath) 2 else 1)
         if (hasPath) metaVals(0) =
           org.apache.spark.unsafe.types.UTF8String.fromString(GraftScan.filePath(tableRoot, f.path))
@@ -1016,7 +1070,7 @@ class GraftReaderFactory(
 
     def readDv(rel: String): org.roaringbitmap.RoaringBitmap = {
       val path = new org.apache.hadoop.fs.Path(tableRoot, rel)
-      val fs = path.getFileSystem(dvConf.get.value)
+      val fs = path.getFileSystem(dvConf.get.value.value)
       val in = fs.open(path)
       val bytes = try in.readAllBytes() finally in.close()
       val bm = new org.roaringbitmap.RoaringBitmap()
@@ -1077,8 +1131,8 @@ class GraftReaderFactory(
     private val opened = mutable.ArrayBuffer.empty[AutoCloseable]
 
     def open(f: GraftFileInfo): Iterator[AnyRef] = {
-      val it = planOf(f).readFunc(org.apache.spark.sql.graft.SparkShims.partitionedFile(
-        partitionRow(f), GraftScan.filePath(tableRoot, f.path), 0, f.length))
+      val it = planOf(f).read.open(org.apache.spark.sql.graft.SparkShims.partitionedFile(
+        partitionRow(f), GraftScan.filePath(tableRoot, f.path), 0, f.length), sqlConf)
       it match {
         case c: AutoCloseable => opened += c
         case _ => ()
@@ -1159,8 +1213,14 @@ object GraftScan {
     * prunes as a filtered scan does (bucket, dynamic-bucket and global
     * index, stats, bloom). Each planned partition drains through the scan's
     * own reader: DV masks, schema alignment, defaults, the k-way merge. The
-    * scan leaves row filtering to its consumer, so rows are matched to the
-    * keys here. Each reader drains as a task of its own
+    * reader is handed the key set: it drops every other key's rows on the
+    * raw file row, after the DV mask and before the projection, copy and
+    * merge, evaluating the key through each file's alignment so that files
+    * of older schemas match too. So a lookup pays the merge for its own
+    * keys only, not for the rest of their pages; rows are still matched to
+    * the keys here, one per key. The readers' Hadoop confs are the table
+    * handle's cached broadcasts, so a warm handle broadcasts nothing. Each
+    * reader drains as a task of its own
     * ([[org.apache.spark.sql.graft.SparkShims.inLocalTask]]): the file
     * iterators a format closes only through a task-completion listener
     * close with it, also when the read stops early or fails. Rows are laid
@@ -1173,12 +1233,7 @@ object GraftScan {
     val pkIdx = pks.map(out.fieldIndex)
     val pkTypes = pkIdx.map(out(_).dataType)
     // distinct keys by Spark's equality: -0.0 = 0.0, binary by content
-    def norm(v: Any): Any = v match {
-      case d: Double if d == 0.0d => 0.0d
-      case f: Float if f == 0.0f => 0.0f
-      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-      case other => other
-    }
+    import KeyFilter.norm
     val byNorm = mutable.LinkedHashMap.empty[Seq[Any], Seq[Any]]
     keys.filter(_.forall(_ != null)).foreach(k => byNorm.getOrElseUpdate(k.map(norm), k))
     val found = mutable.ArrayBuffer.empty[InternalRow]
@@ -1194,7 +1249,7 @@ object GraftScan {
         else Seq(wanted.map(k => eqs(k).reduce(org.apache.spark.sql.sources.And(_, _)): Filter)
           .reduce(org.apache.spark.sql.sources.Or(_, _)))
       val scan = new GraftScan(table.spark, table, Some(snapshot), out, filters, None,
-        pinnedSchema = Some(schema))
+        pinnedSchema = Some(schema), pointKeys = Some(byNorm.keySet.toSet))
       val parts = scan.planInputPartitions().iterator
       val factory = scan.createReaderFactory()
       val pending = mutable.HashSet(byNorm.keys.toSeq: _*)

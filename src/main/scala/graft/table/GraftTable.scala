@@ -36,6 +36,25 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
   def isPrimaryKeyed: Boolean = schema.isPrimaryKeyed
   def location: String = store.root
 
+  /** The Hadoop confs this handle's reads broadcast, one per read shape
+    * (see [[graft.spark.v2.ReadShapes]]): a repeated read or lookup of a
+    * shape broadcasts nothing.
+    */
+  private[graft] val readShapes = new graft.spark.v2.ReadShapes()
+
+  /** `lookup`'s row deserializer, for the schema id it was built for. */
+  @volatile private var lookupRows: Option[(Long, org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder.Deserializer[Row])] = None
+
+  /** Drops the reader machinery this handle caches across reads: the
+    * broadcast confs and the lookup deserializer. A scan planned earlier
+    * keeps the confs it holds.
+    */
+  def refresh(): Unit = {
+    readShapes.clear()
+    lookupRows = None
+  }
+
   // ================= schemas =================
 
   /** Columns physically stored in data files. */
@@ -162,9 +181,16 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         val key = pks.map(k =>
           GraftTable.keyValue(spark, k, ts.fieldByName(k).sparkType, pkValues(k)))
         if (key.exists(_.isEmpty)) None
-        else GraftScan.pointRead(this, snap, ts, Seq(key.flatten)).headOption.map(
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(ts.structType)
-            .resolveAndBind().createDeserializer())
+        else GraftScan.pointRead(this, snap, ts, Seq(key.flatten)).headOption.map { r =>
+          val deser = lookupRows.filter(_._1 == ts.id).map(_._2).getOrElse {
+            val d = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(ts.structType)
+              .resolveAndBind().createDeserializer()
+            lookupRows = Some(ts.id -> d)
+            d
+          }
+          // one deserializer reuses its buffers: calls take turns
+          deser.synchronized(deser(r))
+        }
       }
     }
   }

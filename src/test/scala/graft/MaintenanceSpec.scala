@@ -56,6 +56,25 @@ class MaintenanceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(t.pickCompaction().isEmpty)
   }
 
+  // post-commit compaction swallows its failures into a WARN (the write is
+  // already durable), so a reader that fails only inside compaction tasks
+  // would show up as runs piling past the trigger: assert the outcome
+  for (fmt <- Seq("parquet", "orc", "avro"))
+  test(s"[$fmt] upserts past the trigger commit a compaction and bound the runs") {
+    import spark.implicits._
+    val trigger = 3
+    val t = GraftTable.create(spark, tmpTable(), Seq((1L, "a")).toDF("k", "v").schema,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "2", "file.format" -> fmt,
+        "num-sorted-run.compaction-trigger" -> trigger.toString))
+    (1 to 7).foreach(i => t.upsert((1L to 40L).map(k => (k, s"v$i-$k")).toDF("k", "v")))
+    val snap = t.store.latestSnapshot.get
+    assert(t.store.snapshotIds.map(t.store.readSnapshot)
+      .exists(_.commitKind == graft.core.CommitKind.COMPACT), s"$fmt: no COMPACT snapshot")
+    val runs = t.store.liveFiles(snap).groupBy(_.bucket).values.map(_.size)
+    assert(runs.forall(_ <= trigger), s"$fmt: runs per bucket $runs")
+    assert(t.toDF.as[(Long, String)].collect().toSet == (1L to 40L).map(k => (k, s"v7-$k")).toSet)
+  }
+
   test("writes auto-compact past the trigger; write-only suppresses it") {
     val orders = sf("orders").limit(200).cache()
     def runs(t: GraftTable) = t.store.liveFiles(t.store.latestSnapshot.get)

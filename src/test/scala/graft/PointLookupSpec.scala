@@ -260,6 +260,28 @@ class PointLookupSpec extends SparkSpec {
     check("composite-key", c)
   }
 
+  test("a composite-key batch plans only its keys' buckets") {
+    import org.apache.spark.sql.sources.{And, EqualTo, Or}
+    val t = pkTable(Seq("s", "dt"), Map("bucket" -> "8"))
+    fill(t)
+    val snap = t.store.latestSnapshot.get
+    assert(t.store.liveFiles(snap).map(_.bucket).distinct.size > 2)
+    val ks = Seq(4L, 11L)
+    // the filter GraftScan.pointRead plans a 2-key batch with
+    def eqs(k: Long) = And(EqualTo("s", keyOf("s", k)), EqualTo("dt", keyOf("dt", k)))
+    val scan = new graft.spark.v2.GraftScan(spark, t, Some(snap), t.schema.structType,
+      Seq(Or(eqs(ks(0)), eqs(ks(1)))), None)
+    val buckets = scan.planInputPartitions().toSeq.flatMap(
+      _.asInstanceOf[graft.spark.v2.GraftInputPartition].files.map(_.bucket)).distinct
+    assert(buckets.nonEmpty && buckets.size <= 2, s"planned buckets $buckets")
+    val keys = ks.map(k => Seq[Any](
+      org.apache.spark.unsafe.types.UTF8String.fromString(s"key$k"),
+      java.time.LocalDate.of(2024, 1, 1).plusDays(k).toEpochDay.toInt))
+    val (got, jobs) = jobsOf(graft.spark.v2.GraftScan.pointRead(t, snap, t.schema, keys))
+    assert(jobs == 0)
+    assert(got.map(_.getUTF8String(1).toString).toSet == ks.map(k => s"key$k").toSet)
+  }
+
   test("timestamp keys under a non-default session time zone") {
     val prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")

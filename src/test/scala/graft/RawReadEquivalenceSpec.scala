@@ -179,6 +179,10 @@ class RawReadEquivalenceSpec extends SparkSpec {
     assert(raw.filter(col(BucketCol) =!= pmod(hash(col("id")), lit(4))).isEmpty)
     assert(raw.filter(col(BucketCol) === 1).count() ==
       raw.filter(pmod(hash(col("id")), lit(4)) === 1).count())
+    // a filter on the bucket directory column prunes the same in both
+    val odd = raw.filter(col("pt") === "o" && col(BucketCol) === 1).count()
+    assert(odd > 0)
+    assert(check(t, Some(col("pt") === "o" && col(BucketCol) === 1)) == odd)
   }
 
   test("pk -D rows: raw reads keep every stored kind") {

@@ -188,7 +188,8 @@ class ReferenceFileIndex(
     this(spark, store, schema, Right(files), partitionSchema)
 
   private val typeByName: Map[String, DataType] =
-    schema.fields.map(f => f.name -> f.sparkType).toMap
+    schema.fields.map(f => f.name -> f.sparkType).toMap ++
+      (if (schema.hasBucketDirs) Map(graft.GraftMeta.BucketCol -> IntegerType) else Map.empty)
   private val typeOf: String => Option[DataType] = typeByName.get
 
   private lazy val allFiles: Seq[DataFileMeta] = source match {
