@@ -1340,8 +1340,8 @@ object Fixtures {
   }
 
   /** SQL row-level DML: the canonical orders table maintained through
-    * `spark.sql` UPDATE / MERGE INTO statements (requires the
-    * GraftExtensions analysis rule). Returns the catalog table name.
+    * `spark.sql` UPDATE / MERGE INTO statements (planned by Spark's
+    * row-level rewrite). Returns the catalog table name.
     */
   def sqlOrdersDml(spark: SparkSession, sfDir: String): String = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")

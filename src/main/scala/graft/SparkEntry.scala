@@ -242,11 +242,11 @@ object SparkEntry {
     "q16_update" -> ((s, d) => Fixtures.ordersPkUpdated(s, d).toDF),
     "q17_merge_into" -> ((s, d) => Fixtures.ordersPkMerged(s, d).toDF),
     "q126_delta_protocol_dml" -> ((s, d) => {
-      // UPDATE + MERGE + subquery DELETE through Spark's NATIVE row-level
-      // protocol (SupportsRowLevelOperations/SupportsDelta, table option
-      // rowlevel.v2): the analyzer plans WriteDelta, executors stage
-      // op-tagged rows, the driver commits one LSM upsert. The subquery
-      // DELETE is only expressible on this path.
+      // UPDATE + MERGE + subquery DELETE through Spark's row-level
+      // protocol (SupportsRowLevelOperations/SupportsDelta, which every PK
+      // table supports; the rowlevel.v2 property is inert): the analyzer
+      // plans WriteDelta, executors stage op-tagged rows, the driver
+      // commits one LSM upsert.
       s.conf.set("spark.sql.catalog.graft_dml",
         classOf[graft.spark.v2.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graft_dml.warehouse",

@@ -248,6 +248,12 @@ class FileStore(val root: String, val hadoopConf: Configuration,
 
   def latestSnapshot: Option[Snapshot] = latestSnapshotId.map(readSnapshot)
 
+  /** The newest snapshot committed at or before `timestampMs` (epoch
+    * millis), if any: the time-travel anchor of a timestamp.
+    */
+  def snapshotAtOrBefore(timestampMs: Long): Option[Snapshot] =
+    snapshotIds.reverseIterator.map(readSnapshot).find(_.timestampMs <= timestampMs)
+
   // ---------------- decoupled changelog ----------------
   // With changelog retention configured (changelog.num-retained.max /
   // changelog.time-retained), snapshot expiration PRESERVES each expired

@@ -94,9 +94,7 @@ case class TableSchema(
     * exchanges, even when their full primary keys differ.
     */
   def bucketKeys: Seq[String] =
-    options.get(TableSchema.BucketKeyOpt)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(primaryKeys)
+    options.get(TableSchema.BucketKeyOpt).map(TableSchema.columnList).getOrElse(primaryKeys)
 
   /** Drop retraction records (-U/-D) at write AND merge time — the CDC
     * ingest switch for streams whose deletes must not reach the table
@@ -442,6 +440,12 @@ object ChangelogProducer {
 }
 
 object TableSchema {
+  /** The column names of a comma-separated list option (`primary-key`,
+    * `bucket-key`, ...): trimmed, empty entries dropped.
+    */
+  def columnList(csv: String): Seq[String] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
   val BucketOpt = "bucket"
   val BucketKeyOpt = "bucket-key"
   val MergeEngineOpt = "merge-engine"

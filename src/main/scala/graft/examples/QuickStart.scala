@@ -367,14 +367,14 @@ object QuickStart {
     println(s"[multimodal] video routing: in-engine mjpeg frames=${real.count()} " +
       s"routed-to-external stub rows=${toExternal.count()}")
 
-    // ---- native DSv2 row-level ops ('rowlevel.v2'): Spark plans
-    // UPDATE/MERGE/subquery-DELETE as WriteDelta; one LSM upsert commits ----
+    // ---- row-level ops on a PK table: Spark plans UPDATE/MERGE/
+    // subquery-DELETE as WriteDelta; one LSM upsert commits ----
     spark.conf.set("spark.sql.catalog.graft_qs",
       classOf[graft.spark.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_qs.warehouse", s"$base/wh")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_qs.db")
     spark.sql("""CREATE TABLE graft_qs.db.rl (k BIGINT, v DOUBLE) USING graft
-      |TBLPROPERTIES ('primary-key'='k','bucket'='2','rowlevel.v2'='true')""".stripMargin)
+      |TBLPROPERTIES ('primary-key'='k','bucket'='2')""".stripMargin)
     spark.sql("INSERT INTO graft_qs.db.rl VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
     spark.sql("UPDATE graft_qs.db.rl SET v = v * 10 WHERE k >= 2")
     spark.sql("DELETE FROM graft_qs.db.rl WHERE k IN " +

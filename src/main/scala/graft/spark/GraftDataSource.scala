@@ -97,15 +97,7 @@ class GraftDataSource extends TableProvider with RelationProvider
     val exists = GraftTable.exists(spark, path)
     val table =
       if (exists) GraftTable.load(spark, path)
-      else {
-        val pks = parameters.get("primary-keys").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        val pts = parameters.get("partition-keys").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        val reserved = Set("path", "primary-keys", "partition-keys")
-        GraftTable.create(spark, path, data.schema, pts, pks,
-          parameters -- reserved)
-      }
+      else GraftTable.createForWrite(spark, path, data.schema, parameters)
     val mergeSchema = parameters.get("merge-schema").exists(_.toBoolean)
     mode match {
       case SaveMode.Append if mergeSchema => table.writeWithSchemaMerge(data)
@@ -232,14 +224,7 @@ class GraftSink(spark: SparkSession, path: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val table =
       if (GraftTable.exists(spark, path)) GraftTable.load(spark, path)
-      else {
-        val pks = options.get("primary-keys").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        val pts = options.get("partition-keys").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        GraftTable.create(spark, path, data.schema, pts, pks,
-          options -- Set("path", "primary-keys", "partition-keys", "checkpointLocation"))
-      }
+      else GraftTable.createForWrite(spark, path, data.schema, options)
     // rebind over the SAME physical rows — no re-analysis, no second read
     // of the micro-batch source
     val fresh = org.apache.spark.sql.graft.SparkShims.rebindMicroBatch(data)

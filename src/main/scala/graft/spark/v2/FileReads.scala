@@ -1,6 +1,7 @@
 package graft.spark.v2
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.memory.MemoryMode
 import org.apache.spark.sql.SparkSession
@@ -16,8 +17,9 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** The Hadoop confs a table handle's reads broadcast, one per read shape
-  * (reference: LocalTableQuery keeps its readers across lookups). A format
+/** The Hadoop confs a table's reads broadcast, one per read shape
+  * (reference: LocalTableQuery keeps its readers across lookups), shared
+  * by every handle of the table ([[ReadShapes.of]]). A format
   * reader's conf depends on the format, the schema it reads and the
   * session's SQL conf, not on the filters: Spark's DSv2 file reader
   * factories take the broadcast conf and the pushed filters as separate
@@ -51,6 +53,26 @@ final class ReadShapes(capacity: Int = 16) {
 
   /** Drops every cached conf. */
   def clear(): Unit = synchronized(confs.clear())
+}
+
+object ReadShapes {
+  private val tables =
+    new java.util.LinkedHashMap[(SparkContext, String), ReadShapes](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkContext, String), ReadShapes]): Boolean =
+        size() > 32
+    }
+
+  /** The read shapes of the table at `location` under `sc`, shared by the
+    * table's handles (a catalog query loads a new handle), so a repeated
+    * query broadcasts nothing. Keyed by the context: a stopped context's
+    * broadcasts are never reused, and its entries are dropped here. At
+    * most 32 tables are kept, least recently used first out.
+    */
+  def of(sc: SparkContext, location: String): ReadShapes = synchronized {
+    tables.keySet.removeIf(_._1.isStopped)
+    tables.computeIfAbsent((sc, location), _ => new ReadShapes())
+  }
 }
 
 /** How one data file of a scan is opened. Each open returns the file's

@@ -175,11 +175,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val t = GraftTable.load(spark, tablePath(ident).toString)
     val tsMs = timestamp / 1000 // Spark passes micros
-    val id = t.store.snapshotIds.map(t.store.readSnapshot)
-      .filter(_.timestampMs <= tsMs).map(_.id).maxOption
-      .getOrElse(throw new IllegalArgumentException(
+    val snap = t.store.snapshotAtOrBefore(tsMs).getOrElse(
+      throw new IllegalArgumentException(
         s"no snapshot at or before ${new java.sql.Timestamp(tsMs)}"))
-    GraftSparkTable(spark, t, ident, Some(t.store.readSnapshot(id)))
+    GraftSparkTable(spark, t, ident, Some(snap))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -209,8 +208,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       else throw new UnsupportedOperationException(s"partition transform $t " +
         "(only identity partitioning; bucketing comes from the 'bucket' property)")
     }
-    val primaryKeys = props.get("primary-key").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val primaryKeys = props.get("primary-key").toSeq.flatMap(graft.core.TableSchema.columnList)
     val reserved = Set("primary-key", "provider", "owner", "location",
       TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL)
     val t = GraftTable.create(spark, tablePath(ident).toString, schema,

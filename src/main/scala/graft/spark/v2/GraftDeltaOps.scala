@@ -4,29 +4,28 @@ import graft.GraftMeta
 import graft.core.Snapshot
 import graft.table.GraftTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRowLevelOperations}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** DSv2-NATIVE row-level operations (Spark's delta protocol:
-  * `SupportsRowLevelOperations` + `SupportsDelta`) for primary-keyed
-  * tables, opt-in via the table option `'rowlevel.v2' = 'true'`.
-  *
-  * With the flag on, Spark's own analyzer rewrites (RewriteDeleteFromTable
-  * / RewriteUpdateTable / RewriteMergeIntoTable) plan DELETE/UPDATE/MERGE
-  * into a WriteDelta over this operation — the engine-side analysis rule
-  * (`GraftRowLevelSqlRule`) steps aside — and future Spark features that
-  * ride the native protocol (group-based runtime filtering, merge
-  * improvements) come for free.
+/** Row-level operations of a primary-key table through Spark's delta
+  * protocol (`SupportsRowLevelOperations` + `SupportsDelta`): Spark's own
+  * rewrites (RewriteDeleteFromTable / RewriteUpdateTable /
+  * RewriteMergeIntoTable) plan UPDATE, MERGE and subquery DELETE as a
+  * WriteDelta over [[GraftDeltaOperation]], for SQL and for the Scala
+  * `update` / `mergeInto` alike. Every relation of a primary-key table the
+  * catalogs or `toDF` hand out is this table ([[GraftSparkTable.apply]]).
   *
   * Execution shape: the LSM write IS a delta sink, so the protocol maps
   * 1:1 — each executor stages its stream of insert/update/delete callbacks
@@ -34,13 +33,12 @@ import org.apache.spark.util.SerializableConfiguration
   * materialize only the primary key, the merge engine drops by key), and
   * the driver-side commit routes the staged frame through the REGULAR
   * upsert (bucket shuffle, pk sort, stats, one manifest commit) with the
-  * op column mapped to row kinds — identical semantics and file layout to
-  * the analysis-rule path, same staged-double-write trade as the streaming
-  * sink ([[GraftStreamingWrite]]).
+  * op column mapped to row kinds — the same staged double write as the
+  * streaming sink ([[GraftStreamingWrite]]).
   *
-  * Reference: the paimon Spark connector predates this Spark API and uses
-  * the analysis-rule approach only (MergeIntoPaimonTable.scala:41); this
-  * is an exceeds-reference binding of the same one-LSM-write execution.
+  * Reference: the paimon Spark connector predates this Spark API and runs
+  * MERGE as an analysis rule (MergeIntoPaimonTable.scala:41); the execution
+  * is the same one LSM write of the changed rows.
   */
 class GraftDeltaSparkTable(
     spark: SparkSession,
@@ -50,19 +48,6 @@ class GraftDeltaSparkTable(
     acl: String => Unit = _ => ())
     extends GraftSparkTable(spark, table, ident, snapshot, acl)
     with SupportsRowLevelOperations {
-
-  /** Primary keys report non-nullable: Spark rejects nullable row-id
-    * attributes (NULLABLE_ROW_ID_ATTRIBUTES), and a null pk is already
-    * semantically impossible on an LSM table — the flag just surfaces the
-    * invariant to the planner. Side effect (standard for keyed v2 tables,
-    * e.g. Iceberg identifier fields): INSERTs from nullable sources into
-    * the key columns are rejected at analysis instead of at merge time.
-    */
-  override def schema(): org.apache.spark.sql.types.StructType = {
-    val pks = table.schema.primaryKeys.toSet
-    org.apache.spark.sql.types.StructType(super.schema().fields.map(f =>
-      if (pks(f.name)) f.copy(nullable = false) else f))
-  }
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
@@ -124,6 +109,17 @@ class GraftDeltaWrite(
 object GraftDeltaBatchWrite {
   /** Op marker column of the staged frame (never reaches the table). */
   val OpCol = "__graft_delta_op"
+
+  /** The staged rows' schema: the table's columns, then the op tag. Non-pk
+    * columns are nullable, since a delete stages its key only (a NOT NULL
+    * table column would otherwise become a parquet REQUIRED field that the
+    * record writer refuses to leave unset); nested fields keep the table's
+    * nullability.
+    */
+  def stagedSchema(tableSchema: StructType, primaryKeys: Seq[String]): StructType =
+    StructType(tableSchema.fields.map { f =>
+      if (primaryKeys.contains(f.name)) f else f.copy(nullable = true)
+    } :+ StructField(OpCol, StringType, nullable = false))
 }
 
 class GraftDeltaBatchWrite(
@@ -134,8 +130,7 @@ class GraftDeltaBatchWrite(
     conf: SerializableConfiguration) extends DeltaBatchWrite {
   import GraftDeltaBatchWrite.OpCol
 
-  private val stagedSchema =
-    StructType(tableSchema.fields :+ StructField(OpCol, StringType, nullable = false))
+  private val stagedSchema = GraftDeltaBatchWrite.stagedSchema(tableSchema, primaryKeys)
   private def stagingDir = s"$tablePath/tmp-delta-$queryId"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -147,16 +142,20 @@ class GraftDeltaBatchWrite(
     val fs = dir.getFileSystem(conf.value)
     try {
       val files = messages.collect { case m: GraftStagedFile => m.path }
-      if (files.nonEmpty) {
-        val staged = spark.read.schema(stagedSchema).parquet(files.toIndexedSeq: _*)
-        val kinds = when(col(OpCol) === "I", lit(GraftMeta.KindInsert))
-          .when(col(OpCol) === "U", lit(GraftMeta.KindUpdateAfter))
-          .when(col(OpCol) === "D", lit(GraftMeta.KindDelete))
-          .otherwise(raise_error(concat(
-            lit("delta op must be one of I/U/D, found: "),
-            coalesce(col(OpCol), lit("null")))))
-        GraftTable.load(spark, tablePath).upsert(staged, kinds = Some(kinds))
-      }
+      // a file read reports every field nullable: the staged rows keep the
+      // nested NOT NULL fields the upsert's casts require. An operation that
+      // changed no row still commits (an empty snapshot), as every upsert does
+      val staged =
+        if (files.nonEmpty) SparkShims.withSchema(
+          spark.read.schema(stagedSchema).parquet(files.toIndexedSeq: _*), stagedSchema)
+        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], stagedSchema)
+      val kinds = when(col(OpCol) === "I", lit(GraftMeta.KindInsert))
+        .when(col(OpCol) === "U", lit(GraftMeta.KindUpdateAfter))
+        .when(col(OpCol) === "D", lit(GraftMeta.KindDelete))
+        .otherwise(raise_error(concat(
+          lit("delta op must be one of I/U/D, found: "),
+          coalesce(col(OpCol), lit("null")))))
+      GraftTable.load(spark, tablePath).upsert(staged, kinds = Some(kinds))
     } finally if (fs.exists(dir)) fs.delete(dir, true)
   }
 
@@ -191,13 +190,7 @@ class GraftDeltaDataWriter(
     primaryKeys: Seq[String],
     conf: SerializableConfiguration) extends DeltaWriter[InternalRow] {
 
-  // Non-pk fields are forced nullable: delete() stages key-only rows whose
-  // non-key values are null (never read — the merge engine drops by key), and
-  // a NOT NULL table column would otherwise become a parquet REQUIRED field
-  // that the record writer refuses to leave unset.
-  private val stagedSchema = StructType(tableSchema.fields.map { f =>
-    if (primaryKeys.contains(f.name)) f else f.copy(nullable = true)
-  } :+ StructField(GraftDeltaBatchWrite.OpCol, StringType, nullable = false))
+  private val stagedSchema = GraftDeltaBatchWrite.stagedSchema(tableSchema, primaryKeys)
   private val writer = new GraftStagedParquetWriter(file, stagedSchema, conf.value)
   private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
   private val insertTag = tag("I")
@@ -216,8 +209,21 @@ class GraftDeltaDataWriter(
   override def insert(row: InternalRow): Unit =
     writer.write(joined(row, insertTag))
 
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
+  // the upsert keys an update by its new row's key: an assignment that
+  // changed the key would add the new key and leave the old one in place
+  private val keyOrders = pkSlots.map { case (_, dt) => TypeUtils.getInterpretedOrdering(dt) }
+
+  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit = {
+    var i = 0
+    while (i < pkSlots.length) {
+      val (slot, dt) = pkSlots(i)
+      val (was, now) = (id.get(i, dt), row.get(slot, dt))
+      if (now == null || keyOrders(i).compare(was, now) != 0)
+        throw new IllegalArgumentException("cannot update primary key columns")
+      i += 1
+    }
     writer.write(joined(row, updateTag))
+  }
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     val full = new GenericInternalRow(tableSchema.length + 1)

@@ -3,43 +3,27 @@ package graft.spark.v2
 import graft.table.GraftTable
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.SparkShims
 
-/** SQL `UPDATE` / `MERGE INTO` on catalog tables, routed to the existing
-  * row-level operations (reference: the analysis-rule approach of
-  * paimon-spark — UpdatePaimonTableCommand.scala:38,
-  * MergeIntoPaimonTable.scala:41 — rather than Spark's
-  * SupportsRowLevelOperations delta protocol; one LSM write of change rows
-  * is the natural execution shape for an LSM table, and the COW path covers
-  * append tables).
+/** Row-level SQL that Spark's own rewrites do not plan for graft tables.
+  * UPDATE and MERGE on primary-key tables are not here: their relation
+  * supports Spark's delta protocol ([[GraftDeltaSparkTable]]), so Spark
+  * plans them as a WriteDelta itself.
   *
-  * The rule replaces a resolved UpdateTable/MergeIntoTable over a Graft
-  * relation with an eager command. Resolved attribute references are
-  * rebound BY NAME against the command-built DataFrames (`t.` = target,
-  * `s.` = source), which is exact because both sides expose the table /
-  * source schemas unchanged.
+  * The rule replaces a resolved UpdateTable over an append table with an
+  * eager copy-on-write command (reference: the analysis-rule approach of
+  * paimon-spark, UpdatePaimonTableCommand.scala:38). Resolved attribute
+  * references are rebound BY NAME against the table's frames, which is
+  * exact because they expose the table schema unchanged.
   */
 case class GraftRowLevelSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def graftOf(plan: LogicalPlan): Option[GraftTable] =
-    plan.collectFirst {
-      // delta-protocol tables ('rowlevel.v2') are EXCLUDED: Spark's own
-      // row-level rewrites (RewriteUpdateTable / RewriteMergeIntoTable)
-      // plan those natively — this rule must not shadow them
-      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSparkTable] &&
-          !r.table.isInstanceOf[
-            org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations] =>
-        r.table.asInstanceOf[GraftSparkTable].table
-    }
-
-  /** Like [[graftOf]] but INCLUDING delta-protocol tables — for plan nodes
-    * Spark has no native handler for (dynamic partition overwrite). */
-  private def graftAnyOf(plan: LogicalPlan): Option[GraftTable] =
     plan.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSparkTable] =>
         r.table.asInstanceOf[GraftSparkTable].table
@@ -47,19 +31,8 @@ case class GraftRowLevelSqlRule(session: SparkSession) extends Rule[LogicalPlan]
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case u @ UpdateTable(target, assignments, condition)
-        if u.resolved && graftOf(target).isDefined =>
+        if u.resolved && graftOf(target).exists(!_.isPrimaryKeyed) =>
       GraftUpdateCommand(graftOf(target).get, assignments, condition)
-    case m: MergeIntoTable
-        if m.resolved && graftOf(m.targetTable).isDefined =>
-      // WITH SCHEMA EVOLUTION needs no handling here: the analyzer already
-      // evolved the target (AUTOMATIC_SCHEMA_EVOLUTION capability →
-      // ResolveMergeIntoSchemaEvolution → GraftCatalog.alterTable) before
-      // this post-hoc rule sees the resolved plan, so target/source refs
-      // below bind against the evolved schema.
-      GraftMergeCommand(graftOf(m.targetTable).get,
-        new MergeSpec(m.sourceTable, m.mergeCondition, m.matchedActions,
-          m.notMatchedActions, m.notMatchedBySourceActions,
-          m.sourceTable.outputSet, m.targetTable.outputSet))
     // dynamic INSERT OVERWRITE (spark.sql.sources.partitionOverwriteMode =
     // dynamic): Spark has no V1 fallback for OverwritePartitionsDynamicExec,
     // so — like the reference's PaimonDynamicPartitionOverwriteCommand.scala
@@ -67,8 +40,8 @@ case class GraftRowLevelSqlRule(session: SparkSession) extends Rule[LogicalPlan]
     // library's dynamic overwrite (replace exactly the partitions present
     // in the new data, one OVERWRITE commit)
     case o: OverwritePartitionsDynamic
-        if o.query.resolved && graftAnyOf(o.table).isDefined =>
-      GraftDynamicOverwriteCommand(graftAnyOf(o.table).get, o.query)
+        if o.query.resolved && graftOf(o.table).isDefined =>
+      GraftDynamicOverwriteCommand(graftOf(o.table).get, o.query)
     case _ => plan
   }
 }
@@ -89,20 +62,7 @@ case class GraftDynamicOverwriteCommand(
   }
 }
 
-/** Opaque bundle of the merge plan parts — deliberately NOT a TreeNode
-  * product member type, so the command stays a true leaf for Catalyst's
-  * reflective copy/transform machinery.
-  */
-class MergeSpec(
-    val source: LogicalPlan,
-    val cond: Expression,
-    val matched: Seq[MergeAction],
-    val notMatched: Seq[MergeAction],
-    val notMatchedBySource: Seq[MergeAction],
-    val sourceOutput: AttributeSet,
-    val targetOutput: AttributeSet) extends Serializable
-
-/** UPDATE t SET ... WHERE ... over a Graft table. */
+/** UPDATE t SET ... WHERE ... over a Graft append table. */
 case class GraftUpdateCommand(
     table: GraftTable,
     assignments: Seq[Assignment],
@@ -115,19 +75,6 @@ case class GraftUpdateCommand(
   })
 
   override def run(spark: SparkSession): Seq[Row] = {
-    // Spark's assignment alignment may expand SET lists to every column with
-    // identity values (possibly cast-wrapped) — drop the no-ops (they would
-    // trip the pk-update guard)
-    def stripTrivialCast(e: Expression): Expression = e match {
-      case c: org.apache.spark.sql.catalyst.expressions.Cast => stripTrivialCast(c.child)
-      case other => other
-    }
-    val real = assignments.filterNot { a =>
-      (a.key, stripTrivialCast(a.value)) match {
-        case (k: AttributeReference, v: AttributeReference) => k.exprId == v.exprId
-        case _ => false
-      }
-    }
     // nested assignment keys (SET person.age = ...) arrive as
     // GetStructField chains — emit the dotted path; RowLevelOps folds it
     // into a whole-root struct rebuild
@@ -137,64 +84,9 @@ case class GraftUpdateCommand(
         keyName(g.child) + "." + g.extractFieldName
       case other => other.sql
     }
-    val sets = real.map(a => keyName(a.key) -> byName(a.value)).toMap
+    val sets = assignments.map(a => keyName(a.key) -> byName(a.value)).toMap
     table.update(condition.map(byName)
       .getOrElse(org.apache.spark.sql.functions.lit(true)), sets)
-    Nil
-  }
-}
-
-/** MERGE INTO t USING s ... over a Graft table, mapped clause-for-clause
-  * onto [[graft.table.MergeIntoBuilder]] (first-match-wins preserved).
-  */
-case class GraftMergeCommand(
-    table: GraftTable,
-    spec: MergeSpec) extends LeafRunnableCommand {
-  import spec._
-
-  override val output: Seq[Attribute] = Nil
-
-  /** Rebind resolved refs: source attrs → `s.<name>`, target → `t.<name>`. */
-  private def fix(e: Expression) = SparkShims.column(e.transform {
-    case a: AttributeReference if sourceOutput.contains(a) =>
-      UnresolvedAttribute(Seq("s", a.name))
-    case a: AttributeReference =>
-      UnresolvedAttribute(Seq("t", a.name))
-  })
-
-  private def setsOf(assignments: Seq[Assignment]) =
-    assignments.map { a =>
-      def keyName(e: Expression): String = e match {
-        case k: AttributeReference => k.name
-        case g: org.apache.spark.sql.catalyst.expressions.GetStructField =>
-          keyName(g.child) + "." + g.extractFieldName
-        case other => other.sql
-      }
-      keyName(a.key) -> fix(a.value)
-    }.toMap
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val srcDF = SparkShims.ofRows(spark, source)
-    val b = table.mergeInto(srcDF, fix(cond))
-    matched.foreach {
-      case UpdateAction(c, assigns, _) => b.whenMatchedUpdate(setsOf(assigns), c.map(fix))
-      case UpdateStarAction(c) => b.whenMatchedUpdateAll(c.map(fix))
-      case DeleteAction(c) => b.whenMatchedDelete(c.map(fix))
-      case other => throw new IllegalArgumentException(s"unsupported WHEN MATCHED: $other")
-    }
-    notMatched.foreach {
-      case InsertAction(c, assigns) => b.whenNotMatchedInsert(setsOf(assigns), c.map(fix))
-      case InsertStarAction(c) => b.whenNotMatchedInsertAll(c.map(fix))
-      case other => throw new IllegalArgumentException(s"unsupported WHEN NOT MATCHED: $other")
-    }
-    notMatchedBySource.foreach {
-      case UpdateAction(c, assigns, _) =>
-        b.whenNotMatchedBySourceUpdate(setsOf(assigns), c.map(fix))
-      case DeleteAction(c) => b.whenNotMatchedBySourceDelete(c.map(fix))
-      case other => throw new IllegalArgumentException(
-        s"unsupported WHEN NOT MATCHED BY SOURCE: $other")
-    }
-    b.execute()
     Nil
   }
 }

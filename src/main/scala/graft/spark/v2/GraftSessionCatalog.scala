@@ -66,8 +66,7 @@ class GraftSessionCatalog extends DelegatingCatalogExtension {
         k.substring(TableCatalog.OPTION_PREFIX.length) -> v
     }
     val merged = fromOptions ++ props // TBLPROPERTIES win on a key collision
-    val primaryKeys = merged.get("primary-key").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val primaryKeys = merged.get("primary-key").toSeq.flatMap(graft.core.TableSchema.columnList)
     val reserved = Set(TableCatalog.PROP_PROVIDER, TableCatalog.PROP_LOCATION,
       TableCatalog.PROP_OWNER, TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL,
       "primary-key", "path", "transient_lastDdlTime")
@@ -109,8 +108,7 @@ class GraftSessionCatalog extends DelegatingCatalogExtension {
       }
       import scala.collection.JavaConverters._
       val props = properties.asScala.toMap
-      val primaryKeys = props.get("primary-key").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+      val primaryKeys = props.get("primary-key").toSeq.flatMap(graft.core.TableSchema.columnList)
       val reserved = Set("primary-key", "provider", "owner", "location",
         TableCatalog.PROP_COMMENT, TableCatalog.PROP_EXTERNAL)
       val t = GraftTable.create(spark, loc, schema, partitionKeys, primaryKeys,

@@ -42,8 +42,17 @@ class GraftSparkTable(
 
   override def name(): String = ident.toString
 
+  /** The table's columns, with the primary key NOT NULL: Spark's row-level
+    * rewrites refuse a nullable row id, and an LSM key is never null
+    * (`upsert` refuses one). A raw read keeps the stored nullability.
+    */
   override def schema(): StructType =
-    if (rawFiles.isDefined) table.rawSchema else table.schema.structType
+    if (rawFiles.isDefined) table.rawSchema
+    else {
+      val pks = table.schema.primaryKeys.toSet
+      StructType(table.schema.structType.fields.map(f =>
+        if (pks(f.name)) f.copy(nullable = false) else f))
+    }
 
   /** Exposed metadata columns (reference: PaimonMetadataColumn.scala:42-49):
     * `__file_path` (raw scans) and `__bucket` (all scans of PK tables).
@@ -204,9 +213,7 @@ class GraftSparkTable(
           .orElse(Option(options.get("scan.timestamp"))
             .map(GraftSparkTable.parseScanTimestamp))
           .map { ts =>
-            table.store.snapshotIds
-              .filter(id => table.store.readSnapshot(id).timestampMs <= ts)
-              .maxOption.map(table.store.readSnapshot)
+            table.store.snapshotAtOrBefore(ts)
               // falling through to "latest" here would silently read data
               // newer than the requested instant (reference: TimeTravelUtil
               // throws when nothing is at-or-before the timestamp)
@@ -345,18 +352,14 @@ object GraftSparkTable {
   val FilePathCol = "__file_path"
   val RowIndexCol = "__row_index"
 
-  /** Catalog-facing constructor: a primary-keyed table with
-    * `'rowlevel.v2' = 'true'` binds DELETE/UPDATE/MERGE through Spark's
-    * native delta protocol ([[GraftDeltaSparkTable]]); every other table
-    * keeps the analysis-rule path. The flag is a table property so the
-    * choice is durable and visible in DESCRIBE, not session-dependent.
+  /** The relation of `table`: a primary-key table binds UPDATE and MERGE
+    * through Spark's delta rewrite ([[GraftDeltaSparkTable]]); an append
+    * table keeps the analysis-rule path.
     */
   def apply(spark: SparkSession, table: GraftTable, ident: Identifier,
       snapshot: Option[Snapshot] = None,
       acl: String => Unit = _ => ()): GraftSparkTable =
-    if (table.isPrimaryKeyed &&
-        table.schema.option("rowlevel.v2", "false").toBoolean)
-      new GraftDeltaSparkTable(spark, table, ident, snapshot, acl)
+    if (table.isPrimaryKeyed) new GraftDeltaSparkTable(spark, table, ident, snapshot, acl)
     else new GraftSparkTable(spark, table, ident, snapshot, acl)
 
   /** Parse the `scan.timestamp` datetime string (reference: CoreOptions

@@ -65,7 +65,7 @@ object LookupJoin {
     val table = GraftTable.load(spark, path)
     val ident = Identifier.of(Array("graft"), path.split('/').last)
     val rel = DataSourceV2Relation.create(
-      new GraftSparkTable(spark, table, ident), None, Some(ident))
+      GraftSparkTable(spark, table, ident), None, Some(ident))
     SparkShims.ofRows(spark, rel)
   }
 

@@ -36,19 +36,19 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
   def isPrimaryKeyed: Boolean = schema.isPrimaryKeyed
   def location: String = store.root
 
-  /** The Hadoop confs this handle's reads broadcast, one per read shape
-    * (see [[graft.spark.v2.ReadShapes]]): a repeated read or lookup of a
-    * shape broadcasts nothing.
+  /** The Hadoop confs this table's reads broadcast, one per read shape,
+    * shared with its other handles (see [[graft.spark.v2.ReadShapes]]): a
+    * repeated read or lookup of a shape broadcasts nothing.
     */
-  private[graft] val readShapes = new graft.spark.v2.ReadShapes()
+  private[graft] lazy val readShapes = graft.spark.v2.ReadShapes.of(spark.sparkContext, location)
 
   /** `lookup`'s row deserializer, for the schema id it was built for. */
   @volatile private var lookupRows: Option[(Long, org.apache.spark.sql.catalyst.encoders
     .ExpressionEncoder.Deserializer[Row])] = None
 
   /** Drops the reader machinery this handle caches across reads: the
-    * broadcast confs and the lookup deserializer. A scan planned earlier
-    * keeps the confs it holds.
+    * broadcast confs (for every handle of the table) and the lookup
+    * deserializer. A scan planned earlier keeps the confs it holds.
     */
   def refresh(): Unit = {
     readShapes.clear()
@@ -131,8 +131,15 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     */
   def toDF(snapshot: Option[Snapshot]): DataFrame = snapshot match {
     case None => emptyDF
-    case Some(s) => relationDF(new graft.spark.v2.GraftSparkTable(spark, this, ident, Some(s)))
+    case Some(s) => relationDF(graft.spark.v2.GraftSparkTable(spark, this, ident, Some(s)))
   }
+
+  /** The table's DSv2 relation with no pinned snapshot (its scan reads the
+    * latest one): the target of the Scala API's row-level plans.
+    */
+  private[table] def relation: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+      .create(graft.spark.v2.GraftSparkTable(spark, this, ident), None, None)
 
   private def ident =
     org.apache.spark.sql.connector.catalog.Identifier.of(
@@ -256,10 +263,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
   def incrementalBetweenTimestamps(fromMillis: Long, toMillis: Long): DataFrame = {
     require(fromMillis <= toMillis,
       s"incremental timestamp range inverted: $fromMillis > $toMillis")
-    // O(snapshots) driver metadata scan, same bound as snapshot listing
-    def atOrBefore(ts: Long): Long = store.snapshotIds
-      .filter(id => store.readSnapshot(id).timestampMs <= ts)
-      .maxOption.getOrElse(0L)
+    def atOrBefore(ts: Long): Long = store.snapshotAtOrBefore(ts).map(_.id).getOrElse(0L)
     incremental(atOrBefore(fromMillis), atOrBefore(toMillis))
   }
 
@@ -289,8 +293,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
         opt("scan.tag-name").map(store.readTag(_).id - 1).getOrElse(0L)
       case "from-timestamp" =>
         val ts = opt("scan.timestamp-millis").map(_.toLong).getOrElse(0L)
-        store.snapshotIds.filter(id => store.readSnapshot(id).timestampMs <= ts)
-          .maxOption.getOrElse(0L)
+        store.snapshotAtOrBefore(ts).map(_.id).getOrElse(0L)
       case "from-watermark" =>
         val w = opt("scan.watermark").map(_.toLong).getOrElse(Long.MinValue)
         store.snapshotIds.find(id => store.readSnapshot(id).watermark.exists(_ >= w))
@@ -595,15 +598,19 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
       CommitKind.APPEND, commitIdentifier, commitUser = commitUser,
       changelog = lookupChangelog(files, seq),
       indexFiles = indexDelta ++ globalIndexDelta(files))
-    postWriteCompact().getOrElse(snap)
+    val result = postWriteCompact().getOrElse(snap)
+    GraftTable.lastUpsert.set(result)
+    result
   }
 
   /** Bucket-route, dedup (dv mode), and sort a kind/seq/pos-decorated frame
     * for staging — the shared tail of upsert and PK overwrite. Returns the
     * shuffle-ready frame plus any dynamic-bucket index delta.
     */
-  private def pkStagePrep(prepared: DataFrame): (DataFrame, Seq[String]) = {
-    val pkCols = schema.primaryKeys.map(col)
+  private def pkStagePrep(unchecked: DataFrame): (DataFrame, Seq[String]) = {
+    val prepared = unchecked.withColumns(schema.primaryKeys.map(k => k ->
+      when(col(k).isNull, raise_error(lit(s"primary key column $k must not be null")))
+        .otherwise(col(k))).toMap)
     // deletion-vector mode: the batch must hold ONE row per key (the L0
     // files are read raw, never merged), so keep the last version per key
     // before bucketing — one extra key-shuffle, the documented write cost
@@ -1139,8 +1146,7 @@ class GraftTable(val spark: SparkSession, val store: FileStore)
     * reference: BloomFilterFileIndex.java:48-95).
     */
   private def bloomCols(s: TableSchema = schema): Seq[Field] =
-    s.options.get("file-index.bloom.columns").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    s.options.get("file-index.bloom.columns").toSeq.flatMap(TableSchema.columnList)
       .filter(n => s.dataFields.exists(_.name == n))
       .map(s.fieldByName)
 
@@ -1316,6 +1322,34 @@ object GraftTable {
     ts.validateCreate()
     store.commitSchema(ts)
     new GraftTable(spark, store)
+  }
+
+  /** The snapshot the last `upsert` on this thread returned. */
+  private val lastUpsert = new ThreadLocal[Snapshot]
+
+  /** Runs `write`, a Spark plan whose commit is an `upsert` on this thread
+    * (the delta write of a row-level operation), and returns the snapshot
+    * that upsert returned.
+    */
+  private[table] def upsertOf(write: => Unit): Snapshot = {
+    lastUpsert.remove()
+    try {
+      write
+      Option(lastUpsert.get).getOrElse(
+        throw new IllegalStateException("the row-level plan committed no upsert"))
+    } finally lastUpsert.remove()
+  }
+
+  /** The table a first write to `path` creates: keyed and partitioned by
+    * the write's `primary-keys` and `partition-keys` options, with every
+    * other write option but `path` and `checkpointLocation` as a table
+    * option.
+    */
+  def createForWrite(spark: SparkSession, path: String, schema: StructType,
+      options: Map[String, String]): GraftTable = {
+    def keys(k: String) = options.get(k).toSeq.flatMap(TableSchema.columnList)
+    create(spark, path, schema, keys("partition-keys"), keys("primary-keys"),
+      options -- Seq("path", "primary-keys", "partition-keys", "checkpointLocation"))
   }
 
   def load(spark: SparkSession, path: String): GraftTable = {

@@ -5,7 +5,10 @@ import graft.core._
 import graft.spark.v2.GraftScan
 import graft.spark.v2.GraftSparkTable.{FilePathCol, RowIndexCol}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkShims
 
 /** Row-level DELETE / UPDATE / MERGE INTO.
   *
@@ -80,8 +83,10 @@ trait RowLevelOps { self: GraftTable =>
     require(!assignments.keySet.exists(schema.primaryKeys.contains),
       "cannot update primary key columns")
     if (isPrimaryKeyed) {
-      val updated = toDF.filter(cond).withColumns(assignments)
-      upsert(updated, kinds = Some(lit(KindUpdateAfter)))
+      // Spark rewrites the plan into a WriteDelta, which runs and commits
+      // here: the command executes eagerly
+      GraftTable.upsertOf(SparkShims.ofRows(spark, UpdateTable(relation,
+        RowLevelOps.assign(assignments), Some(SparkShims.realExpr(cond)))))
     } else {
       val guarded = assignments.map { case (k, v) =>
         k -> when(coalesce(cond, lit(false)), v).otherwise(col(k))
@@ -189,6 +194,12 @@ trait RowLevelOps { self: GraftTable =>
 }
 
 object RowLevelOps {
+  /** Assignments of whole target columns. */
+  private[table] def assign(set: Map[String, Column]): Seq[Assignment] =
+    set.toSeq.map { case (k, v) =>
+      Assignment(UnresolvedAttribute.quoted(k), SparkShims.realExpr(v))
+    }
+
   /** Fold dotted assignment paths into whole-root-column struct rebuilds:
     * `person.age -> v` becomes `person -> struct(person.name, v AS age)`,
     * recursing for deeper paths. A null root struct stays null (its
@@ -257,23 +268,24 @@ object RowLevelOps {
   }
 }
 
-/** MERGE INTO t USING s ON cond WHEN MATCHED ... WHEN NOT MATCHED ...
-  * (reference: MergeIntoPaimonTable.scala:41-149 — constructChangedRows:83
-  * joins source to target and tags each row with its action; we do the same
-  * with one full-outer join and a when-chain, then a single LSM write of the
-  * mixed +I/+U/-D rows.)
+/** MERGE INTO t USING s ON cond WHEN MATCHED ... WHEN NOT MATCHED ...,
+  * planned as Spark's `MergeIntoTable` over the table's relation (aliased
+  * `t`, the source `s`): Spark's rewrite joins the source with the target
+  * and runs one delta write of the changed rows, as SQL MERGE does
+  * (reference: MergeIntoPaimonTable.scala:41 writes the same changed rows).
   *
   * Action order matters: the first matching clause wins, like SQL MERGE.
   * Supported on primary-key tables.
   */
 class MergeIntoBuilder(table: GraftTable, source: DataFrame, on: Column) {
-  private case class Clause(kind: String, cond: Option[Column],
-      set: Map[String, Column])
-  private var clauses = Vector.empty[Clause]
+  private var matched = Vector.empty[MergeAction]
+  private var notMatched = Vector.empty[MergeAction]
+  private var notMatchedBySource = Vector.empty[MergeAction]
   private def tgtCols = table.schema.fields.map(_.name)
+  private def expr(c: Option[Column]) = c.map(SparkShims.realExpr)
 
   def whenMatchedUpdate(set: Map[String, Column], cond: Option[Column] = None): this.type = {
-    clauses :+= Clause("matched_update", cond, foldTargetNested(set)); this
+    matched :+= UpdateAction(expr(cond), RowLevelOps.assign(foldTargetNested(set))); this
   }
   // nested set keys (person.age) rebuild the TARGET side's struct
   private def foldTargetNested(set: Map[String, Column]): Map[String, Column] =
@@ -282,61 +294,36 @@ class MergeIntoBuilder(table: GraftTable, source: DataFrame, on: Column) {
   def whenMatchedUpdateAll(cond: Option[Column] = None): this.type =
     whenMatchedUpdate(tgtCols.map(c => c -> col(s"s.$c")).toMap, cond)
   def whenMatchedDelete(cond: Option[Column] = None): this.type = {
-    clauses :+= Clause("matched_delete", cond, Map.empty); this
+    matched :+= DeleteAction(expr(cond)); this
   }
+  /** INSERT: a target column not in `values` takes the like-named source
+    * column, or null when the source has none.
+    */
   def whenNotMatchedInsert(values: Map[String, Column], cond: Option[Column] = None): this.type = {
-    clauses :+= Clause("not_matched_insert", cond, values); this
+    val filled = tgtCols.filterNot(values.contains).map { c =>
+      c -> (if (source.columns.contains(c)) col(s"s.$c")
+            else lit(null).cast(table.schema.fieldByName(c).sparkType))
+    }
+    notMatched :+= InsertAction(expr(cond), RowLevelOps.assign(values ++ filled)); this
   }
   /** INSERT * — every target column from the like-named source column. */
   def whenNotMatchedInsertAll(cond: Option[Column] = None): this.type =
     whenNotMatchedInsert(tgtCols.map(c => c -> col(s"s.$c")).toMap, cond)
   def whenNotMatchedBySourceDelete(cond: Option[Column] = None): this.type = {
-    clauses :+= Clause("nms_delete", cond, Map.empty); this
+    notMatchedBySource :+= DeleteAction(expr(cond)); this
   }
   def whenNotMatchedBySourceUpdate(set: Map[String, Column], cond: Option[Column] = None): this.type = {
-    clauses :+= Clause("nms_update", cond, foldTargetNested(set)); this
+    notMatchedBySource :+= UpdateAction(expr(cond), RowLevelOps.assign(foldTargetNested(set))); this
   }
 
   def execute(): graft.core.Snapshot = {
     require(table.isPrimaryKeyed, "MERGE INTO requires a primary-key table")
-    require(clauses.nonEmpty, "MERGE INTO needs at least one WHEN clause")
-    // presence markers robust to null join keys and null data columns
-    val marked = source.withColumn("__s_mark", lit(1)).alias("s")
-      .join(table.toDF.withColumn("__t_mark", lit(1)).alias("t"), on, "full_outer")
-    val matchedC = col("__s_mark").isNotNull && col("__t_mark").isNotNull
-    val srcOnly = col("__s_mark").isNotNull && col("__t_mark").isNull
-    val tgtOnly = col("__s_mark").isNull && col("__t_mark").isNotNull
-
-    def clauseGuard(c: Clause): Column = {
-      val base = c.kind match {
-        case k if k.startsWith("matched") => matchedC
-        case k if k.startsWith("not_matched") => srcOnly
-        case _ => tgtOnly
-      }
-      c.cond.map(base && _).getOrElse(base)
-    }
-    def kindOf(c: Clause): Byte = c.kind match {
-      case "matched_update" | "nms_update" => KindUpdateAfter
-      case "matched_delete" | "nms_delete" => KindDelete
-      case _ => KindInsert
-    }
-    def defaultFor(c: Clause, name: String): Column =
-      if (c.kind.startsWith("not_matched")) {
-        if (source.columns.contains(name)) col(s"s.$name") else lit(null)
-      } else col(s"t.$name")
-
-    // first-match-wins when-chains, SQL MERGE clause semantics
-    val kindExpr = clauses.reverse.foldLeft[Column](lit(null)) { (els, c) =>
-      when(clauseGuard(c), lit(kindOf(c))).otherwise(els)
-    }
-    val outCols = tgtCols.map { name =>
-      clauses.reverse.foldLeft[Column](lit(null)) { (els, c) =>
-        when(clauseGuard(c), c.set.getOrElse(name, defaultFor(c, name))).otherwise(els)
-      }.as(name)
-    }
-    val changes = marked
-      .select(outCols :+ kindExpr.cast("byte").as("__kind"): _*)
-      .filter(col("__kind").isNotNull)
-    table.upsert(changes, kinds = Some(col("__kind")))
+    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
+      "MERGE INTO needs at least one WHEN clause")
+    GraftTable.upsertOf(SparkShims.ofRows(table.spark, MergeIntoTable(
+      SubqueryAlias("t", table.relation),
+      SubqueryAlias("s", SparkShims.analyzed(source)),
+      SparkShims.realExpr(on), matched, notMatched, notMatchedBySource,
+      withSchemaEvolution = false)))
   }
 }

@@ -94,6 +94,15 @@ object SparkShims {
       .eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Long]
   }
 
+  /** `df`'s rows under `schema`: the same columns and types, with a
+    * nullability the caller vouches for (no check, no copy).
+    */
+  def withSchema(df: org.apache.spark.sql.DataFrame,
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.internalCreateDataFrame(ds.queryExecution.toRdd, schema)
+  }
+
   /** Mark a batch DataFrame as streaming — required of DataFrames a DSv1
     * streaming Source returns from getBatch.
     */

@@ -1,10 +1,10 @@
 package graft
 
-/** DSv2-native row-level operations (SupportsRowLevelOperations +
-  * SupportsDelta) behind the 'rowlevel.v2' table option: Spark's own
-  * rewrites must plan UPDATE/MERGE (WriteDelta), the results must be
-  * byte-identical to the analysis-rule path, and the flag must be a
-  * per-table choice (unflagged tables keep the command path).
+/** Row-level operations on primary-key tables through Spark's delta
+  * protocol (SupportsRowLevelOperations + SupportsDelta): Spark's own
+  * rewrites plan UPDATE, MERGE and subquery DELETE as a WriteDelta on every
+  * primary-key table, for SQL and for the Scala API; the `rowlevel.v2`
+  * table property some tables still carry changes nothing.
   */
 class DeltaProtocolSpec extends SparkSpec {
 
@@ -47,45 +47,70 @@ class DeltaProtocolSpec extends SparkSpec {
     spark.sql(s"SELECT k, status, price FROM graft_dp.db.$name ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
 
-  test("delta protocol results match the analysis-rule path exactly") {
-    val flagged = mkTable(flag = true)
-    val plain = mkTable(flag = false)
-    dml(flagged); dml(plain)
-    val (a, b) = (snap(flagged), snap(plain))
-    assert(a == b, s"delta=$a command=$b")
-    // sanity on the actual content: 1 doubled (O), 2 overwritten by MERGE,
-    // 9 inserted then deleted with 4x-priced rows (>=80): 9@90 deleted
-    assert(a == Seq((1L, "O", 20.0), (2L, "X", 0.0), (3L, "O", 60.0), (4L, "F", 40.0)), a.toString)
+  test("UPDATE, MERGE and DELETE through the delta rewrite give the expected rows") {
+    val name = mkTable(flag = false)
+    dml(name)
+    // 1 doubled (O), 2 overwritten by MERGE, 9 inserted then deleted with
+    // 4x-priced rows (>=80): 9@90 deleted
+    assert(snap(name) == Seq((1L, "O", 20.0), (2L, "X", 0.0), (3L, "O", 60.0), (4L, "F", 40.0)),
+      snap(name).toString)
   }
 
-  test("subquery DELETE: WriteDelta on flagged tables, a clear error on plain ones") {
-    // not expressible as pushed filters — the filter-delete path never
-    // supported it; the delta protocol plans it as a WriteDelta join,
-    // which is a real capability the flag ADDS
-    val flagged = mkTable(flag = true)
-    spark.sql(s"DELETE FROM graft_dp.db.$flagged WHERE k IN " +
-      s"(SELECT k FROM graft_dp.db.$flagged WHERE price >= 30.0)")
-    assert(snap(flagged).map(_._1) == Seq(1L, 2L), snap(flagged).toString)
-
-    val plain = mkTable(flag = false)
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql(s"DELETE FROM graft_dp.db.$plain WHERE k IN " +
-        s"(SELECT k FROM graft_dp.db.$plain WHERE price >= 30.0)")
+  test("subquery DELETE plans WriteDelta on every PK table") {
+    // not expressible as pushed filters; the delta rewrite plans it as a
+    // WriteDelta join, with or without the (inert) rowlevel.v2 property
+    for (flag <- Seq(true, false)) {
+      val name = mkTable(flag)
+      spark.sql(s"DELETE FROM graft_dp.db.$name WHERE k IN " +
+        s"(SELECT k FROM graft_dp.db.$name WHERE price >= 30.0)")
+      assert(snap(name).map(_._1) == Seq(1L, 2L), snap(name).toString)
     }
-    assert(e.getMessage.toLowerCase.contains("subquery"), e.getMessage)
   }
 
-  test("flagged table plans UPDATE/MERGE through WriteDelta, unflagged through commands") {
-    val flagged = mkTable(flag = true)
-    val plain = mkTable(flag = false)
+  test("SQL and Scala UPDATE/MERGE plan WriteDelta; append UPDATE plans a command") {
     def planOf(sql: String): String =
       spark.sessionState.executePlan(spark.sessionState.sqlParser.parsePlan(sql))
         .analyzed.toString
-    val up = s"UPDATE graft_dp.db.%s SET price = 0.0 WHERE status = 'O'"
-    val pf = planOf(up.format(flagged))
-    assert(pf.contains("WriteDelta"), s"expected WriteDelta in:\n$pf")
-    val pp = planOf(up.format(plain))
-    assert(pp.contains("GraftUpdateCommand"), s"expected GraftUpdateCommand in:\n$pp")
+    for (flag <- Seq(true, false)) {
+      val name = mkTable(flag)
+      val up = planOf(s"UPDATE graft_dp.db.$name SET price = 0.0 WHERE status = 'O'")
+      assert(up.contains("WriteDelta"), s"expected WriteDelta in:\n$up")
+      spark.sql("SELECT CAST(2 AS BIGINT) AS k, 'X' AS status, 1.0 AS price")
+        .createOrReplaceTempView(s"${name}_plan_src")
+      val mg = planOf(s"""MERGE INTO graft_dp.db.$name t USING ${name}_plan_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      assert(mg.contains("WriteDelta"), s"expected WriteDelta in:\n$mg")
+    }
+    val append = freshName()
+    spark.sql(s"CREATE TABLE graft_dp.db.$append (k BIGINT, price DOUBLE) USING graft")
+    val ap = planOf(s"UPDATE graft_dp.db.$append SET price = 0.0 WHERE k = 1")
+    assert(ap.contains("GraftUpdateCommand"), s"expected GraftUpdateCommand in:\n$ap")
+
+    // the Scala API runs the same plans: catch their analyzed plans as they run
+    val analyzed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = analyzed.add(qe.analyzed.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val t = graft.table.GraftTable.load(spark, s"$wh/db/${mkTable(flag = false)}")
+      import org.apache.spark.sql.functions.{col, lit}
+      t.update(col("status") === "O", Map("price" -> lit(0.0)))
+      t.mergeInto(spark.sql("SELECT CAST(2 AS BIGINT) AS k, 'X' AS status, 1.0 AS price"),
+          col("t.k") === col("s.k"))
+        .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(30.seconds)) {
+        val plans = analyzed.toArray.map(_.toString)
+        assert(plans.count(p => p.contains("WriteDelta")) >= 2, plans.mkString("\n---\n"))
+      }
+      assert(snap(t.location.split('/').last).map(r => (r._1, r._3)) ==
+        Seq((1L, 0.0), (2L, 1.0), (3L, 0.0), (4L, 40.0)))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("delta deletes succeed on tables with NOT NULL non-pk columns") {

@@ -24,6 +24,15 @@ class ReaderReuseSpec extends SparkSpec {
     (out, (broadcastIds -- before).size)
   }
 
+  /** Broadcast Hadoop confs among the driver's broadcasts (a job's task
+    * binary is a broadcast too).
+    */
+  private def confBroadcastIds: Set[Long] = broadcastIds.filter { id =>
+    org.apache.spark.SparkEnv.get.blockManager
+      .getLocalValues(org.apache.spark.storage.BroadcastBlockId(id))
+      .exists(_.data.toList.exists(_.isInstanceOf[org.apache.spark.util.SerializableConfiguration]))
+  }
+
   private def pkTable(opts: Map[String, String]): GraftTable =
     GraftTable.create(spark, tmpTable(), Seq((1L, "a", 1L)).toDF("k", "v", "n").schema,
       primaryKeys = Seq("k"), options = opts)
@@ -76,6 +85,27 @@ class ReaderReuseSpec extends SparkSpec {
     assert(t.store.liveFiles(t.store.latestSnapshot.get).size == 1)
     assert(rows(t.toDF) == want)
     assert(t.lookup(Map("k" -> 36L)).map(_.getString(1)) == Some("w36"))
+  }
+
+  test("a repeated catalog query broadcasts no conf") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    spark.conf.set("spark.sql.catalog.graft_rr", classOf[graft.spark.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_rr.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_rr.db")
+    spark.sql("CREATE TABLE graft_rr.db.t (k BIGINT, v STRING) USING graft " +
+      "TBLPROPERTIES ('primary-key' = 'k', 'bucket' = '2')")
+    spark.sql("INSERT INTO graft_rr.db.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    spark.sql("INSERT INTO graft_rr.db.t VALUES (2, 'x')")
+    def query(): Seq[(Long, String)] =
+      spark.sql("SELECT k, v FROM graft_rr.db.t WHERE k >= 2 ORDER BY k")
+        .as[(Long, String)].collect().toSeq
+    val before = confBroadcastIds
+    assert(query() == Seq((2L, "x"), (3L, "c")))
+    assert((confBroadcastIds -- before).nonEmpty, "the first query broadcasts its conf")
+    val warm = confBroadcastIds
+    assert(query() == Seq((2L, "x"), (3L, "c")))
+    val added = confBroadcastIds -- warm
+    assert(added.isEmpty, s"a repeated catalog query broadcast ${added.size} confs")
   }
 
   test("a session conf set between two reads of one handle takes effect") {

@@ -74,6 +74,30 @@ class RowLevelSpec extends SparkSpec {
     assert(result.count() == origKeys + newKeys)
   }
 
+  test("upsert refuses a null primary key; merge and update refuse key changes") {
+    val t = GraftTable.create(spark, tmpTable(), spark.sql(
+      "SELECT CAST(1 AS BIGINT) AS k, CAST(1 AS BIGINT) AS k2, 'a' AS v").schema,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "2"))
+    t.upsert(spark.sql("SELECT CAST(id AS BIGINT) AS k, CAST(id + 10 AS BIGINT) AS k2, " +
+      "'a' AS v FROM range(1, 3)"))
+    def rows = t.toDF.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def messages(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString("\n")
+    val before = (rows, t.store.latestSnapshotId)
+    val nul = intercept[Exception](t.upsert(spark.sql(
+      "SELECT CAST(NULL AS BIGINT) AS k, CAST(3 AS BIGINT) AS k2, 'c' AS v")))
+    assert(messages(nul).contains("primary key column k must not be null"), messages(nul))
+    val mg = intercept[Exception](
+      t.mergeInto(spark.sql("SELECT CAST(1 AS BIGINT) AS k, CAST(101 AS BIGINT) AS k2"),
+        col("t.k") === col("s.k"))
+        .whenMatchedUpdate(Map("k" -> col("s.k2")))
+        .execute())
+    assert(messages(mg).contains("cannot update primary key columns"), messages(mg))
+    val up = intercept[IllegalArgumentException](t.update(lit(true), Map("k" -> col("k2"))))
+    assert(up.getMessage.contains("cannot update primary key columns"), up.getMessage)
+    assert((rows, t.store.latestSnapshotId) == before)
+  }
+
   test("merge into: not-matched-by-source delete") {
     val orders = sf("orders").limit(200)
     val t = GraftTable.create(spark, tmpTable(), orders.schema,

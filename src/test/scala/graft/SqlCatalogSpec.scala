@@ -219,6 +219,39 @@ class SqlCatalogSpec extends SparkSpec {
     assert(app == Seq((1L, 1.0), (2L, 0.0)))
   }
 
+  test("key-changing UPDATE/MERGE fail and change nothing; a null key is refused") {
+    spark.sql(
+      """CREATE TABLE graft.db.pk_guard (k BIGINT, k2 BIGINT, v STRING)
+        |USING graft TBLPROPERTIES ('primary-key' = 'k', 'bucket' = '2')""".stripMargin)
+    spark.sql("INSERT INTO graft.db.pk_guard VALUES (1, 11, 'a'), (2, 12, 'b')")
+    def rows = spark.sql("SELECT k, k2, v FROM graft.db.pk_guard ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    def messages(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString("\n")
+    val before = rows
+    val up = intercept[Exception](spark.sql("UPDATE graft.db.pk_guard SET k = k + 100"))
+    assert(messages(up).contains("cannot update primary key columns"), messages(up))
+    assert(rows == before)
+    spark.sql("SELECT CAST(1 AS BIGINT) AS k, CAST(101 AS BIGINT) AS k2")
+      .createOrReplaceTempView("pk_guard_src")
+    val mg = intercept[Exception](spark.sql(
+      """MERGE INTO graft.db.pk_guard t USING pk_guard_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET t.k = s.k2""".stripMargin))
+    assert(messages(mg).contains("cannot update primary key columns"), messages(mg))
+    assert(rows == before)
+    // UPDATE SET * under ON t.k = s.k assigns the key its own value
+    spark.sql("SELECT CAST(1 AS BIGINT) AS k, CAST(21 AS BIGINT) AS k2, 'z' AS v")
+      .createOrReplaceTempView("pk_guard_star")
+    spark.sql(
+      """MERGE INTO graft.db.pk_guard t USING pk_guard_star s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
+    assert(rows == Seq((1L, 21L, "z"), (2L, 12L, "b")))
+    val ins = intercept[Exception](spark.sql(
+      "INSERT INTO graft.db.pk_guard VALUES (CAST(NULL AS BIGINT), 13, 'c')"))
+    assert(messages(ins).toLowerCase.contains("null"), messages(ins))
+    assert(rows == Seq((1L, 21L, "z"), (2L, 12L, "b")))
+  }
+
   test("MERGE INTO ... WITH SCHEMA EVOLUTION adds source columns mid-merge") {
     spark.sql(
       """CREATE TABLE graft.db.mse (k BIGINT, v STRING)
